@@ -44,11 +44,7 @@ def _modules():
         "scale",
         "stats",
     ):
-        try:
-            mod = __import__(f"catme_etl_j_spark.operators.{name}", fromlist=[name])
-            mods.append(mod)
-        except ImportError:
-            pass
+        mods.append(__import__(f"catme_etl_j_spark.operators.{name}", fromlist=[name]))
     return mods
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import logging
 import os
 import tempfile
 from collections.abc import Iterator
@@ -47,23 +48,15 @@ from catme_etl_j_spark.converter.errors import ConversionError
 from catme_etl_j_spark.converter.xlsx import (
     DEFAULT_MAX_ENTRY_SIZE,
     DEFAULT_MIN_INFLATE_RATIO,
-    SLICE_TARGET_BYTES,
     XlsxWorkbook,
     combine_slice_scans,
-    max_col_from_xml_file,
-    parse_decl_head,
     scan_slice_range,
+    slice_scan_tasks,
 )
 
 _BATCH_ROWS = 50_000  # rows per emitted Arrow batch; bounds task memory
 
-# Intra-sheet parallel parse: a single workbook whose sheet XML
-# decompresses past this floor gets its row range byte-sliced so N
-# tasks parse it concurrently — the giant-single-sheet straggler is
-# otherwise one unsplittable serial stream. The floor keeps small
-# files on the serial path (slice planning costs one spool pass of the
-# sheet). ONE constant with the slice sizing (ADVICE r11).
-_SLICE_MIN_BYTES = SLICE_TARGET_BYTES
+_log = logging.getLogger(__name__)
 
 # Spool files written by the slice planner (raw decompressed sheet
 # XML) must outlive the returned LAZY frame — tasks may run any time
@@ -203,6 +196,48 @@ def infer_columns(
     return _dedupe(names)
 
 
+def _plan_slices(
+    spark: SparkSession,
+    path: str,
+    spool: str,
+    n_par: int,
+    sheet_name: str | None,
+    sheet_index: int | None,
+    header_row: int,
+    **wb_kw,
+) -> tuple[list[tuple[int, int]] | None, int | None]:
+    """Spool the sheet and run the strict slice scan as ONE Spark job:
+    (slice plan, strict width or None), or (None, None) on any refusal —
+    a failed scan job (spool gone, worker lost) included. The driver
+    keeps only the inherently serial step, inflating the one DEFLATE
+    stream to the spool (~1 s for 492 MB); the scan tasks read byte
+    ranges of it (xlsx.slice_scan_tasks / scan_slice_range) and also
+    measure the dimension-less width in the same pass."""
+    with XlsxWorkbook(path, **wb_kw) as wb:
+        meta = wb.spool_sheet(sheet_name, sheet_index, spool_path=spool)
+        want_width = (
+            meta is not None
+            and header_row == 0
+            and wb.sheet_dimension(sheet_name, sheet_index) is None
+        )
+    tasks = slice_scan_tasks(meta, n_par) if meta is not None else None
+    if tasks is None:
+        return None, None
+    ranges, targets, decl_q = tasks
+    try:
+        res = (
+            spark.sparkContext.parallelize(ranges, len(ranges))
+            .map(lambda r: scan_slice_range(spool, r[0], r[1], targets, decl_q, want_width))
+            .collect()
+        )
+    except Exception:
+        _log.warning("slice scan job failed; parsing %s serially", path, exc_info=True)
+        return None, None
+    return combine_slice_scans(
+        res, first_row_off=meta["first_row_off"], targets=targets, want_width=want_width
+    )
+
+
 def read_xlsx(
     spark: SparkSession,
     path: str,
@@ -270,86 +305,34 @@ def read_xlsx(
     # Intra-sheet parallelism (guide §2 — one unsplittable stream is a
     # straggler): a single local workbook with one target sheet big
     # enough to matter is byte-sliced at STRICTLY-VERIFIED row
-    # boundaries and parsed by N concurrent tasks; the plan falls back
-    # to the serial path (byte-identical semantics) whenever the scan
-    # cannot prove the slicing exact. r12 (VERDICT r11 #3): the driver
-    # keeps only the inherently serial step — inflating the one
-    # DEFLATE stream to a spool (~1 s for 492 MB) — and the strict
-    # scan itself fans out as ONE Spark job over byte ranges of the
-    # spool (xlsx.scan_slice_range / combine_slice_scans), which also
-    # computes the dimension-less width in the same pass; the r11
-    # shape held the driver ~7 s (serial boundary scan + a second
-    # serial width scan) while executors idled. Slice count adapts to
-    # the session's parallelism, never a local constant.
+    # boundaries and parsed by N concurrent tasks (_plan_slices). Any
+    # refusal removes the spool and takes the serial path, which has
+    # byte-identical semantics.
     slice_plan = None
-    spool: str | None = None
     n_par = int(spark.sparkContext.defaultParallelism)
     if local is not None and not multi and single_file and n_par > 1:
-        with XlsxWorkbook(
-            local,
-            min_inflate_ratio=min_inflate_ratio,
-            max_entry_size=max_entry_size,
-        ) as _wb:
-            entry_size = _wb.sheet_entry_size(sheet_name, sheet_index)
-            meta = None
-            if entry_size is not None and entry_size >= _SLICE_MIN_BYTES:
-                fd, spool = tempfile.mkstemp(
-                    prefix="catme_sheet_spool_", suffix=".xml"
-                )
-                os.close(fd)
-                meta = _wb.spool_sheet(sheet_name, sheet_index, spool_path=spool)
-            no_dim = (
-                _wb.sheet_dimension(sheet_name, sheet_index) is None
-                if meta is not None
-                else False
+        fd, spool = tempfile.mkstemp(prefix="catme_sheet_spool_", suffix=".xml")
+        os.close(fd)
+        try:
+            slice_plan, slice_width = _plan_slices(
+                spark,
+                local,
+                spool,
+                n_par,
+                sheet_name,
+                sheet_index,
+                header_row,
+                min_inflate_ratio=min_inflate_ratio,
+                max_entry_size=max_entry_size,
             )
-        slice_width: int | None = None
-        if meta is not None:
-            ok, decl_q = parse_decl_head(meta["head"])
-            if ok:
-                fsize, frf = meta["file_size"], meta["first_row_off"]
-                want_width = no_dim and header_row == 0
-                n_sl = min(n_par, max(2, fsize // SLICE_TARGET_BYTES))
-                span = fsize - frf
-                targets = [frf + (k * span) // n_sl for k in range(1, n_sl)]
-                ranges = [
-                    ((j * fsize) // n_sl, ((j + 1) * fsize) // n_sl)
-                    for j in range(n_sl)
-                ]
-                sp_path = spool
-                res = (
-                    spark.sparkContext.parallelize(ranges, len(ranges))
-                    .map(
-                        lambda r: scan_slice_range(
-                            sp_path, r[0], r[1], targets, decl_q, want_width
-                        )
-                    )
-                    .collect()
-                )
-                slice_plan, slice_width = combine_slice_scans(
-                    res,
-                    first_row_off=frf,
-                    targets=targets,
-                    want_width=want_width,
-                )
-        if slice_plan is None:
-            if spool is not None:
+        finally:
+            if slice_plan is None:
                 with contextlib.suppress(OSError):
                     os.remove(spool)
-            spool = None
-        else:
+        if slice_plan is not None:
             _register_spool(spool)
-            if no_dim and header_row == 0:
-                # strict width from the parallel scan; if it refused
-                # (tag-shape strictness), the serial spool scan is the
-                # fallback before infer_columns' full parse
-                w = (
-                    slice_width
-                    if slice_width is not None
-                    else max_col_from_xml_file(spool)
-                )
-                if w is not None:
-                    infer_kw["max_col_override"] = w
+            if slice_width is not None:
+                infer_kw["max_col_override"] = slice_width
     if local is not None:
         columns = infer_columns(local, **infer_kw)
     else:
@@ -433,18 +416,18 @@ def read_xlsx(
         # (sinks._write_ndjson_partition_ordered).
         sl_df = spark.createDataFrame(
             spark.sparkContext.parallelize(
-                [(first_path, s, e, r) for (s, e, r, _frn) in slice_plan],
+                [(first_path, s, e) for (s, e) in slice_plan],
                 len(slice_plan),
             ),
-            "path string, s_start long, s_end long, s_init long",
+            "path string, s_start long, s_end long",
         )
 
         def parse_slice(
             batches: Iterator[pa.RecordBatch],
         ) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                for p_sc, s0_sc, s1_sc, ri_sc in zip(
-                    batch.column(0), batch.column(1), batch.column(2), batch.column(3)
+                for p_sc, s0_sc, s1_sc in zip(
+                    batch.column(0), batch.column(1), batch.column(2)
                 ):
                     fpath = p_sc.as_py()
                     wb = XlsxWorkbook(
@@ -460,7 +443,6 @@ def read_xlsx(
                             sheet_index,
                             start=s0_sc.as_py(),
                             end=s1_sc.as_py(),
-                            init_row_idx=ri_sc.as_py(),
                             continue_on_error=continue_on_error,
                             spool_path=spool_for_tasks,
                         ):

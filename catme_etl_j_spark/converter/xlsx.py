@@ -132,18 +132,30 @@ _ROW_SUPER_NEEDLE = b"<row"
 # match — the plan refuses and the serial path handles them.
 _ROW_RFIRST_NEEDLES = (b'<row r="', b"<row r='")
 _XML_DECL_ENC_RE = re.compile(rb"encoding[ \t\r\n]*=[ \t\r\n]*[\"']([^\"']+)[\"']")
+# Strict width scan: byte-level, since cell tags and refs are pure ASCII
+# markup (multi-byte UTF-8 sequences never contain ASCII bytes). Every
+# cell tag must carry an uppercase r ref, else the width is unprovable.
+_CELL_TAG_RE = re.compile(rb"<c[\s/>]")
+_CELL_TAG_REF_RE = re.compile(rb'<c\b[^>]*?\br="([A-Z]+)[0-9]+"')
 
 # ~12 MiB of decompressed XML per slice task (~1 s of expat parse —
 # well above scheduling overhead, guide §2.2). ONE constant (ADVICE
-# r11): the slice floor, the adaptive slice-count divisor, and the
-# reader's trigger threshold all reference it.
+# r11): the slice floor (spool_sheet) and the slice-count divisor
+# (slice_scan_tasks) both reference it.
 SLICE_TARGET_BYTES = 12 << 20
 
-_ROW_TAG = f"{_NS_MAIN}row"
-_C_TAG = f"{_NS_MAIN}c"
-_V_TAG = f"{_NS_MAIN}v"
-_IS_TAG = f"{_NS_MAIN}is"
-_T_TAG = f"{_NS_MAIN}t"
+
+def _next_rfirst(buf: bytes, pos: int) -> tuple[int, int]:
+    """(offset, needle length) of the first strict ``<row r=`` start at
+    or after ``pos`` in ``buf``, or (-1, 0)."""
+    best, blen = -1, 0
+    for nd in _ROW_RFIRST_NEEDLES:
+        p = buf.find(nd, pos)
+        if p >= 0 and (best < 0 or p < best):
+            best, blen = p, len(nd)
+    return best, blen
+
+
 _DIM_TAG = f"{_NS_MAIN}dimension"
 _SHEETDATA_TAG = f"{_NS_MAIN}sheetData"
 
@@ -469,36 +481,43 @@ class XlsxWorkbook:
         (True) or raise ConversionError (False).
         """
         path = self.resolve_sheet(sheet_name, sheet_index)
-        shared = self._shared_strings()
+        f = self._open_part(path)
+        yield from self._sax_rows(
+            path, f, iter(lambda: f.read(1 << 16), b""), continue_on_error
+        )
+
+    def _open_part(self, path: str):
         try:
             with _typed(self._name, f"sheet part {path}"):
-                f = self._zf.open(path)
+                return self._zf.open(path)
         except KeyError as e:
             raise ConversionError(f"sheet part {path} missing in archive") from e
-        # expat SAX (~2x faster than iterparse on wide sheets); push
-        # events accumulate into `out`, drained after each 64 KiB chunk,
-        # so this stays a constant-memory generator.
-        handler = _SheetHandler(shared, continue_on_error, self._style_renderers())
-        # No expat namespace processing (it costs ~40%); sheet elements
-        # are matched by prefix-agnostic local name instead.
-        parser = _expat.ParserCreate()
-        parser.buffer_text = True
-        parser.StartElementHandler = handler.start
-        parser.EndElementHandler = handler.end
-        parser.CharacterDataHandler = handler.chars
+
+    def _sax_rows(
+        self, path: str, f, chunks: Iterator[bytes], continue_on_error: bool
+    ) -> Iterator[tuple[int, dict[int, str]]]:
+        """The one parse loop: feed ``chunks`` (read from the open stream
+        ``f``, closed on exit) through expat and yield the rows. expat
+        SAX is ~2x faster than iterparse on wide sheets; push events
+        accumulate into ``handler.out``, drained after each chunk, so
+        this stays a constant-memory generator."""
         with _typed(self._name, f"sheet part {path}"), f:
-            while True:
-                chunk = f.read(1 << 16)
-                if not chunk:
-                    break
-                try:
-                    parser.Parse(chunk, False)
-                except _expat.ExpatError as e:
-                    raise ConversionError(f"malformed sheet XML in {path}: {e}") from e
-                if handler.out:
-                    yield from handler.out
-                    handler.out.clear()
+            handler = _SheetHandler(
+                self._shared_strings(), continue_on_error, self._style_renderers()
+            )
+            # No expat namespace processing (it costs ~40%); sheet
+            # elements are matched by prefix-agnostic local name instead.
+            parser = _expat.ParserCreate()
+            parser.buffer_text = True
+            parser.StartElementHandler = handler.start
+            parser.EndElementHandler = handler.end
+            parser.CharacterDataHandler = handler.chars
             try:
+                for chunk in chunks:
+                    parser.Parse(chunk, False)
+                    if handler.out:
+                        yield from handler.out
+                        handler.out.clear()
                 parser.Parse(b"", True)
             except _expat.ExpatError as e:
                 raise ConversionError(f"malformed sheet XML in {path}: {e}") from e
@@ -553,223 +572,37 @@ class XlsxWorkbook:
             f = self._zf.open(path)
         except KeyError:
             return None
-        try:
-            with _typed(self._name, f"sheet part {path}"), f:
-                return _max_col_scan(f)
-        except ConversionError:
-            return None
-
-    def plan_row_slices(
-        self,
-        sheet_name: str | None = None,
-        sheet_index: int | None = None,
-        *,
-        n_slices: int,
-        min_bytes: int = SLICE_TARGET_BYTES,
-        spool_path: str | None = None,
-    ) -> list[tuple[int, int, int, int]] | None:
-        """Plan byte slices of ONE sheet's decompressed XML so that N
-        tasks can parse it in parallel (the reference's serial-sheet
-        physics lifted for the giant-single-sheet straggler). Returns
-        ``[(start, end, init_row_idx, first_row_idx)]`` — each slice
-        starts at a row
-        element's ``<`` and ends at the next slice's start (last: at
-        ``</sheetData``), with the running row index the serial parse
-        would hold just before the slice's first row — or ``None``
-        whenever the scan cannot PROVE slicing reproduces the serial
-        parse bit-for-bit:
-
-        * sheet smaller than ``min_bytes`` decompressed (not worth it);
-        * any ``<!``/``<?`` beyond the XML declaration (CDATA, comment,
-          DTD/entity, PI — any of which could hide or fabricate row
-          markup from this byte-level scan);
-        * a declared encoding other than UTF-8/US-ASCII (byte offsets
-          would not be ASCII-safe);
-        * any row tag NOT carrying a plain-integer ``r="N"`` as its
-          first attribute (loose/r-first count mismatch — slicing would
-          need the sequential-row simulation the fast scan skips), rows
-          outside ``sheetData``, a missing ``</sheetData>``, or a text
-          node longer than the carry cap.
-
-        Single streaming pass, constant memory (1 MiB chunks + a
-        bounded carry); all counting and boundary location runs at
-        memchr speed (bytes.count / bytes.find), so the scan costs
-        little more than the decompress itself.
-
-        ``spool_path``: when given, the decompressed sheet XML is also
-        written there (same single pass) so downstream consumers —
-        slice tasks via :meth:`iter_rows_slice`'s ``spool_path``, the
-        width scan via :func:`max_col_from_xml_file` — can ``seek``
-        raw bytes instead of re-inflating the entry. On refusal the
-        partial spool is removed.
-        """
-        sp = open(spool_path, "wb") if spool_path else None
-        try:
-            out = self._plan_scan(sheet_name, sheet_index, n_slices, min_bytes, sp)
-        finally:
-            if sp is not None:
-                sp.close()
-        if out is None and spool_path is not None:
-            with contextlib.suppress(OSError):
-                os.remove(spool_path)
-        return out
-
-    def _plan_scan(
-        self,
-        sheet_name: str | None,
-        sheet_index: int | None,
-        n_slices: int,
-        min_bytes: int,
-        sp,
-    ) -> list[tuple[int, int, int, int]] | None:
-        path = self.resolve_sheet(sheet_name, sheet_index)
-        try:
-            info = self._zf.getinfo(path)
-        except KeyError:
-            return None
-        if info.file_size < min_bytes or n_slices <= 1:
-            return None
-        # scale-adaptive slice count: ~12 MiB of decompressed XML per
-        # task (~1 s of expat parse — well above scheduling overhead,
-        # guide §2.2), capped by the session's parallelism passed in
-        # by the caller
-        n_slices = min(n_slices, max(2, int(info.file_size // SLICE_TARGET_BYTES)))
-        try:
-            f = self._zf.open(path)
-        except KeyError:
-            return None
-        def find_row_start(b: bytes, from_pos: int) -> tuple[int, int]:
-            """(position, declared row number) of the next strict row
-            start at/after from_pos, or (-1, -1). The digits directly
-            follow the needle and are always complete within the cut
-            buffer (they precede the tag's '>', hence the next '<')."""
-            best, blen = -1, 0
-            for n in _ROW_RFIRST_NEEDLES:
-                p = b.find(n, from_pos)
-                if p >= 0 and (best < 0 or p < best):
-                    best, blen = p, len(n)
-            if best < 0:
-                return -1, -1
-            q = best + blen
-            e = q
-            while e < len(b) and b[e : e + 1].isdigit():
-                e += 1
-            if e == q:
-                return -1, -1  # r="" / non-digit: refuse via caller
-            return best, int(b[q:e])
-
-        n_loose = 0
-        n_rfirst = 0
-        sd_close: int | None = None
-        row_after_close = False
-        first_row_off: int | None = None
-        # byte-even boundary targets (computed once the first row is
-        # seen, from the known decompressed size); each becomes the
-        # next '<row r=' at or after it
-        targets: list[int] | None = None
-        ti = 0
-        bounds: list[tuple[int, int]] = []  # (offset, declared row number)
-        base = 0  # absolute offset of buf[0]
+        n_open = n_ref = 0
+        max_col = -1
         carry = b""
-        first = True
         try:
             with _typed(self._name, f"sheet part {path}"), f:
                 while True:
                     raw = f.read(1 << 20)
-                    if sp is not None and raw:
-                        sp.write(raw)
                     buf = carry + raw
-                    if first:
-                        first = False
-                        if buf[:2] in (b"\xff\xfe", b"\xfe\xff"):
-                            return None  # UTF-16 BOM
-                        decl_end = 0
-                        if buf.lstrip(b"\xef\xbb\xbf \t\r\n").startswith(b"<?xml"):
-                            decl_end = buf.find(b"?>")
-                            if decl_end == -1:
-                                return None
-                            m = _XML_DECL_ENC_RE.search(buf[:decl_end])
-                            if m and m.group(1).lower() not in (b"utf-8", b"us-ascii"):
-                                return None
-                        # '<!' anywhere, or '<?' beyond the declaration,
-                        # defeats the byte-level strictness
-                        if b"<!" in buf or b"<?" in buf[decl_end + 2 if decl_end else 0:]:
-                            return None
-                    elif b"<!" in buf or b"<?" in buf:
+                    if b"<![" in buf or b"<!--" in buf:
                         return None
                     if raw:
+                        # keep the (possibly split) trailing tag for the
+                        # next chunk; a tag is < ~1 KB, so the carry is
+                        # bounded — a longer one means we are inside
+                        # text, where no '<' can legally occur unescaped
                         cut = buf.rfind(b"<")
-                        if cut == -1:
+                        if cut == -1 or len(buf) - cut > 4096:
                             carry = b""
-                            base += len(buf)
-                            continue
-                        if len(buf) - cut > (1 << 20):
-                            return None  # carry cap: give up, stay serial
-                        carry, buf = buf[cut:], buf[:cut]
-                    if sd_close is None:
-                        p = buf.find(b"</sheetData")
-                        if p >= 0:
-                            sd_close = base + p
-                    # C-speed needle counts; rows past </sheetData>
-                    # (same chunk or later) make the plan refuse
-                    split_at = len(buf)
-                    if sd_close is not None and sd_close >= base:
-                        split_at = sd_close - base
-                    head = buf[:split_at] if split_at < len(buf) else buf
-                    chunk_loose = head.count(_ROW_SUPER_NEEDLE)
-                    n_rfirst += sum(head.count(n) for n in _ROW_RFIRST_NEEDLES)
-                    n_loose += chunk_loose
-                    if split_at < len(buf) and buf.count(_ROW_SUPER_NEEDLE, split_at):
-                        row_after_close = True
-                    if sd_close is not None and base > sd_close and chunk_loose:
-                        row_after_close = True
-                    if first_row_off is None and chunk_loose:
-                        p, _rn = find_row_start(head, 0)
-                        if p < 0:
-                            return None  # a row start without first-attr r
-                        first_row_off = base + p
-                        span = info.file_size - first_row_off
-                        targets = [
-                            first_row_off + (k * span) // n_slices
-                            for k in range(1, n_slices)
-                        ]
-                    if targets is not None:
-                        while ti < len(targets) and targets[ti] < base + split_at:
-                            p, rn = find_row_start(head, max(targets[ti] - base, 0))
-                            if p < 0:
-                                break  # retry in the next chunk
-                            bounds.append((base + p, rn))
-                            ti += 1
-                    if raw:
-                        base += len(buf)
-                    else:
+                        else:
+                            carry, buf = buf[cut:], buf[:cut]
+                    o, r, m = _cell_width(buf, len(buf))
+                    n_open, n_ref, max_col = n_open + o, n_ref + r, max(max_col, m)
+                    if not raw:
                         break
         except ConversionError:
             return None
-        if (
-            n_loose != n_rfirst
-            or n_loose == 0
-            or sd_close is None
-            or row_after_close
-            or first_row_off is None
-            or first_row_off > sd_close
-        ):
-            return None
-        starts: list[tuple[int, int]] = [(first_row_off, -1)]
-        for b_off, rn in bounds:
-            if b_off > starts[-1][0] and b_off < sd_close:
-                starts.append((b_off, rn))
-        out: list[tuple[int, int, int, int]] = []
-        for i, (off, rn) in enumerate(starts):
-            end = starts[i + 1][0] if i + 1 < len(starts) else sd_close
-            # init_row_idx (3rd field) is never consulted in this regime
-            # (every row declares r, which wins in the handler); -1
-            # mirrors the serial parser's initial state. The 4th field
-            # is the slice's first DECLARED 0-based row index (-1 for
-            # slice 0) — pure metadata for downstream bucketing, never
-            # part of parse semantics.
-            out.append((off, end, -1, rn - 1 if rn > 0 else -1))
-        return out if len(out) > 1 else None
+        # strictness: every <c …> must have carried an uppercase r ref
+        # (else sequential cell positions apply and only the full scan
+        # knows the width); zero cells also degrades, so the full scan
+        # raises its usual no-rows error
+        return max_col if n_open == n_ref and max_col >= 0 else None
 
     def iter_rows_slice(
         self,
@@ -778,43 +611,32 @@ class XlsxWorkbook:
         *,
         start: int,
         end: int,
-        init_row_idx: int,
         continue_on_error: bool = False,
         spool_path: str | None = None,
     ) -> Iterator[tuple[int, dict[int, str]]]:
-        """:meth:`iter_rows` over one :meth:`plan_row_slices` byte slice
-        of the decompressed sheet XML. The slice (a run of whole ``row``
-        elements) is wrapped in a synthetic root so expat sees a
-        well-formed document; the handler starts from the serial parse's
-        running row index at the slice boundary, so declared ``r``
-        attributes and sequential fallback both reproduce the serial
-        row numbering exactly.
+        """:meth:`iter_rows` over one ``(start, end)`` byte slice of the
+        decompressed sheet XML from :func:`combine_slice_scans`. A slice
+        is a run of whole ``row`` elements whose first row declares
+        ``r="N"``, so the declared row indices reproduce the serial row
+        numbering exactly.
 
         ``spool_path``: a raw decompressed copy of the sheet XML (the
-        plan scan's spool). When present on this machine the slice is
-        read with one ``seek`` instead of re-inflating the entry up to
+        plan's spool). When present on this machine the slice is read
+        with one ``seek`` instead of re-inflating the entry up to
         ``start``; when absent (e.g. a task on another host) the entry
-        path below is the fallback — same bytes either way."""
+        is re-inflated — same bytes either way."""
         path = self.resolve_sheet(sheet_name, sheet_index)
-        shared = self._shared_strings()
-        handler = _SheetHandler(shared, continue_on_error, self._style_renderers())
-        handler.row_idx = init_row_idx
-        parser = _expat.ParserCreate()
-        parser.buffer_text = True
-        parser.StartElementHandler = handler.start
-        parser.EndElementHandler = handler.end
-        parser.CharacterDataHandler = handler.chars
         if spool_path is not None and os.path.exists(spool_path):
             f = open(spool_path, "rb")
             f.seek(start)
         else:
-            try:
-                with _typed(self._name, f"sheet part {path}"):
-                    f = self._zf.open(path)
-            except KeyError as e:
-                raise ConversionError(f"sheet part {path} missing in archive") from e
-        with _typed(self._name, f"sheet part {path}"), f:
-            skip = start if f.seekable() is False or f.tell() != start else 0
+            f = self._open_part(path)
+
+        def chunks() -> Iterator[bytes]:
+            # a synthetic root makes the run of whole rows a well-formed
+            # document for expat
+            yield b"<sliceroot>"
+            skip = start - f.tell() if f.seekable() else start
             while skip > 0:
                 got = f.read(min(1 << 20, skip))
                 if not got:
@@ -822,41 +644,18 @@ class XlsxWorkbook:
                         f"sheet part {path} truncated before slice offset {start}"
                     )
                 skip -= len(got)
-            try:
-                parser.Parse(b"<sliceroot>", False)
-            except _expat.ExpatError as e:  # pragma: no cover - static prologue
-                raise ConversionError(f"malformed sheet XML in {path}: {e}") from e
             remaining = end - start
             while remaining > 0:
                 chunk = f.read(min(1 << 16, remaining))
                 if not chunk:
                     raise ConversionError(
-                        f"sheet part {path} truncated inside slice "
-                        f"[{start}, {end})"
+                        f"sheet part {path} truncated inside slice [{start}, {end})"
                     )
                 remaining -= len(chunk)
-                try:
-                    parser.Parse(chunk, False)
-                except _expat.ExpatError as e:
-                    raise ConversionError(f"malformed sheet XML in {path}: {e}") from e
-                if handler.out:
-                    yield from handler.out
-                    handler.out.clear()
-            try:
-                parser.Parse(b"</sliceroot>", True)
-            except _expat.ExpatError as e:
-                raise ConversionError(f"malformed sheet XML in {path}: {e}") from e
-            yield from handler.out
+                yield chunk
+            yield b"</sliceroot>"
 
-    def sheet_entry_size(
-        self, sheet_name: str | None = None, sheet_index: int | None = None
-    ) -> int | None:
-        """Decompressed size of the sheet's XML entry (central-directory
-        metadata — O(1)), or None if the entry is missing."""
-        try:
-            return self._zf.getinfo(self.resolve_sheet(sheet_name, sheet_index)).file_size
-        except KeyError:
-            return None
+        yield from self._sax_rows(path, f, chunks(), continue_on_error)
 
     def spool_sheet(
         self,
@@ -868,17 +667,20 @@ class XlsxWorkbook:
         """Stream ONE sheet's decompressed XML to ``spool_path`` — the
         only inherently serial step of slice planning (one DEFLATE
         stream cannot be inflated in parallel) — and return the cheap
-        stream facts the PARALLEL strict scan needs:
+        stream facts :func:`slice_scan_tasks` needs:
         ``{"file_size", "head" (first 4 KiB), "first_row_off"}`` (the
-        first strict ``<row r=`` byte offset). Returns None — caller
-        falls back to the serial path — on a missing entry, a
-        decompressed-size mismatch, no row tag at all, or ANY OSError
-        from the spool write (e.g. ENOSPC: degrade to the serial
-        parse, never hard-fail a previously-working conversion —
-        ADVICE r11)."""
+        first strict ``<row r=`` byte offset). Returns None — the caller
+        removes the spool and takes the serial path — on a sheet below
+        SLICE_TARGET_BYTES (not worth slicing; nothing is written), a
+        missing entry, a decompressed-size mismatch, no strict row tag
+        at all, or ANY OSError from the spool write (e.g. ENOSPC:
+        degrade to the serial parse, never hard-fail a previously-
+        working conversion — ADVICE r11)."""
         path = self.resolve_sheet(sheet_name, sheet_index)
         try:
             info = self._zf.getinfo(path)
+            if info.file_size < SLICE_TARGET_BYTES:
+                return None
             f = self._zf.open(path)
         except KeyError:
             return None
@@ -886,42 +688,25 @@ class XlsxWorkbook:
         first_row_off: int | None = None
         carry = b""
         pos = 0
-        written = 0
         try:
             with _typed(self._name, f"sheet part {path}"), f, open(spool_path, "wb") as sp:
-                while True:
-                    raw = f.read(1 << 20)
-                    if not raw:
-                        break
+                for raw in iter(lambda: f.read(1 << 20), b""):
                     sp.write(raw)
-                    written += len(raw)
                     if len(head) < 4096:
                         head = (head + raw)[:4096]
                     if first_row_off is None:
                         buf = carry + raw
-                        best = -1
-                        for nd in _ROW_RFIRST_NEEDLES:
-                            p = buf.find(nd)
-                            if p >= 0 and (best < 0 or p < best):
-                                best = p
-                        if best >= 0:
-                            first_row_off = pos - len(carry) + best
+                        p, _ = _next_rfirst(buf, 0)
+                        if p >= 0:
+                            first_row_off = pos - len(carry) + p
                         else:
                             carry = buf[-16:]
                     pos += len(raw)
         except (ConversionError, OSError):
-            with contextlib.suppress(OSError):
-                os.remove(spool_path)
             return None
-        if written != info.file_size or first_row_off is None:
-            with contextlib.suppress(OSError):
-                os.remove(spool_path)
+        if pos != info.file_size or first_row_off is None:
             return None
-        return {
-            "file_size": info.file_size,
-            "head": head,
-            "first_row_off": first_row_off,
-        }
+        return {"file_size": pos, "head": head, "first_row_off": first_row_off}
 
     def close(self) -> None:
         self._zf.close()
@@ -933,95 +718,85 @@ class XlsxWorkbook:
         self.close()
 
 
-def _max_col_scan(f) -> int | None:
-    """Core of :meth:`XlsxWorkbook.sheet_max_col`: the strict
-    byte-level width scan over an already-open decompressed sheet XML
-    stream. byte-level regexes: cell tags and refs are pure ASCII
-    markup, so no utf-8 decode is needed (multi-byte sequences never
-    contain ASCII bytes)."""
-    cell_open = re.compile(rb"<c[\s/>]")
-    cell_ref = re.compile(rb'<c\b[^>]*?\br="([A-Z]+)[0-9]+"')
-    n_open = 0
-    n_ref = 0
-    letters_seen: set[bytes] = set()
-    carry = b""
-    while True:
-        raw = f.read(1 << 20)
-        buf = carry + raw
-        if b"<![" in buf or b"<!--" in buf:
-            return None
-        if raw:
-            # keep the (possibly split) trailing tag for the
-            # next chunk; a tag is < ~1 KB, so the carry is
-            # bounded — a longer one means we are inside
-            # text, where no '<' can legally occur unescaped
-            cut = buf.rfind(b"<")
-            if cut == -1 or len(buf) - cut > 4096:
-                carry = b""
-            else:
-                carry, buf = buf[cut:], buf[:cut]
-        n_open += len(cell_open.findall(buf))
-        refs = cell_ref.findall(buf)
+def _cell_width(buf: bytes, limit: int) -> tuple[int, int, int]:
+    """Strict width counts over the cell tags STARTING before ``limit``
+    in ``buf``: (cell tags, tags with an uppercase r ref, max 0-based
+    ref column or -1). In well-formed XML a tag ends before the next
+    '<', so matching stops at the first '<' at/after ``limit`` and runs
+    in ~1 MiB windows cut at a '<': the match lists stay small however
+    many cells a scan range holds."""
+    stop = buf.find(b"<", limit)
+    if stop < 0:
+        stop = len(buf)
+    n_open = n_ref = 0
+    letters: set[bytes] = set()
+    pos = 0
+    while pos < stop:
+        cut = buf.find(b"<", pos + (1 << 20), stop)
+        if cut < 0:
+            cut = stop
+        refs = _CELL_TAG_REF_RE.findall(buf, pos, cut)
         n_ref += len(refs)
-        letters_seen.update(refs)
-        if not raw:
-            break
-    # strictness: every <c …> must have carried an uppercase r ref
-    # (else sequential cell positions apply and only the full scan
-    # knows the width); zero cells also degrades, so the full scan
-    # raises its usual no-rows error
-    if n_open != n_ref or not letters_seen:
-        return None
-    return max(_col_letters_to_index(s.decode("ascii")) for s in letters_seen)
+        letters.update(refs)
+        n_open += len(_CELL_TAG_RE.findall(buf, pos, cut))
+        pos = cut
+    max_col = max(
+        (_col_letters_to_index(s.decode("ascii")) for s in letters), default=-1
+    )
+    return n_open, n_ref, max_col
 
 
-def max_col_from_xml_file(path: str) -> int | None:
-    """:func:`_max_col_scan` over a RAW decompressed sheet XML file
-    (the slice plan's spool) — the same strict width scan without
-    re-inflating the archive entry."""
-    try:
-        with open(path, "rb") as f:
-            return _max_col_scan(f)
-    except OSError:
-        return None
-
-
-# --- parallel strict slice scan (r12, VERDICT r11 #3) -----------------
-# plan_row_slices above is a SERIAL streaming pass: at 492 MB of sheet
-# XML it holds the driver ~3.5 s (plus another ~4 s when the dimension-
-# less width scan follows) while every executor idles. The three
-# functions below decompose the same strict scan into independent byte
-# ranges of the spooled XML so the reader can fan it out as ONE Spark
-# job: per-range needle counts sum, first/last positions min/max, and
-# each boundary ("first strict row start at/after target T") resolves
-# from the range owning T or the first later range with any row start.
-# Refusal semantics are the serial scanner's, decomposed: any '<!', any
-# '<?' besides the XML declaration, loose/strict row-count mismatch,
-# rows outside sheetData, a digit-less first row. The serial
-# plan_row_slices stays as the API for direct (non-Spark) callers and
-# as the behavioral reference the unit tests compare against.
+# --- the slice planner ------------------------------------------------
+# spool_sheet inflates the sheet once; slice_scan_tasks turns its facts
+# into byte ranges; scan_slice_range strict-scans each range (the
+# reader runs them as ONE Spark job); combine_slice_scans sums the
+# needle counts, takes first/last positions by min/max, and resolves
+# each slice boundary ("first strict row start at/after target T") from
+# the range owning T or the first later range with a row start. The
+# plan refuses — None, the caller parses serially — on:
+# * a sheet below SLICE_TARGET_BYTES;
+# * a UTF-16 BOM, an unterminated XML declaration, or a declared
+#   encoding other than UTF-8/US-ASCII (byte offsets must be ASCII-safe);
+# * any '<!' (comment, CDATA, DTD) or any '<?' besides the declaration:
+#   either could hide or fabricate row markup from a byte-level scan;
+# * any row tag without a first-attribute r= (e.g. '<row>',
+#   '<x:row>', '<rowBreaks>'), seen as a loose/strict count mismatch;
+# * a first row whose r= has no digits;
+# * a row start outside sheetData, or no '</sheetData' at all;
+# * fewer than two slices.
 
 _SCAN_OVERLAP = 4096  # > max row-number digits and the width scan's tag carry
 
 
-def parse_decl_head(head: bytes) -> tuple[bool, int | None]:
-    """Replicates the serial scanner's first-chunk checks on the spool's
-    first bytes: (ok, byte offset of the XML declaration's '<?', or None
-    when there is no declaration). ok=False → refuse (UTF-16 BOM,
-    unterminated declaration, non-UTF-8 encoding)."""
+def slice_scan_tasks(
+    meta: dict, n_par: int
+) -> tuple[list[tuple[int, int]], list[int], int | None] | None:
+    """The slice policy, in one place: :meth:`XlsxWorkbook.spool_sheet`'s
+    facts plus the session parallelism -> the strict scan's tasks
+    ``(ranges, targets, decl_q_pos)``, or None when the spool's head
+    refuses. About one SLICE_TARGET_BYTES of XML per slice, at most
+    ``n_par`` slices. ``targets`` are the byte-even slice boundaries
+    between the first row and the end of the sheet; ``ranges`` cut the
+    whole spool into one scan range per slice; ``decl_q_pos`` is the
+    offset of the XML declaration's '<?' (None without one)."""
+    head = meta["head"]
     if head[:2] in (b"\xff\xfe", b"\xfe\xff"):
-        return False, None
+        return None
+    decl_q_pos = None
     stripped = head.lstrip(b"\xef\xbb\xbf \t\r\n")
-    if not stripped.startswith(b"<?xml"):
-        return True, None
-    decl_q_pos = len(head) - len(stripped)
-    decl_end = head.find(b"?>")
-    if decl_end == -1:
-        return False, None
-    m = _XML_DECL_ENC_RE.search(head[:decl_end])
-    if m and m.group(1).lower() not in (b"utf-8", b"us-ascii"):
-        return False, None
-    return True, decl_q_pos
+    if stripped.startswith(b"<?xml"):
+        decl_end = head.find(b"?>")
+        if decl_end == -1:
+            return None
+        m = _XML_DECL_ENC_RE.search(head[:decl_end])
+        if m and m.group(1).lower() not in (b"utf-8", b"us-ascii"):
+            return None
+        decl_q_pos = len(head) - len(stripped)
+    size, frf = meta["file_size"], meta["first_row_off"]
+    n = min(n_par, max(2, size // SLICE_TARGET_BYTES))
+    targets = [frf + (k * (size - frf)) // n for k in range(1, n)]
+    ranges = [((j * size) // n, ((j + 1) * size) // n) for j in range(n)]
+    return ranges, targets, decl_q_pos
 
 
 def scan_slice_range(
@@ -1033,10 +808,10 @@ def scan_slice_range(
     want_width: bool,
 ) -> dict:
     """Strict-scan ONE byte range [lo, hi) of a spooled sheet XML (the
-    per-task body of the parallel slice plan). Only occurrences that
-    START inside [lo, hi) count; the overlap read past ``hi`` lets
-    needles, row-number digits and cell tags that straddle the range
-    edge resolve here without being double-counted by the next range.
+    per-task body of the slice plan). Only occurrences that START
+    inside [lo, hi) count; the overlap read past ``hi`` lets needles,
+    row-number digits and cell tags that straddle the range edge
+    resolve here without being double-counted by the next range.
     Returns a plain picklable dict for :func:`combine_slice_scans`."""
     n = hi - lo
     with open(spool_path, "rb") as f:
@@ -1044,8 +819,8 @@ def scan_slice_range(
         buf = f.read(n + _SCAN_OVERLAP)
     limit = min(n, len(buf))
 
-    def first_pos(needle: bytes, from_: int = 0) -> int | None:
-        p = buf.find(needle, from_)
+    def first_pos(needle: bytes) -> int | None:
+        p = buf.find(needle)
         return p if 0 <= p < limit else None
 
     q0 = buf.find(b"<?")
@@ -1063,57 +838,34 @@ def scan_slice_range(
         "sd": first_pos(b"</sheetData"),
         "last_loose": lo + last_loose if last_loose >= 0 else None,
         "first_rf": None,
-        "first_rf_rn": None,
         "bad_first_digits": False,
+        "first_ok": None,
         "bounds": {},
     }
     # Walk strict row starts only as far as needed: the range's first
-    # one (digit-checked, as the serial scanner does for the sheet's
-    # first row) and one per in-range target.
+    # one, its first with a digit after r= ("ok"), and the first ok one
+    # at/after each in-range target. Slices start only at ok rows: the
+    # handler numbers a digit-less r="" row from the row before it,
+    # which a slice starting there would not have.
     tq = sorted(t - lo for t in targets if lo <= t < hi)
     pos = 0
     while True:
-        best, blen = -1, 0
-        for nd in _ROW_RFIRST_NEEDLES:
-            p = buf.find(nd, pos)
-            if p >= 0 and (best < 0 or p < best):
-                best, blen = p, len(nd)
-        if best < 0 or best >= limit:
+        p, plen = _next_rfirst(buf, pos)
+        if p < 0 or p >= limit:
             break
-        q = best + blen
-        e = q
-        while e < len(buf) and buf[e : e + 1].isdigit():
-            e += 1
-        if e == q:
-            if out["first_rf"] is None:
-                # a digit-less first row start refuses the whole plan
-                # (the serial scanner's find_row_start contract)
-                out["bad_first_digits"] = True
-                out["first_rf"] = lo + best
-            pos = best + 1
-            continue
-        rn = int(buf[q:e])
+        ok = buf[p + plen : p + plen + 1].isdigit()
         if out["first_rf"] is None:
-            out["first_rf"], out["first_rf_rn"] = lo + best, rn
-        while tq and tq[0] <= best:
-            out["bounds"][lo + tq.pop(0)] = (lo + best, rn)
-        if not tq and out["first_rf"] is not None:
-            break
-        pos = best + 1
+            out["first_rf"], out["bad_first_digits"] = lo + p, not ok
+        if ok:
+            if out["first_ok"] is None:
+                out["first_ok"] = lo + p
+            while tq and tq[0] <= p:
+                out["bounds"][lo + tq.pop(0)] = lo + p
+            if not tq:
+                break
+        pos = p + 1
     if want_width:
-        cell_open = re.compile(rb"<c[\s/>]")
-        cell_ref = re.compile(rb'<c\b[^>]*?\br="([A-Z]+)[0-9]+"')
-        n_open = sum(1 for m in cell_open.finditer(buf) if m.start() < limit)
-        n_ref = 0
-        max_col = -1
-        for m in cell_ref.finditer(buf):
-            if m.start() >= limit:
-                continue
-            n_ref += 1
-            c = _col_letters_to_index(m.group(1).decode("ascii"))
-            if c > max_col:
-                max_col = c
-        out["n_open"], out["n_ref"], out["max_col"] = n_open, n_ref, max_col
+        out["n_open"], out["n_ref"], out["max_col"] = _cell_width(buf, limit)
     return out
 
 
@@ -1123,24 +875,23 @@ def combine_slice_scans(
     first_row_off: int,
     targets: list[int],
     want_width: bool,
-) -> tuple[list[tuple[int, int, int, int]] | None, int | None]:
+) -> tuple[list[tuple[int, int]] | None, int | None]:
     """Driver-side combine of :func:`scan_slice_range` results into the
-    same ``(start, end, init_row_idx, first_row_idx)`` slice plan the
-    serial :meth:`XlsxWorkbook.plan_row_slices` produces (plus the
-    strict max-column width when requested). Returns (None, None) —
-    serial fallback — on any decomposed refusal condition."""
+    slice plan ``[(start, end)]`` — each slice starts at a row element's
+    ``<`` and ends at the next slice's start (the last at
+    ``</sheetData``) — plus the strict max-column width when requested.
+    Returns (None, None) — serial fallback — on any refusal."""
     results = sorted(results, key=lambda r: r["lo"])
     if any(r["bang"] is not None or r["qm"] is not None for r in results):
         return None, None
     n_loose = sum(r["n_loose"] for r in results)
     n_rfirst = sum(r["n_rfirst"] for r in results)
-    sds = [r["sd"] + r["lo"] for r in results if r["sd"] is not None]
-    sd_close = min(sds) if sds else None
-    firsts = [r["first_rf"] for r in results if r["first_rf"] is not None]
-    frf = min(firsts) if firsts else None
+    sd_close = min(
+        (r["lo"] + r["sd"] for r in results if r["sd"] is not None), default=None
+    )
+    frf = min((r["first_rf"] for r in results if r["first_rf"] is not None), default=None)
     last_loose = max(
-        (r["last_loose"] for r in results if r["last_loose"] is not None),
-        default=None,
+        (r["last_loose"] for r in results if r["last_loose"] is not None), default=None
     )
     if (
         n_loose != n_rfirst
@@ -1152,38 +903,30 @@ def combine_slice_scans(
         or (last_loose is not None and last_loose > sd_close)
     ):
         return None, None
-    bounds: list[tuple[int, int]] = []
-    for t in targets:
-        cand: tuple[int, int] | None = None
+
+    def boundary(t: int) -> int | None:
         for r in results:
-            b = r["bounds"].get(t)
-            if b is not None:
-                cand = b
-                break
-            # a later range's first row start is the "first at/after t"
-            # when t's own range ran out of rows past t
-            if r["lo"] > t and r["first_rf"] is not None and r["first_rf_rn"] is not None:
-                cand = (r["first_rf"], r["first_rf_rn"])
-                break
-        if cand is not None:
-            bounds.append(cand)
-    starts: list[tuple[int, int]] = [(first_row_off, -1)]
-    for b_off, rn in bounds:
-        if b_off > starts[-1][0] and b_off < sd_close:
-            starts.append((b_off, rn))
-    out: list[tuple[int, int, int, int]] = []
-    for i, (off, rn) in enumerate(starts):
-        end = starts[i + 1][0] if i + 1 < len(starts) else sd_close
-        out.append((off, end, -1, rn - 1 if rn > 0 else -1))
-    slices = out if len(out) > 1 else None
+            if t in r["bounds"]:
+                return r["bounds"][t]
+            # t's own range ran out of rows past t: the first later
+            # range's first ok row start is the first at/after t
+            if r["lo"] > t and r["first_ok"] is not None:
+                return r["first_ok"]
+        return None
+
+    starts = [first_row_off]
+    for t in targets:
+        b = boundary(t)
+        if b is not None and starts[-1] < b < sd_close:
+            starts.append(b)
+    if len(starts) < 2:
+        return None, None
     width: int | None = None
-    if want_width and slices is not None:
-        n_open = sum(r.get("n_open", 0) for r in results)
-        n_ref = sum(r.get("n_ref", 0) for r in results)
-        mc = max((r.get("max_col", -1) for r in results), default=-1)
-        if n_open == n_ref and mc >= 0:
+    if want_width:
+        mc = max(r["max_col"] for r in results)
+        if sum(r["n_open"] for r in results) == sum(r["n_ref"] for r in results) and mc >= 0:
             width = mc
-    return slices, width
+    return list(zip(starts, starts[1:] + [sd_close])), width
 
 
 def list_sheets(source: str | bytes) -> list[str]:

@@ -863,13 +863,8 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         labels = m2.localCheckpoint()
         rounds += 1
         if obs2.get["s"] == obs1.get["s"]:
-            _CC_LAST_ROUNDS[0] = rounds
             return labels
 
-
-# rounds-to-fixpoint of the most recent _connected_components call
-# (instrumentation for bench/regression triage; not part of any result)
-_CC_LAST_ROUNDS = [0]
 
 def dedup_minhash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated corpus membership: every document with its near-dup

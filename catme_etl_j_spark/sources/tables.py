@@ -44,7 +44,13 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     precedent (measured 3.0 → 0.77 s). A payload-heavy frame whose
     consumers reshuffle by key anyway gets strictly SLOWER from the
     extra exchange (the r12 _prescaled negative result: ann_nn 0.58 →
-    0.93 s — see similarity.py)."""
+    0.93 s — see similarity.py).
+
+    Precondition: ``df`` is a raw scan (``load_table`` output, at most
+    projected/filtered). The partition probe goes through ``.rdd``,
+    which plans the frame and materializes any upstream AQE query
+    stages (shuffles, broadcasts) it contains — a hidden extra job in
+    front of anything but a leaf scan."""
     n_par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n_par:
         return df.repartition(n_par)

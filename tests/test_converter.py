@@ -3,6 +3,8 @@
 import json
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from catme_etl_j_spark.converter import ConversionError, convert, read_xlsx
 from catme_etl_j_spark.converter.xlsx_writer import write_xlsx
@@ -127,12 +129,34 @@ def test_sheet_max_col_light_scan(tmp_path):
     assert XlsxWorkbook(noref).sheet_max_col() is None
 
 
+def _plan_sheet(path: str, spool: str, n_par: int = 4):
+    """The reader's slice planner run in-process, without Spark:
+    (plan, width), or (None, None) when it refuses."""
+    from catme_etl_j_spark.converter.xlsx import (
+        XlsxWorkbook,
+        combine_slice_scans,
+        scan_slice_range,
+        slice_scan_tasks,
+    )
+
+    with XlsxWorkbook(path) as wb:
+        meta = wb.spool_sheet(spool_path=spool)
+    tasks = slice_scan_tasks(meta, n_par) if meta is not None else None
+    if tasks is None:
+        return None, None
+    ranges, targets, decl_q = tasks
+    res = [scan_slice_range(spool, lo, hi, targets, decl_q, True) for lo, hi in ranges]
+    return combine_slice_scans(
+        res, first_row_off=meta["first_row_off"], targets=targets, want_width=True
+    )
+
+
 def test_slice_parallel_parse_matches_serial(spark, tmp_path, monkeypatch):
     """r11: a single big sheet is byte-sliced at verified row boundaries
     and parsed by N concurrent tasks; the sliced read must be
     row-for-row identical to the serial read (same rows, same
     _row_idx), including sparse rows and values after the boundaries."""
-    from catme_etl_j_spark.converter import reader as reader_mod
+    from catme_etl_j_spark.converter import xlsx as xlsx_mod
     from catme_etl_j_spark.converter.xlsx import XlsxWorkbook
 
     rows = [["a", "b", "c"]]
@@ -141,27 +165,22 @@ def test_slice_parallel_parse_matches_serial(spark, tmp_path, monkeypatch):
     rows[100] = [None, "only-b", None]  # sparse row crossing a boundary zone
     p = write_xlsx(str(tmp_path / "big.xlsx"), {"S": rows})
 
-    # direct plan + slice-iterator equality (no Spark in the loop)
-    with XlsxWorkbook(p) as wb:
-        plan = wb.plan_row_slices(None, None, n_slices=4, min_bytes=1)
-        assert plan and len(plan) >= 2
-        serial = dict(wb.iter_rows())
-        sliced = {}
-        for s, e, init, _frn in plan:
-            for ri, cells in wb.iter_rows_slice(
-                None, None, start=s, end=e, init_row_idx=init
-            ):
-                assert ri not in sliced
-                sliced[ri] = cells
-        assert sliced == serial
-
-    # end-to-end: the sliced frame equals the serial frame, and the
-    # bucket-parallel ordered NDJSON sink is byte-identical to the
-    # serial repartition(1)+sort sink
+    # serial references first: the sheet is below the real slice floor
     serial_df = read_xlsx(spark, p).orderBy("_row_idx").collect()
     out_serial = str(tmp_path / "serial.ndjson")
     convert(p, "NDJSON", out_serial, overwrite=True, spark=spark)
-    monkeypatch.setattr(reader_mod, "_SLICE_MIN_BYTES", 1)
+    monkeypatch.setattr(xlsx_mod, "SLICE_TARGET_BYTES", 1)
+
+    # direct plan + slice-iterator equality (no Spark in the loop)
+    plan, _ = _plan_sheet(p, str(tmp_path / "spool.xml"))
+    assert plan and len(plan) >= 2
+    with XlsxWorkbook(p) as wb:
+        sliced = [r for s, e in plan for r in wb.iter_rows_slice(start=s, end=e)]
+        assert sliced == list(wb.iter_rows())
+
+    # end-to-end: the sliced frame equals the serial frame, and the
+    # partition-ordered NDJSON sink is byte-identical to the serial
+    # repartition(1)+sort sink
     sliced_df = read_xlsx(spark, p)
     assert sliced_df.rdd.getNumPartitions() > 1  # really took the slice path
     assert sliced_df._catme_slice_ordered  # sink metadata attached
@@ -171,118 +190,213 @@ def test_slice_parallel_parse_matches_serial(spark, tmp_path, monkeypatch):
     assert open(out_sliced, "rb").read() == open(out_serial, "rb").read()
 
 
-def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
-    """r12: the range-decomposed strict scan (spool_sheet +
-    scan_slice_range + combine_slice_scans — what the reader fans out
-    as one Spark job) must produce EXACTLY the serial plan_row_slices
-    plan, the same strict width, and the same refusals on the pinned
-    unprovable variants."""
-    import re as _re
+def test_slice_scan_failure_falls_back_to_serial(spark, tmp_path, monkeypatch, caplog):
+    """A failed scan fan-out is a refusal, never an error: with the
+    spool deleted after spool_sheet and before the scan job, read_xlsx
+    takes the serial path and the NDJSON is byte-identical to a serial
+    conversion."""
+    import os
+
+    from catme_etl_j_spark.converter import xlsx as xlsx_mod
+
+    rows = [["a", "b"]] + [[f"v{i} ä", i] for i in range(2000)]
+    p = write_xlsx(str(tmp_path / "f.xlsx"), {"S": rows})
+    out_serial = str(tmp_path / "serial.ndjson")
+    convert(p, "NDJSON", out_serial, overwrite=True, spark=spark)
+
+    monkeypatch.setattr(xlsx_mod, "SLICE_TARGET_BYTES", 1)
+    spool_sheet = xlsx_mod.XlsxWorkbook.spool_sheet
+
+    def spool_then_lose(self, *args, spool_path, **kwargs):
+        meta = spool_sheet(self, *args, spool_path=spool_path, **kwargs)
+        os.remove(spool_path)
+        return meta
+
+    monkeypatch.setattr(xlsx_mod.XlsxWorkbook, "spool_sheet", spool_then_lose)
+    with caplog.at_level("WARNING", logger="catme_etl_j_spark.converter.reader"):
+        df = read_xlsx(spark, p)
+    assert "slice scan job failed" in caplog.text  # the job ran, and failed
+    assert not getattr(df, "_catme_slice_ordered", False)  # serial path
+    out = str(tmp_path / "fallback.ndjson")
+    res = convert(p, "NDJSON", out, overwrite=True, spark=spark)
+    assert res.rows_written == 2000
+    assert open(out, "rb").read() == open(out_serial, "rb").read()
+
+
+# Split invariance of the slice planner: scan_slice_range results over ANY
+# byte partition of the spool must combine to the same plan and width.
+_ss_text = st.text(alphabet=st.sampled_from(list("ab <&>\"'äß日本😀")), max_size=12)
+_ss_cell = st.one_of(
+    st.tuples(st.just("n"), st.integers(-(10**6), 10**6)),
+    st.tuples(st.just("inlineStr"), _ss_text),
+    st.tuples(st.just("s"), st.integers(0, 3)),
+    st.tuples(st.just("b"), st.booleans()),
+    st.tuples(st.just("blank"), st.none()),
+)
+# (row-number gap, [(column gap, cell)]): sparse rows, sparse cells and
+# ragged widths
+_ss_row = st.tuples(
+    st.integers(1, 3), st.lists(st.tuples(st.integers(1, 3), _ss_cell), max_size=6)
+)
+
+
+def _write_shared_sheet(path: str, shared: list[str], rows) -> str:
     import zipfile as _zip
+    from xml.sax.saxutils import escape
+
+    from catme_etl_j_spark.converter.xlsx_writer import _col_index_to_letters
+
+    parts, r = [], 0
+    for row_gap, cells in rows:
+        r += row_gap
+        c, xml = -1, []
+        for col_gap, (kind, v) in cells:
+            c += col_gap
+            ref = f"{_col_index_to_letters(c)}{r}"
+            if kind == "blank":
+                xml.append(f'<c r="{ref}"/>')
+            elif kind == "inlineStr":
+                xml.append(f'<c r="{ref}" t="inlineStr"><is><t>{escape(v)}</t></is></c>')
+            elif kind == "b":
+                xml.append(f'<c r="{ref}" t="b"><v>{int(v)}</v></c>')
+            else:
+                xml.append(f'<c r="{ref}" t="{kind}"><v>{v}</v></c>')
+        parts.append(f'<row r="{r}">{"".join(xml)}</row>')
+    ns = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
+    decl = '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
+    sst = "".join(f"<si><t>{escape(s)}</t></si>" for s in shared)
+    with _zip.ZipFile(path, "w", _zip.ZIP_DEFLATED) as zf:
+        zf.writestr(
+            "xl/workbook.xml",
+            f'{decl}<workbook {ns} xmlns:r="http://schemas.openxmlformats.org/'
+            'officeDocument/2006/relationships"><sheets>'
+            '<sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>',
+        )
+        zf.writestr(
+            "xl/_rels/workbook.xml.rels",
+            f'{decl}<Relationships xmlns="http://schemas.openxmlformats.org/package/'
+            '2006/relationships"><Relationship Id="rId1" Target="worksheets/sheet1.xml"'
+            ' Type="http://schemas.openxmlformats.org/officeDocument/2006/'
+            'relationships/worksheet"/></Relationships>',
+        )
+        zf.writestr("xl/sharedStrings.xml", f"{decl}<sst {ns}>{sst}</sst>")
+        zf.writestr(
+            "xl/worksheets/sheet1.xml",
+            f'{decl}<worksheet {ns}><sheetData>{"".join(parts)}</sheetData></worksheet>',
+        )
+    return path
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    shared=st.lists(_ss_text, min_size=4, max_size=4),
+    rows=st.lists(_ss_row, min_size=1, max_size=25),
+    n_par=st.integers(2, 6),
+    data=st.data(),
+)
+def test_slice_plan_split_invariance(tmp_path_factory, shared, rows, n_par, data):
+    """Any byte partition of the spool into 1..k scan ranges gives the
+    planner's own plan and width; the width is the full parse's max
+    column, and the slices concatenate to exactly ``iter_rows()``."""
+    import re as _re
+    from unittest import mock
 
     from catme_etl_j_spark.converter import xlsx as xlsx_mod
     from catme_etl_j_spark.converter.xlsx import (
         XlsxWorkbook,
         combine_slice_scans,
-        parse_decl_head,
         scan_slice_range,
     )
 
-    rows = [["a", "b", "c"]] + [[f"v{i}", i, i * 2] for i in range(4000)]
-    p = write_xlsx(str(tmp_path / "w.xlsx"), {"S": rows})
-    # shrink the slice floor so the small fixture actually multi-slices
-    monkeypatch.setattr(xlsx_mod, "SLICE_TARGET_BYTES", 1024)
-
-    def parallel_plan(path: str, n_slices: int, want_width: bool = True):
-        spool = str(tmp_path / "spool.xml")
-        with XlsxWorkbook(path) as wb:
+    d = tmp_path_factory.mktemp("split")
+    p = _write_shared_sheet(str(d / "s.xlsx"), shared, rows)
+    spool = str(d / "spool.xml")
+    with mock.patch.object(xlsx_mod, "SLICE_TARGET_BYTES", 1):
+        with XlsxWorkbook(p) as wb:
             meta = wb.spool_sheet(spool_path=spool)
-        if meta is None:
-            return None, None
-        ok, decl_q = parse_decl_head(meta["head"])
-        if not ok:
-            return None, None
-        fsize, frf = meta["file_size"], meta["first_row_off"]
-        n_sl = min(n_slices, max(2, fsize // xlsx_mod.SLICE_TARGET_BYTES))
-        span = fsize - frf
-        targets = [frf + (k * span) // n_sl for k in range(1, n_sl)]
-        ranges = [
-            ((j * fsize) // n_sl, ((j + 1) * fsize) // n_sl) for j in range(n_sl)
-        ]
-        res = [
-            scan_slice_range(spool, lo, hi, targets, decl_q, want_width)
-            for lo, hi in ranges
-        ]
+        ranges, targets, decl_q = xlsx_mod.slice_scan_tasks(meta, n_par)
+
+    def plan_over(part):
+        res = [scan_slice_range(spool, lo, hi, targets, decl_q, True) for lo, hi in part]
         return combine_slice_scans(
-            res, first_row_off=frf, targets=targets, want_width=want_width
+            res, first_row_off=meta["first_row_off"], targets=targets, want_width=True
         )
 
-    for n_sl in (2, 4, 7):
-        with XlsxWorkbook(p) as wb:
-            serial = wb.plan_row_slices(None, None, n_slices=n_sl, min_bytes=1)
-            serial_width = wb.sheet_max_col()
-        slices, width = parallel_plan(p, n_sl)
-        assert slices == serial and len(slices) >= 2
-        assert width == serial_width
-
-    # refusal parity on the pinned unprovable variants
-    src = _zip.ZipFile(p)
-
-    def variant(name: str, mutate) -> str:
-        out = str(tmp_path / name)
-        with _zip.ZipFile(out, "w") as dst:
-            for info in src.infolist():
-                data = src.read(info.filename)
-                if info.filename.startswith("xl/worksheets/"):
-                    data = mutate(data)
-                dst.writestr(info.filename, data)
-        return out
-
-    cmt = variant(
-        "c.xlsx", lambda d: d.replace(b"<sheetData>", b"<sheetData><!-- x -->", 1)
+    plan, width = plan_over(ranges)
+    size = meta["file_size"]
+    xml = open(spool, "rb").read()
+    # cut points: anywhere, plus right around row/cell starts and targets
+    starts = [m.start() for m in _re.finditer(rb"<row|<c |</sheetData", xml)]
+    edges = [e + k for e in starts + targets for k in (-1, 0, 1) if 0 < e + k < size]
+    cuts = data.draw(
+        st.lists(st.one_of(st.integers(1, size - 1), st.sampled_from(edges)), max_size=8)
     )
-    assert parallel_plan(cmt, 4) == (None, None)
-    nor = variant(
-        "r.xlsx", lambda d: _re.sub(rb'<row r="7"[^>]*>', b"<row>", d, count=1)
-    )
-    assert parallel_plan(nor, 4) == (None, None)
+    bounds = [0, *sorted(set(cuts)), size]
+    for part in ([(0, size)], list(zip(bounds, bounds[1:]))):
+        assert plan_over(part) == (plan, width), part
+    with XlsxWorkbook(p) as wb:
+        full = list(wb.iter_rows())
+        if plan is not None:
+            full_max = max((max(cells) for _, cells in full if cells), default=-1)
+            assert width == (full_max if full_max >= 0 else None)
+            for spool_path in (spool, None):
+                sliced = [
+                    row
+                    for s, e in plan
+                    for row in wb.iter_rows_slice(start=s, end=e, spool_path=spool_path)
+                ]
+                assert sliced == full
 
 
-def test_slice_plan_refuses_unprovable_sheets(tmp_path):
-    """plan_row_slices returns None (serial fallback) whenever the scan
-    cannot prove slicing exact: comments/CDATA, rows without a
-    first-attribute r=, sheets below the size floor."""
+def test_slice_plan_refuses_unprovable_sheets(tmp_path, monkeypatch):
+    """The slice planner refuses — (None, None), the serial fallback —
+    whenever its byte-level scan cannot prove slicing exact: one
+    fixture per refusal rule."""
     import re as _re
     import zipfile as _zip
 
-    from catme_etl_j_spark.converter.xlsx import XlsxWorkbook
+    from catme_etl_j_spark.converter import xlsx as xlsx_mod
 
     p = write_xlsx(
         str(tmp_path / "w.xlsx"),
         {"S": [["a"], *([[i] for i in range(50)])]},
     )
-    src = _zip.ZipFile(p)
+    spool = str(tmp_path / "spool.xml")
+    # a sheet below SLICE_TARGET_BYTES is not worth slicing
+    assert _plan_sheet(p, spool) == (None, None)
+    monkeypatch.setattr(xlsx_mod, "SLICE_TARGET_BYTES", 1)
+    # the baseline sheet slices once the floor is lowered
+    plan, width = _plan_sheet(p, spool)
+    assert plan and width == 0
 
-    def variant(name: str, mutate) -> str:
-        out = str(tmp_path / name)
+    src = _zip.ZipFile(p)
+    cases = {
+        "comment": lambda d: d.replace(b"<sheetData>", b"<sheetData><!-- x -->", 1),
+        "CDATA": lambda d: d.replace(
+            b'<t xml:space="preserve">a</t>', b"<t><![CDATA[a]]></t>", 1
+        ),
+        "processing instruction": lambda d: d.replace(b"<sheetData>", b"<sheetData><?pi x?>", 1),
+        "ISO-8859-1": lambda d: d.replace(b'encoding="UTF-8"', b'encoding="ISO-8859-1"', 1),
+        "row without r": lambda d: _re.sub(rb'<row r="7"[^>]*>', b"<row>", d, count=1),
+        "r not the first attribute": lambda d: _re.sub(
+            rb'<row r="7"[^>]*>', b'<row spans="1:1" r="7">', d, count=1
+        ),
+        "digit-less first r": lambda d: d.replace(b'<row r="1"', b'<row r=""', 1),
+        "rowBreaks": lambda d: d.replace(
+            b"</sheetData>", b'</sheetData><rowBreaks count="0"/>', 1
+        ),
+    }
+    for name, mutate in cases.items():
+        out = str(tmp_path / f"{name}.xlsx")
         with _zip.ZipFile(out, "w") as dst:
             for info in src.infolist():
                 data = src.read(info.filename)
                 if info.filename.startswith("xl/worksheets/"):
-                    data = mutate(data)
+                    mutated = mutate(data)
+                    assert mutated != data, name
+                    data = mutated
                 dst.writestr(info.filename, data)
-        return out
-
-    # baseline sheet slices fine once the floor is lowered
-    assert XlsxWorkbook(p).plan_row_slices(None, None, n_slices=4, min_bytes=1)
-    # below the size floor: refused
-    assert XlsxWorkbook(p).plan_row_slices(None, None, n_slices=4) is None
-    # an XML comment could hide row markup: refused
-    cmt = variant("c.xlsx", lambda d: d.replace(b"<sheetData>", b"<sheetData><!-- x -->", 1))
-    assert XlsxWorkbook(cmt).plan_row_slices(None, None, n_slices=4, min_bytes=1) is None
-    # a row without a first-attribute r= needs the sequential fallback: refused
-    nor = variant("r.xlsx", lambda d: _re.sub(rb'<row r="7"[^>]*>', b"<row>", d, count=1))
-    assert XlsxWorkbook(nor).plan_row_slices(None, None, n_slices=4, min_bytes=1) is None
+        assert _plan_sheet(out, spool) == (None, None), name
 
 
 def test_ragged_rows_index_keys(spark, tmp_path):

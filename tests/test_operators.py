@@ -536,6 +536,20 @@ def test_new_queries_witnessed_in_birth_round():
     )
 
 
+def test_registry_keeps_every_prev_round_query():
+    """The registry fails loudly: _modules() re-raises ImportError, and
+    no name in the previous round's snapshot may vanish from queries()
+    (a silently dropped operator family would otherwise pass every
+    other registry check)."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "tools", "registry_prev_round.txt")) as f:
+        prev = set(f.read().split())
+    missing = sorted(prev - set(entry_mod.queries()))
+    assert not missing, f"queries() lost registered names: {missing}"
+
+
 def test_minhash_keep_best_picks_longest(spark, sf_dir):
     """Exactly one kept doc per cluster, and it is the longest member
     (doc_id tie-break); cluster membership matches dedup_minhash_keep."""
