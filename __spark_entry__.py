@@ -3,19 +3,25 @@
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` /
 ``oracle_sql()`` expose every implemented operator with its DuckDB
 oracle (see SURVEY.md §2 and §7 for the inventory this covers).
+Both pin ``session.QUERY_CONF`` on the caller's session before a query
+builds; the operator functions themselves never touch the conf.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from catme_etl_j_spark.session import apply_query_conf
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-style pricing summary) on sf0.001."""
     from catme_etl_j_spark.operators.relational import q01_pricing_summary
 
+    apply_query_conf(spark)
     return q01_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
@@ -136,11 +142,20 @@ def _reorder(d: dict) -> dict:
     return {**head, **tail}
 
 
+def _with_query_conf(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, *args, **kwargs) -> DataFrame:
+        apply_query_conf(spark)
+        return fn(spark, *args, **kwargs)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _modules():
         out.update(getattr(mod, "QUERIES", {}))
-    return _reorder(out)
+    return {name: _with_query_conf(fn) for name, fn in _reorder(out).items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -34,7 +34,6 @@ def _view_first():
 
 
 def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
@@ -137,7 +136,6 @@ def asof_purchase_view_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion; the oracle's range join is DuckDB-side only). The gap is
     exact microsecond arithmetic on both engines.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
@@ -189,7 +187,6 @@ def asof_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (strict-after / allow_exact_matches=False), on both engines.
     Same single (user, time)-shuffle scale shape as the backward join.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
@@ -240,7 +237,6 @@ def asof_nearest_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. backward, match; equal-timestamp views match backward with
     gap 0). Still one shuffle; no range explosion.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )

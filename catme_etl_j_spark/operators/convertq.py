@@ -26,6 +26,7 @@ from __future__ import annotations
 import itertools
 import os
 import tempfile
+import threading
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,22 +41,41 @@ _SCHEMA = T.StructType([T.StructField(c, T.StringType(), True) for c in _COLS])
 _EPOCH = date(1899, 12, 30)  # 1900-system epoch for post-Feb-1900 serials
 
 
-def _fixture(sf_dir: str) -> str:
-    """Build (once, atomically) the styled xlsx fixture for ``sf_dir``."""
+def _first_lineitems(sf_dir: str) -> list[tuple]:
+    """The fixture rows. A private DuckDB connection: the module-level
+    default one deadlocks when several threads build fixtures at once."""
     import duckdb
 
-    from catme_etl_j_spark.converter.xlsx_writer import Styled, write_xlsx
+    with duckdb.connect() as con:
+        return con.sql(
+            f"SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, "
+            f"l_extendedprice, l_returnflag, CAST(l_shipdate AS DATE) FROM "
+            f"'{sf_dir}/lineitem.parquet' ORDER BY l_orderkey, l_linenumber "
+            f"LIMIT {N_ROWS}"
+        ).fetchall()
+
+
+def _publish(path: str, sheets: dict, **kwargs) -> str:
+    """Write the workbook under a per-process, per-thread temp name and
+    rename it into place: concurrent first builds of one fixture must
+    not interleave writes into a shared temp file."""
+    from catme_etl_j_spark.converter.xlsx_writer import write_xlsx
+
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    write_xlsx(tmp, sheets, **kwargs)
+    os.replace(tmp, path)
+    return path
+
+
+def _fixture(sf_dir: str) -> str:
+    """Build (once, atomically) the styled xlsx fixture for ``sf_dir``."""
+    from catme_etl_j_spark.converter.xlsx_writer import Styled
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = f"/tmp/catme_convq_{tag}_{N_ROWS}.xlsx"
     if os.path.exists(path):
         return path
-    rows = duckdb.sql(
-        f"SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, "
-        f"l_extendedprice, l_returnflag, CAST(l_shipdate AS DATE) FROM "
-        f"'{sf_dir}/lineitem.parquet' ORDER BY l_orderkey, l_linenumber "
-        f"LIMIT {N_ROWS}"
-    ).fetchall()
+    rows = _first_lineitems(sf_dir)
     data: list[list] = [list(_COLS)]
     for ok, ln, pk, qty, price, flag, ship in rows:
         serial = (ship - _EPOCH).days
@@ -70,10 +90,7 @@ def _fixture(sf_dir: str) -> str:
                 Styled(serial, "yyyy-mm-dd"),
             ]
         )
-    tmp = path + ".tmp"
-    write_xlsx(tmp, {"lineitem": data})
-    os.replace(tmp, path)
-    return path
+    return _publish(path, {"lineitem": data})
 
 
 _ORACLE_BASE = f"""
@@ -96,20 +113,13 @@ def _fixture_multisheet(sf_dir: str) -> str:
     multi-sheet union (`sheet_name="*"`), workbookPr date1904 serial
     handling, and custom-format rendering on the oracle gate in one
     query (previously pytest-only)."""
-    import duckdb
-
-    from catme_etl_j_spark.converter.xlsx_writer import Styled, write_xlsx
+    from catme_etl_j_spark.converter.xlsx_writer import Styled
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = f"/tmp/catme_convq_ms_{tag}_{N_ROWS}.xlsx"
     if os.path.exists(path):
         return path
-    rows = duckdb.sql(
-        f"SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, "
-        f"l_extendedprice, l_returnflag, CAST(l_shipdate AS DATE) FROM "
-        f"'{sf_dir}/lineitem.parquet' ORDER BY l_orderkey, l_linenumber "
-        f"LIMIT {N_ROWS}"
-    ).fetchall()
+    rows = _first_lineitems(sf_dir)
     epoch_1904 = date(1904, 1, 1)
     data: list[list] = []
     for ok, ln, pk, qty, price, flag, ship in rows:
@@ -129,10 +139,7 @@ def _fixture_multisheet(sf_dir: str) -> str:
         "part1": [list(_COLS)] + data[:half],
         "part2": [list(_COLS)] + data[half:],
     }
-    tmp = path + ".tmp"
-    write_xlsx(tmp, sheets, date1904=True)
-    os.replace(tmp, path)
-    return path
+    return _publish(path, sheets, date1904=True)
 
 
 _ORACLE_MULTISHEET = f"""

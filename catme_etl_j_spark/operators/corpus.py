@@ -29,7 +29,6 @@ def corpus_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: explode -> partial count (map-side combine) -> final
     count -> per-partition top-k merge. No driver-side loops.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     words = F.explode(F.split(F.trim("text"), " +")).alias("word")
     counts = docs.select(words).groupBy("word").agg(F.count("*").alias("n"))
@@ -47,7 +46,6 @@ LIMIT {TOP_TERMS}
 
 def corpus_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document frequency + smoothed IDF per term (distinct per doc)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()  # one scalar action; reused as a literal
     terms = docs.select(
@@ -84,7 +82,6 @@ def corpus_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator is the real production shape: two vectorized
     regexp_replace passes, zero shuffles.)
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     n_emails = F.regexp_count("text", F.lit(EMAIL_RE)).cast("long")
     n_urls = F.regexp_count("text", F.lit(URL_RE)).cast("long")
@@ -118,7 +115,6 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes, and insertion order, which ``rand(seed)``-based sampling is
     not (it depends on partitioning).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(
         "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"
@@ -152,7 +148,6 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup) -> project, so it costs ONE shuffle regardless of how many
     "stages" the pipeline has conceptually.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     scrubbed = F.regexp_replace(
         F.regexp_replace("text", EMAIL_RE, "<EMAIL>"), URL_RE, "<URL>"
@@ -223,7 +218,6 @@ def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept set. One groupBy(lang) shuffle over pre-aggregated map-side
     partials; rates ride along as a CASE expression, no join.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(
         "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"
@@ -278,7 +272,6 @@ def corpus_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed shuffles, all map-side combining. Ratios are single divisions
     under rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.functions.numeric import rdet as _rdet
 
     docs = load_table(spark, sf_dir, "documents")
@@ -375,7 +368,6 @@ def corpus_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontaminate(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(
         "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"
@@ -498,7 +490,6 @@ def corpus_decontaminate_vs(
     words produce zero grams on both engines (the CASE in
     :func:`_word_grams`), and an empty eval side flags nothing.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     if eval_docs is None:
         eval_docs = docs.filter(F.expr(f"source <=> '{DECON_EVAL_SOURCE}'"))
@@ -628,7 +619,6 @@ def corpus_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select("source", F.md5(F.expr("trim(lower(text))")).alias("fp"))
     dup = (
@@ -764,7 +754,6 @@ def corpus_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
     weights = counts.select(
@@ -846,7 +835,6 @@ def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``posexplode_outer`` keeps InferFiltersFromGenerate from re-inlining
     the staged chunk transform into a pushed filter (plan-guarded).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
     chunks = (
@@ -903,7 +891,6 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, so no full-corpus single-partition window ever runs. The
     result is identical to DuckDB's straight global cumsum.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -975,7 +962,6 @@ def corpus_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     h = F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)")
     ranked = docs.withColumn("h", h).withColumn(
@@ -1037,7 +1023,6 @@ def corpus_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassembly is one groupBy(doc_id) with an order-restoring
     array_sort over (pos, block) structs, not collect_list order.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     blocks = docs.select(
         "doc_id",
@@ -1101,7 +1086,6 @@ def corpus_e2e_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # NO §2.5 spread here, deliberately (r12 negative result, the
     # _prescaled twin): A/B'd spread-vs-not at sf0.1 (1.51 vs 1.36 s
     # medians) and sf1.0 (flat ~5.2 s both core counts) — this
@@ -1273,7 +1257,6 @@ def corpus_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition sort; at 100 TB pre-filter with an approximate
     per-source count to short-circuit sources under the cap).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1306,7 +1289,6 @@ def corpus_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram list is built with ``transform`` over index pairs —
     all built-ins, map-side combinable, one shuffle on the bigram key.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select(F.expr("split(trim(text), ' +')").alias("w"))
     bg = staged.select(
@@ -1354,7 +1336,6 @@ def corpus_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: pure integer counting; DuckDB's SUM(BIGINT)->HUGEINT
     is cast back (convention #5); top-k tie-breaks on (a, b).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split(F.trim("text"), " +")).alias("word"))
     freq = words.groupBy("word").agg(F.count("*").alias("n_word"))
@@ -1412,7 +1393,6 @@ def corpus_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure integer counting; SUM cast per convention #5.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split(F.trim("text"), " +")).alias("word"))
     freq = words.groupBy("word").agg(F.count("*").alias("n_word"))
@@ -1588,7 +1568,6 @@ def corpus_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine by corpus_bpe_merge_step. All ratios are positive
     int64 fixed-point (DIV == // == trunc == floor, convention #7).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     words = docs.select(
         "source", F.explode(F.split(F.trim("text"), " +")).alias("word")
@@ -1716,7 +1695,6 @@ def corpus_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point ``(budget * 1e4) // (n_sources * src_tokens)`` — no
     floats until the display division.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     per = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1777,7 +1755,6 @@ def corpus_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined min aggregation), so the curve costs |vocab| rows after
     the first shuffle — no cumulative re-scans.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
@@ -1847,7 +1824,6 @@ def corpus_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     version is the audit that justifies the bucketing stage in
     corpus_pack_sequences.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.expr("size(split(trim(text), ' +'))").cast("long").alias("n")
@@ -1932,7 +1908,6 @@ def corpus_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     model, 50 rows); the corpus-sized work is the same single
     word-frequency aggregation corpus_bpe_tokenize shares.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("text")
     top = (
         docs.select(F.explode(F.split(F.trim("text"), " +")).alias("word"))
@@ -2005,7 +1980,6 @@ def corpus_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only until one N_SHARDS-key combine; the total broadcasts back
     as a single row. All-int arithmetic (convention #7).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     per = (
         docs.select(
@@ -2086,7 +2060,6 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     it; no driver-side state beyond the top-k merge.
     Empty/whitespace-only docs contribute no words on either engine
     (split-of-empty guard, conv. #9)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     tgt = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
     words = docs.select(
@@ -2200,7 +2173,6 @@ def corpus_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     per = (
         docs.select(
@@ -2310,7 +2282,6 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows bounded by slice cardinality, not corpus size; no joins, no
     windows, no explode (regexp_count avoids materializing tokens).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "source",
@@ -2405,7 +2376,6 @@ def corpus_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     staged = docs.select(
         "doc_id", F.expr("split(trim(text), ' +')").alias("w")
@@ -2538,7 +2508,6 @@ def corpus_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     words = docs.select(
         "doc_id",

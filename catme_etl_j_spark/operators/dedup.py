@@ -99,21 +99,12 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shingles with the portable 32-bit hash h."""
-    return _shingled(spark, sf_dir).select(
-        "doc_id",
-        F.expr("CAST(conv(substr(md5(s), 1, 8), 16, 10) AS BIGINT)").alias("h"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Exact dedup.
 # ---------------------------------------------------------------------------
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: keep the min doc_id of each identical-text group."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("text").agg(
         F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies")
@@ -128,7 +119,6 @@ FROM documents GROUP BY text
 
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text (case/punct/whitespace-folded)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", F.md5(F.expr(NORM_SPARK)).alias("fp"))
@@ -168,7 +158,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         RuntimeWarning,
         stacklevel=2,
     )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # explicit repartition ON THE JOIN KEY: the documents scan is 1-2
     # files and the shingle frame is small in BYTES, so AQE coalesces
     # the join's exchange to ~2 tasks — blind to the O(df^2) OUTPUT
@@ -302,9 +291,9 @@ def _minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + JVM md5 + 32-way min aggregate — the shingle stream
     never leaves its scan task, so the groupBy(doc_id) shuffle is gone
     and the hot plan has no interpreted lambda. Same-session A/B vs
-    the expression pipeline (_minhash_df_expr, kept for the
-    equivalence pin below) recorded in BENCH_LOG.jsonl and
-    OPTIMIZATION_r12.md.
+    the expression pipeline (now ``_minhash_df_expr`` in
+    tests/test_operators.py, the equivalence pin) recorded in
+    BENCH_LOG.jsonl and OPTIMIZATION_r12.md.
     """
     # Guide §2.5 (input parallelism): the map-only pass inherits the
     # scan's split count — one small parquet file would run the whole
@@ -316,20 +305,6 @@ def _minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = ", ".join(["doc_id bigint"] + [f"m{i} bigint" for i in range(NUM_PERM)])
     return docs.mapInPandas(_minhash_rows_pandas, schema)
-
-
-def _minhash_df_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r12 expression pipeline (explode + HOF shingles + JVM
-    md5 + 32 min-aggs). Kept as the equivalence witness:
-    tests/test_operators.py pins ``_minhash_df`` row-identical to this
-    formulation, so the Arrow path can never drift from the portable
-    definition the oracles encode."""
-    h = _hashed(spark, sf_dir)
-    aggs = [
-        F.min((F.lit(PERM_A[i]) * F.col("h") + F.lit(PERM_B[i])) % F.lit(MERSENNE_P)).alias(f"m{i}")
-        for i in range(NUM_PERM)
-    ]
-    return h.groupBy("doc_id").agg(*aggs)
 
 
 def _band_col(j: int, rows_per_band: int = ROWS_PER_BAND):
@@ -398,7 +373,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle to build signatures, one to bucket bands, one to join —
     linear in corpus size; the scale path for 100 TB near-dedup.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     mh = _minhash_df(spark, sf_dir).cache()
     pairs = minhash_lsh_candidates(spark, sf_dir, mh=mh)
     x, y = mh.alias("x"), mh.alias("y")
@@ -454,7 +428,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves stay in [0, 2^32), so no signed-overflow hazard in either
     engine (1<<63 would not fit a BIGINT).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     h = _hashed2(spark, sf_dir)
     half = SIMHASH_BITS // 2
     bit_sums = [
@@ -540,7 +513,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join fan-out — ~256x lower at corpus scale, while equaling the
     exact all-pairs scan (which the oracle runs).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     sig = dedup_simhash(spark, sf_dir).cache()
     # Blocks derived from the constants: low half first, then high half
     # (SIMHASH_BLOCK_BITS bits each; mask = 2^bits - 1). With the
@@ -615,7 +587,6 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     sh = _shingled(spark, sf_dir).cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     # df-cap via a window count instead of groupBy+self-join: one
@@ -681,7 +652,6 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint sets, so the cap can only drop pairs, never inflate
     similarity.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.operators.text import winnow_fps
 
     # The fingerprint map is CPU-bound (O(L) interpreted md5 per row),
@@ -873,7 +843,6 @@ def dedup_minhash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract names but never implements
     (HighVolumeExcelConverter-Contract-v2.0.1.md:45).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     pairs = minhash_lsh_candidates(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("nid"))
     # one pairs consumer: explode each pair into both directions (the
@@ -926,7 +895,6 @@ def dedup_minhash_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``documents`` + one window PARTITIONED BY cluster — no global
     window, no cross product, so it survives a 100 TB corpus.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     pairs = minhash_lsh_candidates(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     # one pairs consumer: explode each pair into both directions (the
@@ -1014,7 +982,6 @@ def dedup_minhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     All similarity arithmetic is exact-int division (deterministic
     IEEE), no rounding needed.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # cached (r11, convention #12): est feeds the intersection join and
     # the output join; sh feeds sizes plus both intersection sides —
     # uncached, the shingle explode ran 3x and the LSH pipeline 2x
@@ -1078,7 +1045,6 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components as dedup_minhash_keep; the histogram itself
     is two tiny aggregations on |docs| rows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     labels = dedup_minhash_keep(spark, sf_dir)
     sizes = labels.groupBy("rep_id").agg(F.count("*").alias("cluster_size"))
     return (
@@ -1114,7 +1080,6 @@ def dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition of the three existing signals; pct in ppm stays
     integer arithmetic.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     total = docs.groupBy().agg(F.count("*").alias("n_docs"))
 
@@ -1219,7 +1184,6 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     here. The full-corpus LSH (dedup_minhash_lsh) is the one-time
     backfill; this is the steady state.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     mh = _minhash_df(spark, sf_dir).cache()
 
     def bands_of(df: DataFrame) -> DataFrame:
@@ -1341,7 +1305,6 @@ def dedup_er_similar_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     represents. At catalog scale the blocks are the shuffle key; a
     hot noun salts exactly like the NN join in similarity.py.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     part = load_table(spark, sf_dir, "part")
     canon = (
         part.groupBy("p_name")
@@ -1406,7 +1369,6 @@ def dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mean est Jaccard stays integer: sum of per-pair agreement counts
     (0..32) DIV'd once, reported in e6 parts of 32 — no float sums.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     mh = _minhash_df(spark, sf_dir).cache()
     x, y = mh.alias("x"), mh.alias("y")
     eq = sum(
@@ -1509,7 +1471,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalized (least, greatest) so each unordered pair counts
     once.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     pairs = minhash_lsh_candidates(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     a = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("sa"))
@@ -1563,7 +1524,6 @@ def dedup_substring_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior ends))), exact int64, no per-token explode. Docs shorter
     than N words contribute zero grams (guarded sequence).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # §2.5 spread: the gram md5 HOF below is interpreted scan-stage CPU
     # and the gram stream is window-shuffled by gh right after
     docs = spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
@@ -1707,7 +1667,6 @@ def dedup_url_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses map-side (min/count are combining aggregates), so a
     billion-variant key still ships one row per mapper.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     # DIV 70 bucket: sources cycle ~every 10 docs in the fixture, so a
     # 70-id bucket revisits each source ~7x — guaranteeing real
@@ -1854,7 +1813,6 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.operators.embed import COV_SCALE, _km_assign
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     comp, assign = _km_assign(spark, sf_dir)
     # 1e4 q-arrays + norms, MAP-ONLY from the raw table: floor(x*1e4
     # + 0.5) is deterministic, so this re-quantization is bit-identical

@@ -38,7 +38,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum, and the summed absolute reconstruction error (int64 at
     1e8).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings")
     stats = (
         emb.select(F.posexplode("embedding").alias("pos", "x"))
@@ -142,7 +141,6 @@ def embed_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
     cols = ["label", "n"] + [f"mean_fp_{i}" for i in range(STAT_DIMS)]
     schema = "label int, n long, " + ", ".join(
@@ -194,7 +192,6 @@ def embed_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only until one (doc, bucket) combine; no feature dictionary,
     no driver state — the property that makes the trick scale-free.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     feats = docs.select(
         "doc_id",
@@ -261,7 +258,6 @@ def embed_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         _prescaled,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = _prescaled(spark, sf_dir)
     sums = (
         emb.select(F.posexplode("fx").alias("pos", "v"))
@@ -514,7 +510,6 @@ def embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.functions.numeric import rdet
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.select(
         F.expr(
@@ -647,7 +642,6 @@ def embed_pca_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     — in unrolled CTEs over HUGEINT, so the gate proves the
     driver-side iteration bit-for-bit (the corpus_bpe_vocab oracle
     discipline)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.select(
         F.expr(
@@ -857,7 +851,6 @@ def embed_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dots, sqrt-double norms, rdet(6) cosine, positive-int fixed-point
     everywhere (convention #7).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     chunk_arr = (
         f"transform(sequence(0, CAST(ceil(size(w) / {E2E_CHUNK_TOKENS}.0) AS INT) - 1), "
@@ -1255,7 +1248,6 @@ def embed_kmeans_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster, dim) partial-aggregated mean — shuffles carry vec-keyed
     rows only; centroid state is K x 64 cells at any corpus size.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     comp, assign = _km_assign(spark, sf_dir)
     return (
         assign.groupBy("cluster")
@@ -1345,7 +1337,6 @@ def embed_nearest_centroid_purity(spark: SparkSession, sf_dir: str) -> DataFrame
     map-side combined), one broadcast-join assignment pass; the
     confusion matrix is |labels|^2 at most.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings")
     comp = _km_comp(spark, sf_dir)
     lbl = emb.select("vec_id", F.col("label").cast("long").alias("label"))

@@ -79,7 +79,6 @@ def scd2_intervals(orders: DataFrame) -> DataFrame:
 def etl_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 history of customer order priority (see
     :func:`scd2_intervals`)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return scd2_intervals(load_table(spark, sf_dir, "orders"))
 
 
@@ -126,7 +125,6 @@ def etl_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equivalent SQL: ``MERGE ... WHEN MATCHED THEN UPDATE WHEN NOT
     MATCHED THEN INSERT``, expressed as one full-outer join on the key.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     totals = orders.groupBy("o_custkey").agg(
@@ -201,7 +199,6 @@ def etl_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is the stored view (tiny, one row per group), only the delta
     is scanned; the merge is a full-outer join on the group key.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
 
     def partial(df: DataFrame) -> DataFrame:
@@ -298,7 +295,6 @@ def etl_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(4096/col)). The 1-row aggregate is then unpivoted driver-free
     with ``stack``.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     aggs = [F.count("*").alias("n_rows")]
     for c, kind in _DQ_COLS:
@@ -353,7 +349,6 @@ def etl_referential_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parent side broadcasts or shuffle-joins as stats dictate (no
     forced hints).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     out = None
     for name, child, fk, parent, pk in _REF_CHECKS:
         c = load_table(spark, sf_dir, child).select(F.col(fk).alias("k"))
@@ -420,7 +415,6 @@ def etl_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse runs to validate an incremental load against a full
     re-extract.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -497,7 +491,6 @@ def etl_scd2_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     history starts after D are correctly absent. ISO date strings
     compare lexicographically, so both engines filter identically.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     hist = etl_scd2_intervals(spark, sf_dir)
     d = F.lit(SCD2_ASOF_DATE)
     return (
@@ -541,7 +534,6 @@ def etl_scd2_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ISO date strings compare lexicographically, identically on both
     engines; revenue stays DECIMAL end to end.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     hist = etl_scd2_intervals(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -615,7 +607,6 @@ def etl_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DQ profiler; the QI-combination count is what a generalization
     search would iterate on.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cust = load_table(spark, sf_dir, "customer")
     grouped = (
         cust.select(
@@ -676,7 +667,6 @@ def etl_retraction_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the delta side scans only CDC rows; the merge is the same
     group-key full-outer join as etl_incremental_agg.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     view = orders.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"), F.sum(dec2("o_totalprice")).alias("s")
@@ -756,7 +746,6 @@ def etl_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     having count; the referential rule is the anti-join from
     etl_referential_check's playbook. Pure int counts.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
 
@@ -926,7 +915,6 @@ def etl_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated groupBy. Monetary math stays in integer cents
     end to end (conv. #2 by way of exact int64; sums < 2^53 so the
     final /100.0 double division is lossless and engine-identical)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     o = load_table(spark, sf_dir, "orders")
     base = (
         o.select(
@@ -1036,7 +1024,6 @@ def etl_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the surrogate key. Both snapshot states come from ONE pass over
     the joined facts via a 2-row broadcast spine. Money stays integer
     cents until the final lossless /100.0."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr("CAST(o_orderdate AS DATE)").alias("d"),
@@ -1137,7 +1124,6 @@ def etl_deletion_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate map-side; each table contributes one row via unionByName
     of three single-row aggregates — three pruned scans total, one per
     audited table."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1255,7 +1241,6 @@ def etl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ONE rollup aggregate that map-side combines to
     |versions|+1 rows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     v1 = orders.filter(F.expr("o_orderkey % 2 = 0")).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1334,7 +1319,6 @@ def etl_scd3_previous_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_orderpriority"
     )
@@ -1413,7 +1397,6 @@ def etl_changelog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined. Cites Hudi COPY_ON_WRITE compaction semantics
     (public docs); reference has no relational surface (SURVEY §2.4).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("k"),
         "l_shipdate",
@@ -1489,7 +1472,6 @@ def etl_watermark_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     |event types| rows; the global max is a broadcast of that tiny
     aggregate, not a second scan.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("CAST(floor(CAST(ts AS DOUBLE)) AS BIGINT)").alias("es"),
@@ -1566,7 +1548,6 @@ def etl_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is on the customer key with per-key fan-in bounded by
     orders-per-customer.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     last_ship = li.groupBy("l_orderkey").agg(

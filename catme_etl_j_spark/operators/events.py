@@ -28,7 +28,6 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling-window counts and value sums per event type."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -54,7 +53,6 @@ GROUP BY 1, 2
 
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute windows sliding every 15 minutes (each event lands in 2)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"))
@@ -80,7 +78,6 @@ GROUP BY 1
 
 def events_dedup_earliest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful-dedup batch analog: first event per (user, type)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
@@ -143,7 +140,6 @@ sess AS (
 
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min): lag + cumulative session ids."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     with_sess = with_session_ids(ev)
     return with_sess.groupBy("user_id", "session_id").agg(
@@ -167,7 +163,6 @@ GROUP BY user_id, session_id
 
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON prop extraction + per-key aggregation."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
@@ -215,7 +210,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     users reached and percent of step-1 users (2 decimals, exact-int
     division).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     s1 = (
         ev.filter(F.col("event_type") == FUNNEL_STEPS[0])
@@ -296,7 +290,6 @@ def events_windowed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no self-join of the full stream); the added mean time-to-convert
     is exact microsecond arithmetic under the fixed-point convention.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     # s1/s2/s3 cached (r11, convention #12): each step frame feeds both
     # the next step's join and its own counts row — uncached, the
@@ -397,7 +390,6 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (cohort_week, week_offset) counting distinct users active that
     week. Retention percent is against the cohort's own size.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     t0 = ev.agg(F.min(F.col("ts").cast("double")).alias("e0"))
     wk = (
@@ -466,7 +458,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size), so the probability join broadcasts. Probability is a
     single exact-int division rounded with rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.functions.numeric import rdet
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
@@ -516,7 +507,6 @@ def events_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integer epoch-day indexes; the LOCF value picks the
     day's last event by the deterministic (ts, event_id) order.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.functions.numeric import rdet
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
@@ -609,7 +599,6 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset into the per-type day series (ADVICE r6: the former
     ``alarm_day_idx`` name invited that misreading).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
     day = F.expr("CAST(floor(CAST(ts AS DOUBLE) / 86400.0) AS BIGINT)")
     daily = (
@@ -705,7 +694,6 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations (per-(type, day), then per-type) joined back on the
     bounded type key — map-side combining everywhere.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.functions.numeric import rdet
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
@@ -789,7 +777,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_list-order dependence), one count; top-10 with path
     tie-break.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     first3 = ev.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
@@ -834,7 +821,6 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic IEEE on both engines. One shuffle (per-user agg);
     the global scalars broadcast.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     per_user = ev.groupBy("user_id").agg(
         F.max(F.col("ts").cast("double")).alias("last_e"),
@@ -947,7 +933,6 @@ def events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-partitioned window (lead) + one per-user
     aggregate — the sessionize profile, co-partitioned end to end.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     staged = ev.select(
@@ -1012,7 +997,6 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-co-partitioned range join (bounded by the 7-day window),
     never a cross product.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter("event_type = 'purchase'").select(
         "user_id",
@@ -1087,7 +1071,6 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping (+1 sorts first) — pinned identically in the oracle.
     Pure int arithmetic end to end.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     sess = (
         with_session_ids(ev)
@@ -1174,7 +1157,6 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     double arithmetic (rdet display rounding); one per-user shuffle,
     then a single-row conditional aggregate.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     # Conversion must discriminate at every SF (any "has event X"
     # predicate saturates on dense fixtures): converted = the user's
@@ -1293,7 +1275,6 @@ def events_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotals broadcast back, the standard distributed scan). Exact
     int arithmetic end-to-end; ties broken by user_id.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("user_id")
     per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     tot = per_user.agg(
@@ -1366,7 +1347,6 @@ def events_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: both engines truncate weeks to Monday; offsets are
     exact integers (Monday-to-Monday day deltas are divisible by 7).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
     j = ev.join(firsts, "user_id")
@@ -1414,7 +1394,6 @@ def events_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: counts are exact ints; the growth ratio is one
     int->double division (identical IEEE both engines) through rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     weekly = (
         ev.groupBy(
@@ -1465,7 +1444,6 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: exact distinct counts; stickiness is one int->double
     division through rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     days = ud.select("day").distinct().select(F.col("day").alias("d"))
@@ -1521,7 +1499,6 @@ def events_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: pure date/int arithmetic; top-k tie-breaks on
     (user_id, start_day).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     w = W.partitionBy("user_id").orderBy("day")
@@ -1573,7 +1550,6 @@ def events_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: exact counts; the rate is one int->double division
     through rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     sess = (
         with_session_ids(ev)
@@ -1622,7 +1598,6 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-seen aggregation (map-side combined on user_id) + one
     distinct count per day; integer ppm share.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     firsts = ud.groupBy("user_id").agg(F.min("day").alias("first_day"))
@@ -1673,7 +1648,6 @@ def events_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(epoch()) on the DuckDB side); the mean is one int->double
     division through rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     sess = (
         with_session_ids(ev)
@@ -1744,7 +1718,6 @@ def events_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass every session consumer already shares) + two tiny per-channel
     aggregates full-outer-joined — no self-join of the event stream.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
     ordered = (
@@ -1832,7 +1805,6 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything after the per-user groupBy runs on the
     |distinct days| aggregate — the event stream shuffles once.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.min(F.expr("unix_micros(ts)")).alias("birth_us"),
@@ -1951,7 +1923,6 @@ def events_heatmap_hour_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned UTC session. One map-side-combined groupBy over at most
     168 cells.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
@@ -1995,7 +1966,6 @@ def events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     motivates the 30-min session gap; this query SHOWS the tail. One
     user-partitioned sort window + a tiny groupBy.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
@@ -2061,7 +2031,6 @@ def events_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sg = 0 OR cv2 < 0.1` disjunct (all-zero gaps are maximally
     metronomic), so bot_suspect is never a NULL boolean.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
@@ -2145,7 +2114,6 @@ def events_feature_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partition by entity key, sort once, evaluate every trailing
     window in the same pass. Labels with NULL value keep NULL
     label_cents on both engines; empty frames coalesce to 0."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -2254,7 +2222,6 @@ def events_periodicity_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar spine, the self-join on day+lag, and the tiny lag frame
     are all bounded by the calendar, not the event count.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("CAST(floor(CAST(ts AS DOUBLE) / 86400.0) AS BIGINT)").alias("d")
     )
@@ -2353,7 +2320,6 @@ def events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-co-partitioned window + one map-side-combined
     per-user aggregate; the top-k is TakeOrdered over |users| rows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (

@@ -65,7 +65,6 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10 power-method rounds of damped PageRank on the nation trade
     graph; returns every nation's final fixed-point rank (int64 at 1e9)
     with its double rendering, ordered by rank."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     edges = _trade_edges(spark, sf_dir)
 
@@ -171,7 +170,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned on the join keys — the canonical Spark triangle
     count.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     und = (
         _trade_edges(spark, sf_dir)
@@ -233,7 +231,6 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     so its cost is sum(deg(n)^2) over neighbors, not |V|^2 — the
     standard scalable formulation; exact int intersection / union.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nbr = _trade_edges(spark, sf_dir).select("src", "dst").distinct()
     sizes = nbr.groupBy("src").agg(F.count("*").alias("n"))
     a = nbr.select(F.col("src").alias("nation_a"), "dst")
@@ -296,7 +293,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-on-shared-neighbor join shape as graph_common_neighbors
     (cost sum(deg²) over neighbors, not |V|²).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     nbr = _trade_edges(spark, sf_dir).select("src", "dst").distinct()
     indeg = nbr.groupBy("dst").agg(F.count("*").alias("n_in"))
     w = indeg.select(
@@ -360,7 +356,6 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=625 keys); everything after runs on the SF-invariant edge set.
     All exact integer counts/sums (convention #5 casts in the oracle).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     edges = _trade_edges(spark, sf_dir)
     out = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("out_degree"),
@@ -436,7 +431,6 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB recursive CTE with a depth cap; MIN(dist) per node
     is exactly the BFS level. All arithmetic is integer.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window as PW
 
     edges_all = _trade_edges(spark, sf_dir)
@@ -702,7 +696,6 @@ def graph_pagerank_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|events| edges across the driver SFs). The gated witness that the
     iterative per-round equi-join loop is right, not just the
     SF-invariant driver-side variant above."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ranks = _pagerank_users_ranks(spark, sf_dir)
     return (
         ranks.select(
@@ -762,7 +755,6 @@ def graph_lpa_communities(
     convention #12). ``checkpoint_every=0`` exposes the untruncated
     plan for the test pins.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ed = _user_edges(spark, sf_dir)
     if checkpoint_every:
         # ed appears on BOTH branches of the union — truncate first so
@@ -1083,7 +1075,6 @@ def graph_s_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     edges = _sym_user_edges(spark, sf_dir).localCheckpoint(eager=False)
     st0 = (
         edges.select(F.col("e1").alias("node"), "w")
@@ -1290,7 +1281,6 @@ def graph_connected_components(
     Reference (waldfalke/catme-etl-j) has no graph surface (SURVEY.md
     §2.4); public algorithm: label propagation CC (Pregel canonical).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ed = _user_edges(spark, sf_dir)
     if checkpoint_every:
         # ed feeds both union branches (conv. #12 — one window pass)
@@ -1449,7 +1439,6 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage (pagerank precedent). alpha_den is a 1-row aggregate
     scalar, not data-sized driver state.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # both loop-invariant frames materialize ONCE: every round (and the
     # audit) re-references nodes, so an uncheckpointed node set would
     # re-scan events per round (the one plan debt the pagerank loop

@@ -54,7 +54,6 @@ def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over an opaque binary column — pure JVM built-ins."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     p = _payloads(spark, sf_dir)
     return p.select(
         "doc_id",
@@ -83,7 +82,6 @@ def multimodal_fake_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing end-to-end on the hash gate. tests/test_multimodal.py
     additionally verifies against a pure-Python recomputation.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     p = _payloads(spark, sf_dir)
 
     schema = "doc_id long, n_bytes long, byte_sum long, byte_min long, byte_max long"
@@ -139,7 +137,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str, width: int = 8, height: 
     the DuckDB oracle can value-compare it (raw binary reprs differ
     across engines; hex is canonical — VERDICT r6 #4).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     p = _payloads(spark, sf_dir)
     schema = "doc_id long, thumb binary, thumb_bytes long"
 
@@ -160,7 +157,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str, width: int = 8, height: 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str, n_frames: int = 4) -> DataFrame:
     """Frame sampling with explode: one row per sampled frame — the
     layout a frame-level feature extractor downstream would consume."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     p = _payloads(spark, sf_dir)
     schema = "doc_id long, frame_idx long, frame_bytes long"
 
@@ -203,7 +199,6 @@ def multimodal_resize_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``multimodal_resize_hex`` sibling (VERDICT r6 #4: one query, one
     oracle — no rows-only asterisk left in the registry).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return multimodal_resize(spark, sf_dir).select(
         "doc_id", F.hex("thumb").alias("thumb_hex"), "thumb_bytes"
     )
@@ -259,7 +254,6 @@ def multimodal_ahash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     p = _payloads(spark, sf_dir).filter(F.length("payload") >= 64)
 
     schema = "doc_id long, hash_hi long, hash_lo long"
@@ -388,7 +382,6 @@ def multimodal_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     output sort; at 100 TB the manifest job is embarrassingly parallel
     and its output (not the blobs) is what the mover shuffles.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     c = CHUNK_BLOB_BYTES
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -471,7 +464,6 @@ def multimodal_payload_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     most 256 rows per doc per task; everything after is bounded by
     |docs| x 256.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     p = _payloads(spark, sf_dir)
     # ONE regex pass chunks the hex string into bytes. The obvious
     # transform(sequence(...), i -> substring(hx, i*2-1, 2)) is

@@ -83,7 +83,6 @@ def range_join_price_bands(spark, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.functions.numeric import dec2, money2
     from catme_etl_j_spark.sources.tables import load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     bands = spark.range(_N_BANDS).select(
         F.col("id").alias("band_id"),
         (F.col("id") * _BAND_W).alias("lo"),
@@ -136,7 +135,6 @@ def range_join_session_peak(spark, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.operators.events import with_session_ids
     from catme_etl_j_spark.sources.tables import load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     sess = (
         with_session_ids(ev)
@@ -265,7 +263,6 @@ def range_month_in_flight(spark, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.functions.numeric import money2
     from catme_etl_j_spark.sources.tables import load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", F.to_date("l_shipdate").alias("ship")
     )

@@ -50,7 +50,6 @@ def rank_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = tf * (ln((N + 1) / (df + 1)) + 1), reported and ranked as
     floor(score * 1e4 + 0.5) fixed-point; rank ties break on term ASC.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     # 1-row corpus size as a broadcast aggregate — no driver-side
     # .count() action; the scalar folds into the one plan.
@@ -208,7 +207,6 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rank_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 docs by fixed-point BM25 score with doc_id tie-break
     (see :func:`_bm25_scored` for the formula and join strategy)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return (
         _bm25_scored(spark, sf_dir)
         .orderBy(F.desc("score_fp"), F.asc("doc_id"))
@@ -290,7 +288,6 @@ def rank_postings_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     column (not registered in ``queries()`` — non-scalar outputs are
     banned from the gate by tests/test_operators.py's schema policy).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     pairs = (
         docs.select("doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term"))
@@ -350,7 +347,6 @@ def rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scored lists are the local-scale artifact; at 100 TB ranks
     come from the same per-partition top-k + merge as the ANN path.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.operators.similarity import (
         QUERY_VEC_ID,
         _prescaled,
@@ -453,7 +449,6 @@ def rank_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     q = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
     rel = (
@@ -589,7 +584,6 @@ def rank_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every score_e9 NULL-propagates; the doc_id ASC tie-break alone
     then orders the top-k the same way on both engines).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     # cached (r11, convention #12): four consumers (dl, the |C|/V
     # aggregate, ctf, the match prune) re-exploded the corpus into 7
@@ -769,7 +763,6 @@ def rank_smart_lnc_ltc(spark: SparkSession, sf_dir: str) -> DataFrame:
     only remaining parquet reads are column-pruned count-star scans
     for N.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     ndf = docs.agg(F.count("*").alias("n_docs"))
     toks = docs.select(

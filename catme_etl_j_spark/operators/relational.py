@@ -29,12 +29,6 @@ from catme_etl_j_spark.functions.numeric import avg4, dec2, dec4, money2, rdet
 from catme_etl_j_spark.sources.tables import load_table
 
 
-def _prep(spark: SparkSession) -> None:
-    # Deterministic oracle comparison requires UTC rendering; set it on
-    # whatever session the driver hands us (runtime-settable conf).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 def _ds(c, fmt: str = "yyyy-MM-dd"):
     """Temporal output convention: render as string (see module doc)."""
     return F.date_format(c, fmt)
@@ -45,7 +39,6 @@ def _ds(c, fmt: str = "yyyy-MM-dd"):
 # ---------------------------------------------------------------------------
 
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
@@ -87,7 +80,6 @@ GROUP BY l_returnflag, l_linestatus
 # ---------------------------------------------------------------------------
 
 def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp")
@@ -134,7 +126,6 @@ LIMIT 10
 # ---------------------------------------------------------------------------
 
 def q05_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     region = F.broadcast(load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA"))
     nation = F.broadcast(load_table(spark, sf_dir, "nation"))
     cust = load_table(spark, sf_dir, "customer")
@@ -173,7 +164,6 @@ GROUP BY n_name
 # ---------------------------------------------------------------------------
 
 def q06_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -201,7 +191,6 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-0
 # ---------------------------------------------------------------------------
 
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
@@ -237,7 +226,6 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def join_semi_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     open_orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     return cust.join(
@@ -253,7 +241,6 @@ WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_ord
 
 
 def join_anti_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
@@ -273,7 +260,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 # ---------------------------------------------------------------------------
 
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -298,7 +284,6 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
@@ -323,7 +308,6 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_gs")
     return spark.sql(
         """
@@ -352,7 +336,6 @@ GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey))
 # ---------------------------------------------------------------------------
 
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     part = load_table(spark, sf_dir, "part")
     w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
     return (
@@ -374,7 +357,6 @@ WHERE rn <= 3
 
 
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
@@ -400,7 +382,6 @@ FROM orders
 
 
 def window_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev_price = F.lag(dec2("o_totalprice")).over(w)
@@ -426,7 +407,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 
 
 def window_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     supp = load_table(spark, sf_dir, "supplier")
     w = W.partitionBy("s_nationkey").orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
     wv = W.partitionBy("s_nationkey").orderBy(F.asc("s_acctbal"))
@@ -457,7 +437,6 @@ WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey ASC)
 # ---------------------------------------------------------------------------
 
 def setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
@@ -471,7 +450,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 
 
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
@@ -485,7 +463,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 
 
 def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     n = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     # subtract == EXCEPT DISTINCT — structurally the oracle's EXCEPT
@@ -506,7 +483,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 # ---------------------------------------------------------------------------
 
 def fn_string_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -550,7 +526,6 @@ FROM part
 
 
 def fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -588,7 +563,6 @@ FROM orders
 # ---------------------------------------------------------------------------
 
 def pivot_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     p = (
         orders.groupBy("o_orderpriority")
@@ -614,7 +588,6 @@ GROUP BY o_orderpriority
 
 
 def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -632,7 +605,6 @@ LIMIT 15
 
 
 def distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
@@ -656,7 +628,6 @@ GROUP BY o_orderpriority
 
 
 def having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_nationkey")
@@ -678,7 +649,6 @@ HAVING COUNT(*) >= 5
 
 
 def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation_avg = cust.groupBy("c_nationkey").agg(
         avg4(F.sum(dec2("c_acctbal")), F.count("*")).alias("nation_avg_bal")

@@ -18,10 +18,6 @@ from catme_etl_j_spark.functions.numeric import avg4, dec2, dec4, money2, rdet, 
 from catme_etl_j_spark.sources.tables import load_table
 
 
-def _prep(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))"
 
 
@@ -30,7 +26,6 @@ _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL
 # ---------------------------------------------------------------------------
 
 def q04_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     cond = (orders.o_orderkey == li.l_orderkey) & (
@@ -58,7 +53,6 @@ GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def q08_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -99,7 +93,6 @@ FROM rev
 # ---------------------------------------------------------------------------
 
 def q14_promo_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     j = li.join(part, li.l_partkey == part.p_partkey)
@@ -138,7 +131,6 @@ FROM m
 # ---------------------------------------------------------------------------
 
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -181,7 +173,6 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     avg_bal = cust.agg(
@@ -211,7 +202,6 @@ WHERE c_acctbal > (
 # ---------------------------------------------------------------------------
 
 def cross_join_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     region = load_table(spark, sf_dir, "region").select("r_name")
     status = load_table(spark, sf_dir, "orders").select("o_orderstatus").distinct()
     return region.crossJoin(status)
@@ -228,7 +218,6 @@ FROM region CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) s
 # ---------------------------------------------------------------------------
 
 def agg_string_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     supp = load_table(spark, sf_dir, "supplier")
     return supp.groupBy("s_nationkey").agg(
         F.array_join(F.array_sort(F.collect_list("s_name")), ",").alias("suppliers"),
@@ -250,7 +239,6 @@ FROM supplier GROUP BY s_nationkey
 # ---------------------------------------------------------------------------
 
 def agg_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     sums = cust.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
@@ -292,7 +280,6 @@ FROM s
 # ---------------------------------------------------------------------------
 
 def agg_median_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     ranked = orders.select(
@@ -335,7 +322,6 @@ FROM mid GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def fn_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.trim("text"), " +")
     return docs.select(
@@ -374,7 +360,6 @@ def fn_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     no map type at all: the same facts fall out of the pre-map grouped
     relation, which is exactly the point of the check.
     """
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     per = cust.groupBy("c_nationkey", "c_mktsegment").agg(F.count("*").alias("n"))
     m = per.groupBy("c_nationkey").agg(
@@ -411,7 +396,6 @@ GROUP BY c_nationkey
 
 def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics intersection (keeps duplicate multiplicity)."""
-    _prep(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersectAll(s)
@@ -426,7 +410,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 
 def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics difference."""
-    _prep(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.exceptAll(s)
@@ -444,7 +427,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 # ---------------------------------------------------------------------------
 
 def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
@@ -476,7 +458,6 @@ FROM customer
 
 def join_nullsafe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality (<=>) join on a derived nullable key."""
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.nullif(F.col("c_nationkey") % 5, F.lit(0)).alias("k")
     )
@@ -499,7 +480,6 @@ GROUP BY c.k
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 30-day order total per customer via a RANGE frame over a
     day-number ordering (value-based frame, not row-based)."""
-    _prep(spark)
     orders = load_table(spark, sf_dir, "orders")
     day_num = F.datediff(F.col("o_orderdate"), F.lit("1990-01-01").cast("date")).cast("long")
     w = (
@@ -531,7 +511,6 @@ FROM orders
 # ---------------------------------------------------------------------------
 
 def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     offered = (
@@ -565,7 +544,6 @@ SELECT l_partkey, l_suppkey, s_name, min_price FROM ranked WHERE rn = 1
 # ---------------------------------------------------------------------------
 
 def q07_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -615,7 +593,6 @@ HAVING COUNT(*) >= 3
 def q09_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The star schema lacks partsupp; supply cost is modeled as 60% of
     p_retailprice (deterministic decimal arithmetic both sides)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     supp = load_table(spark, sf_dir, "supplier")
@@ -659,7 +636,6 @@ def fn_udtf_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import udtf
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     @udtf(returnType="word string, n bigint")
     class TopWords:
@@ -712,7 +688,6 @@ def fn_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _lt(spark, sf_dir, "events")
     # try_parse_json: malformed payloads become NULL variants (plain
     # parse_json FAILFASTs — degenerate-probe find); the DuckDB twin
@@ -776,7 +751,6 @@ def fn_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.functions.udfs import token_count_udf
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _lt(spark, sf_dir, "documents")
     toks = docs.select("source", token_count_udf("text").alias("n_tok"))
     return (
@@ -820,7 +794,6 @@ def fn_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.functions.numeric import dec2, money2
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = _lt(spark, sf_dir, "lineitem")
     x = li.select(F.expr("nullif(l_quantity, 1.0)").alias("x"))
     return x.agg(
@@ -865,7 +838,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative windows over |distinct quantities| rows; the answer is
     a MIN over qualifying values.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.expr("CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)").alias("q"),

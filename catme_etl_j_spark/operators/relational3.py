@@ -60,10 +60,6 @@ from catme_etl_j_spark.functions.numeric import (
 from catme_etl_j_spark.sources.tables import load_table
 
 
-def _prep(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))"
 
 
@@ -75,7 +71,6 @@ _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL
 # ---------------------------------------------------------------------------
 
 def q12_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     late = li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
@@ -106,7 +101,6 @@ GROUP BY l_linestatus
 # ---------------------------------------------------------------------------
 
 def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "5-LOW"
@@ -137,7 +131,6 @@ GROUP BY c_count
 # ---------------------------------------------------------------------------
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -174,7 +167,6 @@ WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
 # ---------------------------------------------------------------------------
 
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -215,7 +207,6 @@ WHERE l_quantity < 0.2 * avg_qty
 # ---------------------------------------------------------------------------
 
 def q19_banded_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -259,7 +250,6 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 A
 # ---------------------------------------------------------------------------
 
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     supp = load_table(spark, sf_dir, "supplier")
@@ -322,7 +312,6 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") < 12)
     vals = (
@@ -367,7 +356,6 @@ WHERE value_dec * 10000 > total_dec
 # ---------------------------------------------------------------------------
 
 def q16_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#13")
@@ -410,7 +398,6 @@ GROUP BY p_brand, p_type, p_size
 # ---------------------------------------------------------------------------
 
 def q20_promotable_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -469,7 +456,6 @@ WHERE s_suppkey IN (SELECT l_suppkey FROM qual)
 def unpivot_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.operators.relational import pivot_order_status
 
-    _prep(spark)
     wide = pivot_order_status(spark, sf_dir)
     return wide.unpivot(
         ids=["o_orderpriority"],
@@ -508,7 +494,6 @@ LATERAL (SELECT c_custkey, c_acctbal FROM {customer}
 
 
 def lateral_top2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_lv")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_lv")
     return spark.sql(_LATERAL_SQL.format(nation="nation_lv", customer="customer_lv"))
@@ -528,7 +513,6 @@ def window_revenue_7dma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from catme_etl_j_spark.functions.numeric import dec2, money2, rdet
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(dec2("o_totalprice")).alias("rev"), F.count("*").alias("n_orders")
@@ -590,7 +574,6 @@ def window_ewma_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the groupBy(target) map-side combines. This is the
     general recipe for any bounded non-associative window at 100 TB.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(dec2("o_totalprice")).alias("rev")
@@ -663,7 +646,6 @@ def fn_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     since g's difference form is antisymmetric and exact. Map-only
     expression work + one small groupBy; share in exact ppm.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = "array(" + ", ".join(str(v) for v in _BDAY_PARTIAL) + ")"
@@ -730,7 +712,6 @@ def window_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         F.expr(
@@ -797,7 +778,6 @@ def unpivot_lineitem_charges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.functions.numeric import rdet
 
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     long = li.select(
         "l_orderkey", "l_extendedprice", "l_discount", "l_tax"
@@ -851,7 +831,6 @@ LATERAL (SELECT p_partkey, p_retailprice FROM {part}
 
 
 def lateral_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
     load_table(spark, sf_dir, "part").createOrReplaceTempView("part_lv")
     return spark.sql(_LATERAL_PARTS_SQL.format(part="part_lv"))
 
@@ -885,7 +864,6 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(
@@ -981,7 +959,6 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from catme_etl_j_spark.functions.numeric import dec2, dec2dbl, rdet
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(F.to_date("o_orderdate").alias("day"))

@@ -110,7 +110,6 @@ def scale_salted_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted aggregation is value-identical to the direct groupBy the
     oracle runs: decimal partial sums are associative, so splitting
     the hot key across 16 salts changes the shuffle shape only."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return salted_group_sum(spark, sf_dir).orderBy("l_returnflag")
 
 
@@ -136,7 +135,6 @@ def scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly fact-join strategy: pay the layout once, join free
     forever after.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     write_bucketed(spark, sf_dir)
     return bucketed_join(spark).orderBy("o_orderpriority")
 
@@ -164,7 +162,6 @@ def scale_partitioned_prune(
     """
     import os
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     tag = os.path.basename(sf_dir.rstrip("/"))
     # out_dir override exists so tests exercise the rewrite logic in a
     # private directory instead of racing the gate's shared cache.
@@ -219,7 +216,6 @@ def scale_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: share_ppm is pure int64 arithmetic (cnt*1e6 DIV
     total); top-k tie-breaks on user_id.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count("*").alias("n_rows"))
     total = ev.groupBy().agg(F.count("*").alias("total"))
@@ -254,7 +250,6 @@ def scale_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmaps scale to big domains. The exact distinct count is emitted
     alongside to prove equality on the gate.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cust = load_table(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_mktsegment")
@@ -336,7 +331,6 @@ def scale_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
@@ -430,7 +424,6 @@ def scale_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite job's shuffle. All integers; DIV truncation identical
     on both engines (convention #7; all operands non-negative).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "props")
     day = F.expr("CAST(floor(CAST(ts AS DOUBLE) / 86400.0) AS BIGINT)")
     per = (
@@ -528,7 +521,6 @@ def scale_minmax_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention #7); day indexes via epoch seconds under the UTC
     session (convention #3).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     day = _EPOCH_DAY.format(c="l_shipdate")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").cast("long").alias("ok"),
@@ -634,7 +626,6 @@ def scale_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode to (strategy, file) groups); everything after the first
     aggregate is bounded by PRUNE_FILES.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     day = _EPOCH_DAY.format(c="l_shipdate")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").cast("long").alias("ok"),
@@ -760,7 +751,6 @@ def scale_merge_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     |partitions x bins| rows. At 100 TB file metadata is ~millions of
     rows; every stage here is partition-local.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window as W
 
     li = load_table(spark, sf_dir, "lineitem")

@@ -212,7 +212,6 @@ _EMB_NZ = _EMB_NZ_BARE + " embeddings"
 
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k for the query vector, excluding itself."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     qfx, qnorm, _ = _query_vec(spark, sf_dir)
     emb = _prescaled(spark, sf_dir).filter(F.col("vec_id") != QUERY_VEC_ID)
     cos = rdet(
@@ -269,7 +268,6 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     qfx, qnorm, _ = _query_vec(spark, sf_dir)
     allv = _prescaled(spark, sf_dir).filter(F.col("vec_id") != QUERY_VEC_ID)
     cos = rdet(
@@ -360,7 +358,6 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     pre = _prescaled(spark, sf_dir)
     queries = pre.filter(F.col("vec_id") < BATCH_Q).select(
         F.col("vec_id").alias("qid"),
@@ -413,7 +410,6 @@ ORDER BY qid, rank
 
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style top-k: scan only the query's coarse cluster (label)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     qfx, qnorm, qlabel = _query_vec(spark, sf_dir)
     emb = _prescaled(spark, sf_dir).filter(
         (F.col("vec_id") != QUERY_VEC_ID) & (F.col("label") == qlabel)
@@ -569,7 +565,6 @@ def ann_nn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     size. The pool build itself is two bounded-partition windows,
     never a whole-label sort on one task.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = _prescaled(spark, sf_dir).cache()  # reused by both join sides
     a = emb.select(
         F.col("vec_id").alias("vec_id"),
@@ -797,7 +792,6 @@ def _bucket_pairs_pandas(pdf):
 
 
 def ann_lsh_hyperplane_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = _prescaled(spark, sf_dir)
     # r11 (guide §2.3/§4.2, second pass): ONE cogrouped stage replaces
     # the banded self-join + distinct + two fx joins + per-pair Arrow
@@ -1206,7 +1200,6 @@ def ann_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation (argmin_cid_pandas and _lloyd_round_cents docstrings
     carry the NULL-edge and float(int) arguments). Construction now
     runs real jobs, so the query is bench EAGER_CONSTRUCTION."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings")
     fx4 = emb.select(
         "vec_id", "label", F.expr(_fx4_expr("embedding")).alias("fx4")
@@ -1371,7 +1364,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages total instead of PQ_M*(PQ_ITERS+1), and the ADC probe is one
     broadcast LUT join + per-vector sum instead of PQ_M chained joins.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load_table(spark, sf_dir, "embeddings")
     fx = emb.select(
         "vec_id", "label", F.expr(_fx4_expr("embedding")).alias("fv")
@@ -1542,7 +1534,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + agg (see dedup._connected_components). This is how you dedup
     a corpus by semantic similarity rather than surface text.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from catme_etl_j_spark.operators.dedup import _connected_components
 
     pairs = ann_lsh_hyperplane_pairs(spark, sf_dir)
@@ -1645,7 +1636,6 @@ def ann_lsh_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (store vectors bucketed by band hash) and stage 2 touches a few
     thousand rows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     fx, _ = _query_fx(spark, sf_dir)  # one key lookup serves all three
     qfx, qnorm, qbuckets = _fx_literal(fx), _fx_norm(fx), _query_buckets(fx)
     emb = _prescaled(spark, sf_dir).filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -1713,7 +1703,6 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is trivially broadcast; the heavy lifting is the two scans,
     which at 100 TB are exactly the production ANN paths under test.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     bf = ann_topk_bruteforce(spark, sf_dir).select("vec_id")
     ivf = ann_topk_ivf(spark, sf_dir).select("vec_id")
     overlap = bf.join(ivf, "vec_id").agg(F.count("*").alias("n_overlap"))
@@ -1766,7 +1755,6 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integers), tie-broken by vec_id — so Spark's greedy loop and the
     oracle's unrolled 5-step SQL agree bit-for-bit.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     qfx, qnorm, _ = _query_vec(spark, sf_dir)
     emb = _prescaled(spark, sf_dir).filter(F.col("vec_id") != QUERY_VEC_ID)
     cand = (
@@ -1890,7 +1878,6 @@ def rank_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     pre = _prescaled(spark, sf_dir)
     queries = pre.filter(F.col("vec_id") < MRR_Q).select(
         F.col("vec_id").alias("qid"),
@@ -1993,7 +1980,6 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from functools import reduce
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     qfx, _ = _query_fx(spark, sf_dir)
     emb = _prescaled(spark, sf_dir).filter(F.col("vec_id") != QUERY_VEC_ID)
     sel = [F.col("vec_id")]

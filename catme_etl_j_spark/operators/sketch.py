@@ -103,7 +103,6 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the same scan. Output is one row with the exact count, the
     estimate, buckets used, and the relative error in percent.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     sh = _shingles(spark, sf_dir).withColumn("h", F.md5("shingle"))
     tagged = sh.select(
         "shingle",
@@ -208,7 +207,6 @@ def sketch_countmin_topwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-20 probe re-derives each word's 4 cells and joins the
     (tiny, broadcast) grid, taking min over rows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     words = _words(spark, sf_dir)
     cells = words.select(
         "word", F.explode(F.expr(f"sequence(0, {CMS_D - 1})")).alias("i")
@@ -291,7 +289,6 @@ def sketch_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``c_acctbal > 5000``: probe rows, exact semi-join matches, rows
     passing the Bloom filter, false positives, and the FP rate among
     true non-members (percent, 2 decimals)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     # cached (r11, convention #12): dim feeds the bit build AND the
@@ -394,7 +391,6 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p90/p99 of orders.o_totalprice from a 2048-bin equi-width
     histogram, audited against the exact type-1 quantile (value at row
     ceil(q*N) of the (value, key)-sorted data)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
@@ -573,7 +569,6 @@ def sketch_hll_merge_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customers per order priority via per-group HLL registers,
     plus the merged-union global row — register merge = per-bucket MAX,
     estimates vs exact counts on the gate."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"), "o_custkey"
     )
@@ -671,7 +666,6 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Estimator arithmetic is pure int64 (integer DIV; all operands
     positive, so DuckDB ``//`` truncation == floor — convention #7).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     sh = (
         docs.withColumn("ws", F.split(F.trim("text"), " +"))
@@ -840,7 +834,6 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign_r(x) = parity of md5 nibble r of the shingle — bit-identical
     in DuckDB.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cnt = (
         _shingles(spark, sf_dir)
         .groupBy("shingle")
@@ -958,7 +951,6 @@ def sketch_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams for the inner product to correlate); same BIGINT-before-
     division rule (DuckDB DECIMAL // rounds).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     sh = (
         docs.withColumn("ws", F.split(F.trim("text"), " +"))
@@ -1123,7 +1115,6 @@ def sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     a, b = _THETA_A, _THETA_B
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(a, b)
@@ -1350,7 +1341,6 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # §2.5 spread: shingle generation is interpreted scan-stage CPU and
     # the stream is immediately distinct-shuffled by (source, h)
     docs = spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
@@ -1563,7 +1553,6 @@ def sketch_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupied bits; the merged row re-uses the per-type bit frame
     (lazily checkpointed — conv. #12) rather than re-scanning events.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())

@@ -69,7 +69,6 @@ def stats_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 3 groups x 6 numbers. At 100 TB the shuffle payload is still
     18 numbers; the scan dominates and is column-pruned to 3 columns.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem")
     xy = li.select(
         "l_returnflag",
@@ -148,7 +147,6 @@ def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single agg row carries every moment, then explodes to 6 rows
     driver-free). The map-side partial agg means the shuffle carries
     one row per task regardless of table size."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem")
     fx = li.select(
         *[_fx(c, _CORR_SCALE).alias(c) for c in _CORR_COLS]
@@ -270,7 +268,6 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay integral, the outlier comparison is one int->double cast and
     one double multiply — identical IEEE both engines.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderpriority",
@@ -374,7 +371,6 @@ def stats_chi2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is |levels_a| x |levels_b| regardless of row count; the
     marginals are window sums over that tiny frame.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("observed")
@@ -435,7 +431,6 @@ def stats_mode_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: quantities are integral (exact cents cast), counts
     exact, share_ppm pure int64 arithmetic, tie-break on value.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem")
     vals = li.select(
         "l_returnflag", _fx("l_quantity", 100.0).alias("qty_c")
@@ -487,7 +482,6 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _lt(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
@@ -577,7 +571,6 @@ def stats_gini_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer terms (one rank window + one agg, both partitioned by
     source), so only the final division is floating point.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     w = W.partitionBy("source").orderBy("n_chars", "doc_id")
     ranked = docs.select(
@@ -648,7 +641,6 @@ def stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The synthetic prices are uniform-ish, so the DELTA columns show a
     strong non-Benford signature — which is the point of the audit.)
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     digit = F.expr(
         "CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS STRING), 1, 1) AS INT)"
@@ -721,7 +713,6 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.sources.tables import load_table as _lt
     from pyspark.sql import Window as W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _lt(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
@@ -803,7 +794,6 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = _lt(spark, sf_dir, "orders")
     cents = _fx("o_totalprice", 100.0)
     per = orders.select(
@@ -899,7 +889,6 @@ def stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = _lt(spark, sf_dir, "orders")
     # r11 (convention #12): global-bounds bucketing is inherently two
     # passes (min/max, then bucket) — cache the projected cents so both
@@ -1011,7 +1000,6 @@ def stats_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.sources.tables import load_table as _lt
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = _lt(spark, sf_dir, "lineitem")
     part = _lt(spark, sf_dir, "part").select("p_partkey", "p_type")
     baskets = (
@@ -1105,7 +1093,6 @@ def stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect size are IEEE doubles through rdet. sigma = 0 (all values
     tied) CASEs z to NULL on both engines (convention #9).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("purchase", "click"))
@@ -1244,7 +1231,6 @@ def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive global-row_number formulation, so the gate itself proves
     histogram-walk ≡ rank-pick (the range_month_in_flight precedent).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(
@@ -1370,7 +1356,6 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. Zero rank variance (all x or all y tied) CASEs rho
     to NULL (convention #9).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem").select(
         _fx("l_quantity", 100.0).alias("x"),
         _fx("l_extendedprice", 100.0).alias("y"),
@@ -1461,7 +1446,6 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     (size bounded by level cardinality, not rows); marginals are window
     sums over that tiny frame.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     cells = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("obs")
@@ -1556,7 +1540,6 @@ def stats_jensen_shannon_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy to |priorities| rows; all
     windows/crossJoins run over that bounded frame.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     per = (
         orders.select(
@@ -1660,7 +1643,6 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact table collapses to |days| rows first; every window
     after that is bounded by the calendar.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
@@ -1817,7 +1799,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence DESCENDS on negative spans) and every output statistic is
     NULL on both engines.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(
@@ -1958,7 +1939,6 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF-invariant — 25 nations means 300 pairs at any data size).
     Convention #9: zero groups / all-tied metrics yield NULL tau.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     bal = cust.groupBy(F.col("c_nationkey").cast("long").alias("nk")).agg(
@@ -2115,7 +2095,6 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combines on the replicate id. Convention #9: an empty
     orders table gives n_days = 0 and NULL statistics on both engines.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     cents = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
     urgent = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
@@ -2251,7 +2230,6 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny cell frame and broadcasts back. No windows, no second fact
     scan.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     cells = (

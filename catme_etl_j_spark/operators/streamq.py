@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import dec2, money2
 from catme_etl_j_spark.operators.events import _SLIDING_SQL, _TS_FMT, _TUMBLING_SQL
+from catme_etl_j_spark.session import apply_query_conf
 
 _seq = itertools.count()
 
@@ -33,7 +34,6 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming engine (complete mode) over the events files."""
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         money2(F.sum(dec2("value"))).alias("sum_value"), F.count("*").alias("n")
@@ -62,7 +62,6 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin events_sliding_window."""
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w")).agg(
         F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value")
@@ -97,7 +96,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id").agg(
         F.count("*").alias("n_events"),
@@ -171,7 +169,6 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
 
     def update(key, pdfs, state):
@@ -239,7 +236,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     clicks = (
         read_event_stream(spark, sf_dir, glob="events.parquet")
         .filter("event_type = 'click'")
@@ -320,7 +316,6 @@ def stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.streaming.events import WATERMARK, read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s1 = read_event_stream(spark, sf_dir, glob="events.parquet")
     s2 = read_event_stream(spark, sf_dir, glob="events.parquet")
     deduped = (
@@ -434,7 +429,6 @@ def run_late_stream(spark: SparkSession, sf_dir: str):
     drop metrics."""
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = _late_fixture_dir(sf_dir)
     schema = T.StructType(
         [
@@ -532,7 +526,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = _upsert_fixture_dir(sf_dir)
     state_root = f"{src}_state_{next(_seq)}_{os.getpid()}"
     cur = f"{state_root}/cur"
@@ -626,7 +619,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from catme_etl_j_spark.sources.tables import load_table
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -674,8 +666,9 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     store keeps every key in executor heap, while RocksDB spills state
     to local disk with incremental checkpointing, so watermarked state
     can exceed memory. Same complete-mode-equals-batch determinism as
-    the other stream_* queries; the provider conf is restored after
-    the run so sibling queries keep the default.
+    the other stream_* queries; the provider is set on a child session
+    (``newSession``: shared context, own conf), so the caller's session
+    — and any query running on it concurrently — keeps its provider.
 
     Per (day, event_type): count + exact DECIMAL sum; the oracle is
     the plain batch SQL — equality proves the state backend swap
@@ -683,38 +676,28 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from catme_etl_j_spark.streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        ev = read_event_stream(spark, sf_dir, glob="events.parquet")
-        agg = ev.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-        ).agg(
-            F.count("*").alias("n"),
-            money2(F.sum(dec2("value"))).alias("sum_value"),
-        )
-        name = f"streamq_rocksdb_{next(_seq)}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return spark.table(name).select("day", "event_type", "n", "sum_value")
+    child = spark.newSession()
+    apply_query_conf(child)
+    child.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
+    ev = read_event_stream(child, sf_dir, glob="events.parquet")
+    agg = ev.groupBy(
+        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
+        "event_type",
+    ).agg(
+        F.count("*").alias("n"),
+        money2(F.sum(dec2("value"))).alias("sum_value"),
+    )
+    name = f"streamq_rocksdb_{next(_seq)}"
+    q = (
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return child.table(name).select("day", "event_type", "n", "sum_value")
 
 
 _ROCKSDB_SQL = """
@@ -749,7 +732,6 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     fixture = _upsert_fixture_dir(sf_dir)
     root = f"/tmp/catme_ckpt_{os.path.basename(sf_dir.rstrip('/'))}_{next(_seq)}_{os.getpid()}"
     src, cp = f"{root}/src", f"{root}/cp"

@@ -62,7 +62,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalize very short docs, high punctuation density, and
     stopword-free (likely non-linguistic) text.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     words = _words()
     n_words = F.size(words).cast("long")
@@ -115,7 +114,6 @@ FROM t
 
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID with a deterministic CASE tie-break."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     words = _words()
     hits = {lang: _stop_hits(words, sw) for lang, sw in LANG_STOPWORDS.items()}
@@ -164,7 +162,6 @@ FROM t
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + a BPE-ish regex token count (letter runs,
     digit runs, and single punctuation marks each count as one token)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     bpe_pattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
     return docs.select(
@@ -190,7 +187,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     The normalized-md5 fingerprint is the standard exact-dedup key for
     web corpora: cheap, order-stable, and groupable at any scale.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -216,7 +212,6 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold comparisons are bit-identical across engines; the rounded
     columns are display-only.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     # Materialize the split arrays ONCE per row. String-inlining the
     # split(...) into every consumer re-evaluates the regexp split per
@@ -327,7 +322,6 @@ def winnow_fps(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -> DataFra
 def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowed fingerprint summary per normalized document: number of
     distinct selected fingerprints and their exact int64 checksum."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     return winnow_fps(docs).select(
         "doc_id",
@@ -409,7 +403,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative (filter(w, x -> x = d) per distinct gram) is O(len^2)
     per doc and was deliberately avoided.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
     base = staged.select(
@@ -564,7 +557,6 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distinct token — O(len^2) per document under interpreted HOF
     eval — and was deliberately replaced (VERDICT r3 "what's wrong #2").
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
     base = staged.select("doc_id", F.expr("size(w)").cast("long").alias("n_tokens"))
@@ -631,7 +623,6 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not per occurrence), fixed-pointed at 1e6 (functions/numeric.py
     ln-on-the-gate precedent); per-doc sums are exact ints.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
     db = (
@@ -714,7 +705,6 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary). One groupBy over a per-row expression; share is one
     division under rdet against a 1-row broadcast total.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     b = docs.select(
         F.expr("CAST(length(bin(size(split(trim(text), ' +')))) AS BIGINT)").alias("bucket")
@@ -768,7 +758,6 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the first combine are bounded by docs x alphabet, not by
     corpus bytes.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     chars = docs.select(
         "doc_id", F.explode(F.expr("filter(split(text, ''), c -> c <> '')")).alias("ch")
@@ -826,7 +815,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram key) -> join back on the gram — the same linear shuffle
     profile as corpus_doc_frequency. Ratios are exact-int divisions.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     # stage the split once (multiply-referenced non-cheap alias stays
     # its own Project — see text_gopher_quality)
@@ -893,7 +881,6 @@ def text_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window) and the follow-up aggregate map-side
     combines to |sources| x 4 rows.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -937,7 +924,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals per-word summation); the formula is fixed double constants
     times int->double ratios — identical IEEE both engines, then rdet.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     n_words = F.expr("size(split(trim(text), ' +'))").cast("long")
     n_sent = F.greatest(F.expr("regexp_count(text, '[.!?]+')"), F.lit(1)).cast("long")
@@ -994,7 +980,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcastable); phrase assembly groups on (doc, phrase_id) —
     co-partitioned with the explode. Nothing touches |corpus|² .
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1112,7 +1097,6 @@ def text_lm_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: train stats are the usual one-shuffle aggregates; the
     eval side joins them on the gram key, co-partitioned.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select(
         "doc_id",
@@ -1232,7 +1216,6 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation that precedes the join); totals broadcast as one row;
     TakeOrdered for the top-k.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select(F.expr("split(trim(text), ' +')").alias("w"))
     # cached (r11, convention #12): staged feeds both explodes, uni has
@@ -1340,7 +1323,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fit runs over the 100-row head (a bounded single-partition
     window — bounded by ZIPF_TOP_K, never by corpus size).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(_words()).alias("word"))
@@ -1428,7 +1410,6 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one explode -> (source, word) map-side-combined count, one
     per-source aggregate; output rows = |sources|.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select("source", F.explode(_words()).alias("word"))
@@ -1514,7 +1495,6 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs no guard: split('') = [''] gives n_words = 1 on both engines
     and every ratio stays defined.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select(
         "doc_id", F.expr("split(trim(text), ' +')").alias("w")
@@ -1641,7 +1621,6 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     four consumers don't re-expand the corpus scan (conv. #12).
     top-k is a rounded-value sort with a gram tie-break (conv. #6).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select(F.expr("split(trim(text), ' +')").alias("w"))
     bt = (

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.operators.corpus import DECON_N, EMAIL_RE, EVAL_PCT, URL_RE
+from catme_etl_j_spark.session import apply_query_conf
 from catme_etl_j_spark.sources.tables import load_table
 
 
@@ -38,7 +39,7 @@ class CorpusPipeline:
     underlying DataFrames are immutable, so is this)."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, df: DataFrame | None = None):
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        apply_query_conf(spark)
         self._spark = spark
         self._sf_dir = sf_dir
         self._df = (

@@ -7,8 +7,12 @@ chosen to also be the right default on a large cluster:
   so plans adapt when the 100x-scale data distribution differs from test.
 * ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster AQE coalescing makes the initial number mostly moot.
-* UTC session timezone — required for DuckDB-oracle comparability and
-  the only sane choice for a multi-region corpus.
+* ``QUERY_CONF``, the query-session policy: UTC session timezone
+  (required for DuckDB-oracle comparability and the only sane choice for
+  a multi-region corpus) and parquet nanos read as int64. ``get_spark``
+  builds with it; the registry (``__spark_entry__``) and the public
+  facades re-pin it with ``apply_query_conf`` on whatever session they
+  are handed, so operator code never calls ``spark.conf.set``.
 * Arrow enabled — all pandas-UDF paths (xlsx source, multimodal, ANN)
   transfer columnar batches, not pickled rows.
 """
@@ -21,6 +25,21 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Runtime confs every query builds and runs under: UTC rendering and
+# events.ts TIMESTAMP(NANOS) read as int64 (tables._normalize_ts).
+QUERY_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def apply_query_conf(spark: SparkSession) -> None:
+    """Pin ``QUERY_CONF`` on ``spark`` (the driver's session is not
+    guaranteed to carry it). Left set afterwards: Arrow/pandas nodes
+    read the session zone when the plan executes, not when it builds."""
+    for key, value in QUERY_CONF.items():
+        spark.conf.set(key, value)
+
 
 def get_spark(app_name: str = "catme_etl_j_spark", cpus: str | None = None) -> SparkSession:
     """Return (or create) the singleton SparkSession with engine defaults."""
@@ -32,7 +51,6 @@ def get_spark(app_name: str = "catme_etl_j_spark", cpus: str | None = None) -> S
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -42,6 +60,7 @@ def get_spark(app_name: str = "catme_etl_j_spark", cpus: str | None = None) -> S
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/catme_spark_warehouse"),
         )
+        .config(map=QUERY_CONF)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -73,9 +73,9 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     because float division loses precision above 2^53) and plain
     TIMESTAMP(MICROS) isAdjustedToUTC=false (reads as TIMESTAMP_NTZ —
     cast to TimestampType; identity on the stored micros because every
-    events query sets the session zone to UTC before loading). DuckDB
-    applies the same ns->us floor truncation, so parity holds."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    query runs under ``session.QUERY_CONF``, which pins the session zone
+    to UTC and turns on nanos-as-long). DuckDB applies the same ns->us
+    floor truncation, so parity holds."""
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     return _normalize_ts(df)
 

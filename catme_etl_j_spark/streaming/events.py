@@ -50,7 +50,6 @@ def read_event_stream(
 
     from catme_etl_j_spark.sources.tables import _normalize_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch = spark.read
     if glob:
         batch = batch.option("pathGlobFilter", glob)

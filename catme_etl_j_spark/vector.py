@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.operators import similarity as S
+from catme_etl_j_spark.session import apply_query_conf
 
 _TOPK_STRATEGIES = ("exact", "ivf", "ivf_kmeans", "pq", "lsh")
 
@@ -36,7 +37,7 @@ class VectorIndex:
     """Thin, immutable facade; construction is free (lazy plans)."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        apply_query_conf(spark)
         self._spark = spark
         self._sf_dir = sf_dir
 

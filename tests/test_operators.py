@@ -134,12 +134,31 @@ def test_minhash_band_knob_validated(spark, sf_dir):
     assert strict <= loose
 
 
+def _minhash_df_expr(spark, sf_dir):
+    """The pre-r12 expression pipeline (explode + HOF shingles + JVM
+    md5 + 32 min-aggs), the equivalence witness for the Arrow path."""
+    from pyspark.sql import functions as F
+
+    from catme_etl_j_spark.operators.dedup import (
+        MERSENNE_P, NUM_PERM, PERM_A, PERM_B, _shingled)
+
+    h = _shingled(spark, sf_dir).select(
+        "doc_id",
+        F.expr("CAST(conv(substr(md5(s), 1, 8), 16, 10) AS BIGINT)").alias("h"),
+    )
+    aggs = [
+        F.min((F.lit(PERM_A[i]) * F.col("h") + F.lit(PERM_B[i])) % F.lit(MERSENNE_P)).alias(f"m{i}")
+        for i in range(NUM_PERM)
+    ]
+    return h.groupBy("doc_id").agg(*aggs)
+
+
 def test_minhash_arrow_matches_expression_pipeline(spark, sf_dir):
     """r12: the map-only Arrow minhash pass (_minhash_rows_pandas) must
     be row-identical to the expression pipeline it replaced (explode +
     HOF shingles + JVM md5 + 32 min-aggs) — exceptAll both ways empty,
     so the portable-hash definition the oracles encode can never drift."""
-    from catme_etl_j_spark.operators.dedup import _minhash_df, _minhash_df_expr
+    from catme_etl_j_spark.operators.dedup import _minhash_df
 
     new = _minhash_df(spark, sf_dir)
     old = _minhash_df_expr(spark, sf_dir)
@@ -548,6 +567,84 @@ def test_registry_keeps_every_prev_round_query():
         prev = set(f.read().split())
     missing = sorted(prev - set(entry_mod.queries()))
     assert not missing, f"queries() lost registered names: {missing}"
+
+
+def _rows_digest(df) -> str:
+    """Order-insensitive digest of a query's columns and rows."""
+    import hashlib
+
+    norm = _norm(df.columns, [tuple(r) for r in df.collect()])
+    return hashlib.sha256(repr((sorted(df.columns), norm)).encode()).hexdigest()
+
+
+@pytest.mark.slow
+def test_registry_window_non_utc_session_and_threads(spark, sf_dir):
+    """The registry owns the query-session policy (session.QUERY_CONF):
+    the 50-entry gate window, run from 8 threads in ONE session whose
+    zone was set to America/New_York, hashes exactly like a serial run
+    in the default UTC session. graph_pagerank_users (a lag window
+    partitioned by epoch day of the zone-cast events.ts) built UNwrapped
+    under New York hashes differently, so a missing policy is visible."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    qs = entry_mod.queries()
+    window = list(qs)[:50]
+    zone_key = "spark.sql.session.timeZone"
+
+    def run(name: str) -> str:
+        return _rows_digest(qs[name](spark, sf_dir))
+
+    try:
+        serial = {n: run(n) for n in window}
+
+        spark.conf.set(zone_key, "America/New_York")
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            threaded = dict(zip(window, pool.map(run, window)))
+        assert [n for n in window if threaded[n] != serial[n]] == []
+
+        probe = "graph_pagerank_users"
+        assert probe in window
+        spark.conf.set(zone_key, "America/New_York")  # the wrappers re-pinned UTC
+        assert _rows_digest(qs[probe].__wrapped__(spark, sf_dir)) != serial[probe]
+    finally:
+        spark.conf.set(zone_key, "UTC")
+
+
+def test_convert_fixture_builds_from_threads(sf_dir, tmp_path):
+    """Eight threads building one fresh convert fixture at once all
+    return one valid workbook (a shared DuckDB default connection
+    deadlocked here, GIL held, so the build runs in a child process
+    with a timeout; a shared temp name could interleave writes)."""
+    import glob
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    src = tmp_path / f"sf_threads_{os.getpid()}"
+    src.symlink_to(sf_dir)
+    build = (
+        "import sys, threading\n"
+        "from catme_etl_j_spark.operators import convertq\n"
+        "paths = []\n"
+        "ts = [threading.Thread(target=lambda: paths.append(convertq._fixture(sys.argv[1])))\n"
+        "      for _ in range(8)]\n"
+        "for t in ts: t.start()\n"
+        "for t in ts: t.join()\n"
+        "print(len(paths), *set(paths))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", build, str(src)],
+            cwd=repo, capture_output=True, text=True, timeout=120, check=True,
+        ).stdout.split()
+        assert out[0] == "8" and len(out) == 2
+        assert zipfile.ZipFile(out[1]).testzip() is None
+        assert glob.glob(f"{out[1]}.*") == []
+    finally:
+        for p in glob.glob(f"/tmp/catme_convq_{src.name}_*"):
+            os.remove(p)
 
 
 def test_minhash_keep_best_picks_longest(spark, sf_dir):

@@ -306,3 +306,33 @@ def test_checkpoint_resume_runs_and_asserts_recovery(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     assert sum(r["n"] for r in rows) == ev.count()
     assert len(rows) == 5
+
+
+def test_rocksdb_stream_keeps_caller_provider(spark, sf_dir):
+    """stream_rocksdb_daily_totals sets the RocksDB state store on a
+    child session only: the caller's provider conf never changes, not
+    even while the stream runs (a concurrent query would inherit it)."""
+    import threading
+
+    from catme_etl_j_spark.operators.streamq import stream_rocksdb_daily_totals
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    before = spark.conf.get(key, None)
+    seen: set = set()
+    done = threading.Event()
+
+    def watch() -> None:
+        while not done.is_set():
+            seen.add(spark.conf.get(key, None))
+            done.wait(0.05)
+
+    watcher = threading.Thread(target=watch)
+    watcher.start()
+    try:
+        rows = stream_rocksdb_daily_totals(spark, sf_dir).collect()
+    finally:
+        done.set()
+        watcher.join()
+    assert rows
+    assert seen == {before}
+    assert spark.conf.get(key, None) == before

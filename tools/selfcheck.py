@@ -99,7 +99,8 @@ def main() -> int:
     # and vanilla-session practices existed but left no evidence).
     # SELFCHECK_VANILLA=1 swaps the repo's session factory for a bare
     # driver-style session (local[8], default 200 shuffle partitions,
-    # no UTC/Arrow/AQE conf) — queries must self-provision their conf.
+    # no UTC/Arrow/AQE conf) — the queries() wrappers must provision
+    # session.QUERY_CONF themselves.
     vanilla = os.environ.get("SELFCHECK_VANILLA") == "1"
     parts = ["vanilla-session"] if vanilla else []
     tz = os.environ.get("TZ")
