@@ -2472,7 +2472,6 @@ FROM documents d LEFT JOIN perdoc p USING (doc_id)
 # --- content-defined chunking (Muthitacharoen 2001 LBFS / FastCDC
 # --- family, public) --------------------------------------------------
 CDC_MASK = 32   # breakpoint when gram-hash % CDC_MASK == 0 (~32-word chunks)
-CDC_GRAM = 3    # rolling context width in words
 CDC_TOP = 100   # report rows
 
 

@@ -33,11 +33,12 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from catme_etl_j_spark.operators.text import NORM_DUCK, NORM_SPARK
+from catme_etl_j_spark.plans.iterate import iterate
 from catme_etl_j_spark.sources.tables import load_table, spread_small_scan
 
 # --- portable MinHash constants (shared by Spark exprs and oracle SQL) ---
@@ -742,38 +743,24 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     O(diameter) to O(log diameter) — measured at sf0.1 the LSH-edge
     components took 9 plain-propagation steps vs 6 with halving
     (shallow 2-step MinHash components are unaffected). Each
-    MATERIALIZATION round runs TWO steps (the per-round fixed costs —
-    eager localCheckpoint AQE replan + convergence-probe job,
-    convention #15 — dominate at small frames and are paid half as
-    often; every intermediate has exactly one consumer so the fused
-    lineage never re-expands). Every rep value is itself a node id,
-    so the halving shortcut is an equi-join against the round base's
-    checkpointed materialization — a scan, not a recompute. The
-    fixpoint (min label per component) is unchanged: halving only
-    ever lowers a label toward the same minimum the DuckDB oracles
-    converge to (their unrolled rounds use the same rep-of-rep
-    shortcut).
+    ``iterate`` round (eager checkpoint, convention #15) runs TWO
+    steps, so the per-round fixed costs are paid half as often; every
+    intermediate has exactly one consumer, so the fused lineage never
+    re-expands. Every rep value is itself a node id, so the halving
+    shortcut is an equi-join against the round base's checkpointed
+    materialization — a scan, not a recompute. The fixpoint (min label
+    per component) is unchanged: halving only ever lowers a label
+    toward the same minimum the DuckDB oracles converge to (their
+    unrolled rounds use the same rep-of-rep shortcut).
 
-    ``localCheckpoint`` truncates the growing lineage; on a cluster
-    use a checkpoint dir for fault tolerance instead. Convergence test
-    is the sum of labels: propagation only ever lowers a label, so an
-    unchanged sum means a fixpoint.
-
-    r12 (VERDICT r11 #1b/#4 — cut the per-round serial floor): the
-    convergence probe no longer schedules its own job. Both steps'
-    label sums ride the checkpoint materialization as observed metrics
-    (``Dataset.observe``; the eager localCheckpoint IS a SQL execution,
-    so the metrics resolve from that job — probed empirically, and
-    eager=False does NOT run the final stage, so the fold requires the
-    eager default). Comparing the two WITHIN-round sums also detects a
-    fixpoint reached on the round's first step: step 2 changing nothing
-    (sum(m1) == sum(m2), exact integers, per-node monotone non-
-    increasing, so equal sums == equal labels) proves m1 was already a
-    fixpoint — shallow closures (MinHash components converge in 1-2
-    steps) now finish in ONE materialization round instead of two, and
-    the old separate initial-sum job is gone entirely.
+    Convergence test: both steps' label sums ride the round's
+    checkpoint as observed metrics (convention #16 — no probe job).
+    Propagation only ever lowers a label, so equal sums within a round
+    (exact integers, per-node monotone non-increasing) mean step 2
+    changed nothing: the fixpoint is reached, possibly on the round's
+    FIRST step — shallow closures (MinHash components converge in 1-2
+    steps) finish in ONE round.
     """
-    from pyspark.sql import Observation
     # Materialize the edge set ONCE before iterating: without this,
     # every round's join re-executes the edges' full upstream pipeline
     # (for LSH edges: shingle -> minhash -> band self-join), multiplying
@@ -787,7 +774,6 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         nodes.select(F.col("nid").alias("src"), F.col("nid").alias("dst"))
     ).localCheckpoint()
     labels = nodes.select(F.col("nid"), F.col("nid").alias("rep")).localCheckpoint()
-    rounds = 0
 
     def _step(cur: DataFrame, halve_vs: DataFrame | None) -> DataFrame:
         nxt = (
@@ -812,28 +798,21 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             )
         return nxt
 
-    while True:
-        # TWO propagation steps per materialization: each intermediate
-        # below has exactly one consumer, so the lineage stays linear
-        # and un-re-expanded, while the per-round fixed costs (eager
-        # localCheckpoint AQE replan — convention #15) are paid half as
-        # often. Halving is skipped in the first round's first step,
-        # where labels is the identity map and the shortcut is provably
-        # a no-op join. Both steps' sums ride the checkpoint job as
-        # observed metrics (zero probe jobs — see the docstring); equal
-        # sums within the round mean step 2 changed nothing, i.e. the
-        # fixpoint is reached (possibly on the round's FIRST step).
+    obs1 = obs2 = None
+
+    def round_(labels: DataFrame, k: int) -> DataFrame:
+        nonlocal obs1, obs2
+        # halving is skipped in the first round, where labels is the
+        # identity map and the shortcut is provably a no-op join
+        base = labels if k > 1 else None
         obs1, obs2 = Observation(), Observation()
-        m1 = _step(labels, labels if rounds > 0 else None).observe(
-            obs1, F.sum("rep").alias("s")
-        )
-        m2 = _step(m1, labels if rounds > 0 else None).observe(
-            obs2, F.sum("rep").alias("s")
-        )
-        labels = m2.localCheckpoint()
-        rounds += 1
-        if obs2.get["s"] == obs1.get["s"]:
-            return labels
+        m1 = _step(labels, base).observe(obs1, F.sum("rep").alias("s"))
+        return _step(m1, base).observe(obs2, F.sum("rep").alias("s"))
+
+    labels, _ = iterate(
+        labels, round_, None, every=1, stop=lambda: obs1.get == obs2.get
+    )
+    return labels
 
 
 def dedup_minhash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:

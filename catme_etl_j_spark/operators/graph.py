@@ -34,9 +34,10 @@ Reference (waldfalke/catme-etl-j) has no graph surface (SURVEY.md
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from catme_etl_j_spark.plans.iterate import iterate
 from catme_etl_j_spark.sources.tables import load_table
 
 PR_SCALE = 1_000_000_000  # int64 fixed-point
@@ -423,10 +424,13 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph where
     distances genuinely vary and some nations are unreachable (-1);
     the source is the backbone's strongest hub (max outgoing weight,
-    smallest key on ties — data-dependent but deterministic). Each round: frontier ⋈ edges -> dedup -> anti-
-    join against visited; the edge set is localCheckpoint'd once
-    before the loop and each round's visited set re-checkpoints so
-    lineage stays flat (the dedup._connected_components lesson).
+    smallest key on ties — data-dependent but deterministic). Each
+    round k: frontier (the level-(k-1) rows of the visited set) ⋈
+    edges -> dedup -> anti-join against visited, unioned onto it; the
+    edge set is localCheckpoint'd once before the loop and the rounds
+    run through ``iterate``, which checkpoints the visited set every
+    round and stops at the first empty level (an observed count on
+    that checkpoint, no probe job).
 
     Oracle: DuckDB recursive CTE with a depth cap; MIN(dist) per node
     is exactly the BFS level. All arithmetic is integer.
@@ -454,22 +458,28 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()
     )
     source = int(src_row["src"])
-    dist = spark.createDataFrame(
-        [(source, 0)], "node long, dist long"
-    ).localCheckpoint()
-    frontier = dist
-    for level in range(1, BFS_MAX_DEPTH + 1):
+    obs = None
+
+    def step(dist: DataFrame, k: int) -> DataFrame:
+        nonlocal obs
+        obs = Observation()
+        frontier = dist.filter(F.col("dist") == k - 1)
         nxt = (
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .withColumn("dist", F.lit(level).cast("long"))
+            .withColumn("dist", F.lit(k).cast("long"))
         )
-        if nxt.count() == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        return dist.unionByName(nxt.observe(obs, F.count(F.lit(1)).alias("c")))
+
+    dist, _ = iterate(
+        spark.createDataFrame([(source, 0)], "node long, dist long"),
+        step,
+        BFS_MAX_DEPTH,
+        every=1,
+        stop=lambda: obs.get["c"] == 0,
+    )
     nations = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("node"), "n_name"
     )
@@ -521,25 +531,22 @@ ORDER BY node
 # SF-invariant aggregate and iterating driver-side; this operator is the
 # witness for the OTHER regime: a graph whose node count grows with the
 # data (users) where per-round state can never visit the driver. Every
-# round is a ranks-onto-edges equi-join + groupBy aggregate, with
-# periodic localCheckpoint to truncate the iterative lineage — the same
-# loop discipline as dedup._connected_components.
+# round is a ranks-onto-edges equi-join + groupBy aggregate, run through
+# plans.iterate like every other checkpointed loop.
 
 PRU_ITERS = 5  # fixed unrolled rounds (oracle unrolls the same 5 CTEs)
 PRU_TOPK = 20
-PRU_CHECKPOINT_EVERY = 2
 
 
-def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, dst, w): the user-interaction graph via TEMPORAL ADJACENCY —
-    a directed edge from the previous event's user to this event's user
-    within the same (event_type, day), ordered by (ts, event_id).
+def _user_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, src): every event's user beside the previous event's
+    user (NULL for the first) within the same (event_type, day),
+    ordered by (ts, event_id) — the one events pass every user-graph
+    frame derives from.
 
-    Each event contributes at most one edge, so |E| <= |events| by
-    construction — linear at any corpus size, unlike same-window
-    co-occurrence (quadratic in group size). The lag window partitions
-    on (event_type, day): ~|types| x |days| keys, so partitions stay
-    bounded as the corpus grows along the calendar.
+    The lag window partitions on (event_type, day): ~|types| x |days|
+    keys, so partitions stay bounded as the corpus grows along the
+    calendar.
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "user_id"
@@ -548,7 +555,11 @@ def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", F.expr("CAST(floor(CAST(ts AS DOUBLE) / 86400.0) AS BIGINT)")
     )
     w = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    adj = ev.withColumn("src", F.lag("user_id").over(w))
+    return ev.withColumn("src", F.lag("user_id").over(w)).select("user_id", "src")
+
+
+def _adj_edges(adj: DataFrame) -> DataFrame:
+    """(src, dst, w): the directed edges of a ``_user_adj`` frame."""
     return (
         adj.filter(F.col("src").isNotNull() & (F.col("src") != F.col("user_id")))
         .groupBy("src", F.col("user_id").alias("dst"))
@@ -556,8 +567,20 @@ def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, w): the user-interaction graph via TEMPORAL ADJACENCY —
+    a directed edge from the previous event's user to this event's user
+    within the same (event_type, day).
+
+    Each event contributes at most one edge, so |E| <= |events| by
+    construction — linear at any corpus size, unlike same-window
+    co-occurrence (quadratic in group size).
+    """
+    return _adj_edges(_user_adj(spark, sf_dir))
+
+
 def _pagerank_users_ranks(
-    spark: SparkSession, sf_dir: str, checkpoint_every: int = PRU_CHECKPOINT_EVERY
+    spark: SparkSession, sf_dir: str, checkpoint_every: int = PRU_ITERS
 ) -> DataFrame:
     """Final fixed-point ranks after PRU_ITERS Pregel-shaped rounds.
 
@@ -586,28 +609,18 @@ def _pagerank_users_ranks(
     graph (conv. #9): an empty node spine empties every downstream
     frame, which is exactly the oracle's result.
 
-    ``checkpoint_every`` is exposed so tests can pin the UNtruncated
-    plan (proving the per-round joins); the shipped query truncates at
-    4 sites — adjacency, ew, round K-1 (the audit's `prev`), round K.
+    The shipped cadence takes no eager round checkpoint (five rounds of
+    |V|-sized state): besides the adjacency, spine and ew frames only
+    the audit's two round frames truncate. ``checkpoint_every=0``
+    exposes the untruncated plan for the test pins.
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", "ts", "event_id", "user_id"
-    )
-    ev = ev.filter(F.col("user_id").isNotNull()).withColumn(
-        "day", F.expr("CAST(floor(CAST(ts AS DOUBLE) / 86400.0) AS BIGINT)")
-    )
-    w = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    adj = ev.withColumn("src", F.lag("user_id").over(w)).select("user_id", "src")
+    adj = _user_adj(spark, sf_dir)
     if checkpoint_every:
         # the ONE pass over the largest table: edge list and node
         # spine both read this materialization (at 100 TB this cache
         # is the window shuffle's output — the cost you pay anyway)
         adj = adj.localCheckpoint(eager=False)
-    edges = (
-        adj.filter(F.col("src").isNotNull() & (F.col("src") != F.col("user_id")))
-        .groupBy("src", F.col("user_id").alias("dst"))
-        .agg(F.count("*").alias("w"))
-    )
+    edges = _adj_edges(adj)
     nodes = adj.select("user_id").distinct()
     nb = (
         nodes.agg(F.count("*").cast("long").alias("n"))
@@ -633,24 +646,18 @@ def _pagerank_users_ranks(
     ew = edges.join(outw, "src").select("src", "dst", "w", "outw")
     if checkpoint_every:
         ew = ew.localCheckpoint(eager=False)
-    ranks = nwb.select("node", F.col("r0").cast("long").alias("r"))
-    prev = None
-    for k in range(1, PRU_ITERS + 1):
-        contrib = (
-            ew.join(ranks, ew.src == ranks.node)
-            .select(
-                "dst",
-                F.expr("r * w DIV outw").alias("c"),
-                F.lit(None).cast("long").alias("base"),
-            )
+
+    def step(ranks: DataFrame, k: int) -> DataFrame:
+        contrib = ew.join(ranks, ew.src == ranks.node).select(
+            "dst",
+            F.expr("r * w DIV outw").alias("c"),
+            F.lit(None).cast("long").alias("base"),
         )
-        if k == PRU_ITERS:
-            prev = ranks
         # union-rebase: every node contributes one zero row carrying
         # its base scalar, so ONE aggregate yields sum(c) (0 for
         # isolated nodes) AND the base (max ignores the NULLs on the
         # contribution rows; each node has exactly one spine row)
-        ranks = (
+        return (
             contrib.unionByName(
                 nwb.select(
                     F.col("node").alias("dst"),
@@ -666,19 +673,17 @@ def _pagerank_users_ranks(
             )
             .select(F.col("dst").alias("node"), "r")
         )
-        if checkpoint_every and k == PRU_ITERS - 1:
-            # the audit's `prev` frame — truncate so the audit join
-            # reads a materialization, not rounds 1..K-1 again
-            ranks = ranks.localCheckpoint(eager=False)
+
+    ranks, prev = iterate(
+        nwb.select("node", F.col("r0").cast("long").alias("r")),
+        step,
+        PRU_ITERS,
+        every=checkpoint_every,
+    )
     # Convergence audit (VERDICT r8 #4): total absolute rank movement
     # in the final round, exact int64 — 0 means the power iteration
     # reached its integer fixpoint inside PRU_ITERS rounds; a nonzero
     # residual makes the fixed-round cut visible in the result.
-    # Convention #12 (VERDICT r9 #1): the final-round frame is
-    # referenced TWICE (audit join + output) — lazily checkpoint it so
-    # the last round computes once, not once per consumer.
-    if checkpoint_every:
-        ranks = ranks.localCheckpoint(eager=False)
     audit = (
         ranks.join(prev.select("node", F.col("r").alias("pr")), "node")
         .agg(
@@ -748,12 +753,9 @@ def graph_lpa_communities(
 
     Scale shape per round: labels-onto-edges equi-join + one (node,
     label) partial-aggregated sum + one per-node partial-aggregated
-    max — all co-shuffled on the node key, no per-round sort; labels
-    localCheckpoint every 2 rounds, exactly the pagerank_users loop
-    discipline, plus lazy truncations of the round-(K-1) and round-K
-    frames (each has 2 consumers: the audit join and the next stage —
-    convention #12). ``checkpoint_every=0`` exposes the untruncated
-    plan for the test pins.
+    max — all co-shuffled on the node key, no per-round sort; the
+    rounds run through ``iterate`` (``checkpoint_every=0`` exposes the
+    untruncated plan for the test pins).
     """
     ed = _user_edges(spark, sf_dir)
     if checkpoint_every:
@@ -775,16 +777,8 @@ def graph_lpa_communities(
         .distinct()
         .withColumn("lbl", F.col("node"))
     )
-    prev = None
-    for k in range(1, LPA_ITERS + 1):
-        # Convention #12 (VERDICT r9 #1): the frame ENTERING the final
-        # round is referenced by round K's join AND kept as `prev` for
-        # the audit — truncate it here unless the cadence already did
-        # ((LPA_ITERS-1) % 2 != 0, so round K-1 is un-checkpointed).
-        if k == LPA_ITERS:
-            if checkpoint_every and (k - 1) % checkpoint_every != 0:
-                labels = labels.localCheckpoint(eager=False)
-            prev = labels
+
+    def step(labels: DataFrame, k: int) -> DataFrame:
         nbr_lbl = both.join(
             labels.select(F.col("node").alias("nbr"), F.col("lbl").alias("nlbl")),
             "nbr",
@@ -801,7 +795,7 @@ def graph_lpa_communities(
             .select("node", (-F.col("m.nl")).alias("new_lbl"))
         )
         # double-mod parity: identical for negative ids on every engine
-        labels = labels.join(best, "node", "left").select(
+        return labels.join(best, "node", "left").select(
             "node",
             F.when(
                 F.expr("((node % 2) + 2) % 2") == k % 2,
@@ -810,12 +804,8 @@ def graph_lpa_communities(
             .otherwise(F.col("lbl"))
             .alias("lbl"),
         )
-        if checkpoint_every and k % checkpoint_every == 0 and k < LPA_ITERS:
-            labels = labels.localCheckpoint()
-    # final-round frame feeds the audit join AND the community count:
-    # lazy checkpoint = round K computes once (convention #12)
-    if checkpoint_every:
-        labels = labels.localCheckpoint(eager=False)
+
+    labels, prev = iterate(labels, step, LPA_ITERS, every=checkpoint_every)
     audit = (
         labels.join(prev.select("node", F.col("lbl").alias("plbl")), "node")
         .agg(
@@ -833,11 +823,10 @@ def graph_lpa_communities(
     )
 
 
-def _lpa_sql() -> str:
-    """DuckDB twin: LPA_ITERS semi-synchronous rounds unrolled as CTEs;
-    the argmax uses the same QUALIFY row_number (tw DESC, lbl ASC) and
-    the same parity gate on which nodes update."""
-    head = """
+# DuckDB twin of `_user_adj` (the temporal-adjacency lag window), the
+# head of every user-graph oracle's WITH list; kept apart from the Spark
+# builder so each oracle stays independent of the code it checks.
+_USER_ADJ_CTES = """
 WITH ev AS (
   SELECT event_type, CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS day,
          ts, event_id, user_id
@@ -846,7 +835,14 @@ adj AS (
   SELECT user_id AS dst,
          lag(user_id) OVER (PARTITION BY event_type, day ORDER BY ts, event_id) AS src
   FROM ev),
-edges AS MATERIALIZED (
+"""
+
+
+def _lpa_sql() -> str:
+    """DuckDB twin: LPA_ITERS semi-synchronous rounds unrolled as CTEs;
+    the argmax uses the same QUALIFY row_number (tw DESC, lbl ASC) and
+    the same parity gate on which nodes update."""
+    head = _USER_ADJ_CTES + """edges AS MATERIALIZED (
   SELECT src, dst, COUNT(*)::BIGINT AS w
   FROM adj WHERE src IS NOT NULL AND src <> dst
   GROUP BY src, dst),
@@ -897,16 +893,7 @@ LIMIT {LPA_TOPK}"""
 def _pagerank_users_sql() -> str:
     """DuckDB twin: the same PRU_ITERS integer rounds unrolled as CTEs
     (the corpus_bpe recursive-oracle precedent, unrolled form)."""
-    head = f"""
-WITH ev AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS day,
-         ts, event_id, user_id
-  FROM events WHERE user_id IS NOT NULL),
-adj AS (
-  SELECT user_id AS dst,
-         lag(user_id) OVER (PARTITION BY event_type, day ORDER BY ts, event_id) AS src
-  FROM ev),
-edges AS MATERIALIZED (
+    head = _USER_ADJ_CTES + f"""edges AS MATERIALIZED (
   SELECT src, dst, COUNT(*)::BIGINT AS w
   FROM adj WHERE src IS NOT NULL AND src <> dst
   GROUP BY src, dst),
@@ -1014,8 +1001,6 @@ def _s_core_round(
         # materializes upstream stages but not the final one); the
         # frame was materialized either way — the probe job is the
         # saving, one per round.
-        from pyspark.sql import Observation
-
         obs = Observation()
         alive = alive.observe(obs, F.count(F.lit(1)).alias("c")).localCheckpoint()
     nxt = ea.join(
@@ -1174,16 +1159,7 @@ def graph_s_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s_core_sql() -> str:
-    head = f"""
-WITH ev AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS day,
-         ts, event_id, user_id
-  FROM events WHERE user_id IS NOT NULL),
-adj AS (
-  SELECT user_id AS dst,
-         lag(user_id) OVER (PARTITION BY event_type, day ORDER BY ts, event_id) AS src
-  FROM ev),
-dedges AS MATERIALIZED (
+    head = _USER_ADJ_CTES + f"""dedges AS MATERIALIZED (
   SELECT src, dst, COUNT(*)::BIGINT AS w
   FROM adj WHERE src IS NOT NULL AND src <> dst
   GROUP BY src, dst),
@@ -1273,8 +1249,9 @@ def graph_connected_components(
 
     Scale shape per round: labels-onto-edges equi-join + one per-node
     partial-aggregated MIN — co-shuffled on the node key, no sort, no
-    windows; labels localCheckpoint every 2 rounds (the
-    pagerank_users/LPA loop discipline). At 100 TB the production form
+    windows; the rounds run through ``iterate``
+    (``checkpoint_every=0`` exposes the untruncated plan for the test
+    pins). At 100 TB the production form
     is large-star/small-star (Kiveris et al. 2014) for O(log n)
     convergence; plain propagation keeps the oracle exactly unrollable.
 
@@ -1299,12 +1276,8 @@ def graph_connected_components(
         .distinct()
         .withColumn("lbl", F.col("node"))
     )
-    prev = None
-    for k in range(1, CC_ITERS + 1):
-        # convention #12: `prev` (round K-1) is already cadence-
-        # checkpointed ((CC_ITERS-1) % 2 == 0); capture before round K
-        if k == CC_ITERS:
-            prev = labels
+
+    def step(labels: DataFrame, k: int) -> DataFrame:
         nbr_min = (
             both.join(
                 labels.select(F.col("node").alias("nbr"), F.col("lbl").alias("nlbl")),
@@ -1313,16 +1286,11 @@ def graph_connected_components(
             .groupBy("node")
             .agg(F.min("nlbl").alias("nmin"))
         )
-        labels = labels.join(nbr_min, "node", "left").select(
+        return labels.join(nbr_min, "node", "left").select(
             "node", F.least(F.col("lbl"), F.col("nmin")).alias("lbl")
         )
-        if checkpoint_every and k % checkpoint_every == 0 and k < CC_ITERS:
-            labels = labels.localCheckpoint()
-    # final-round frame feeds the audit join AND the component count:
-    # lazy checkpoint = round K computes once (convention #12,
-    # VERDICT r9 #1 — this double reference was the r9 +51 %)
-    if checkpoint_every:
-        labels = labels.localCheckpoint(eager=False)
+
+    labels, prev = iterate(labels, step, CC_ITERS, every=checkpoint_every)
     audit = (
         labels.join(
             prev.select("node", F.col("lbl").alias("plbl")), "node"
@@ -1346,16 +1314,7 @@ def _cc_sql() -> str:
     """DuckDB twin: the same CC_ITERS min-label rounds unrolled as
     MATERIALIZED CTEs (convention #11: every l{k} is referenced by the
     next round's join AND carry-through)."""
-    head = """
-WITH ev AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS day,
-         ts, event_id, user_id
-  FROM events WHERE user_id IS NOT NULL),
-adj AS (
-  SELECT user_id AS dst,
-         lag(user_id) OVER (PARTITION BY event_type, day ORDER BY ts, event_id) AS src
-  FROM ev),
-edges AS MATERIALIZED (
+    head = _USER_ADJ_CTES + """edges AS MATERIALIZED (
   SELECT DISTINCT src, dst
   FROM adj WHERE src IS NOT NULL AND src <> dst),
 nb AS MATERIALIZED (
@@ -1406,7 +1365,6 @@ LIMIT {CC_TOPK}"""
 KZ_SCALE = 1_000_000  # beta = 1.0 in 1e6 fixed-point
 KZ_ITERS = 4  # fixed rounds; the oracle unrolls the same 4 CTEs
 KZ_TOPK = 20
-KZ_CHECKPOINT_EVERY = 2
 
 
 def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1435,9 +1393,9 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank frame on src (both shuffled on the same key — at cluster
     scale the edge list is bucketed once and every round reuses the
     layout) and one map-side-combined per-dst sum; the node rebase is
-    a LEFT join on the node set. localCheckpoint every 2 rounds bounds
-    lineage (pagerank precedent). alpha_den is a 1-row aggregate
-    scalar, not data-sized driver state.
+    a LEFT join on the node set; the rounds run through ``iterate``.
+    alpha_den is a 1-row aggregate scalar, not data-sized driver
+    state.
     """
     # both loop-invariant frames materialize ONCE: every round (and the
     # audit) re-references nodes, so an uncheckpointed node set would
@@ -1455,34 +1413,28 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("instr").alias("m")
     ).first()
     alpha_den = int(row["m"] or 0) + 1
-    xs = nodes.select("node", F.lit(KZ_SCALE).cast("long").alias("x"))
-    prev = None
-    for k in range(1, KZ_ITERS + 1):
-        if k == KZ_ITERS:
-            # convention #12 (VERDICT r9 #1): round K-1 is
-            # un-checkpointed at this cadence ((KZ_ITERS-1) % 2 != 0)
-            # and both round K's contribution join and the audit's
-            # `prev` side read it. One lazy truncation covers both.
-            xs = xs.localCheckpoint(eager=False)
-            prev = xs
+
+    def step(xs: DataFrame, k: int) -> DataFrame:
         s = (
             edges.join(xs, edges.src == xs.node)
             .select("dst", F.expr(f"(x * w) DIV {alpha_den}").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").cast("long").alias("s"))
         )
-        xs = nodes.join(s, nodes.node == s.dst, "left").select(
+        return nodes.join(s, nodes.node == s.dst, "left").select(
             nodes.node,
             (
                 F.lit(KZ_SCALE).cast("long")
                 + F.coalesce(F.col("s"), F.lit(0).cast("long"))
             ).cast("long").alias("x"),
         )
-        if k % KZ_CHECKPOINT_EVERY == 0 and k < KZ_ITERS:
-            xs = xs.localCheckpoint()
-    # final-round frame feeds the audit join AND the top-k output:
-    # lazy checkpoint = round K computes once (convention #12)
-    xs = xs.localCheckpoint(eager=False)
+
+    xs, prev = iterate(
+        nodes.select("node", F.lit(KZ_SCALE).cast("long").alias("x")),
+        step,
+        KZ_ITERS,
+        every=2,
+    )
     audit = xs.join(prev.select("node", F.col("x").alias("px")), "node").agg(
         F.coalesce(F.sum(F.abs(F.col("x") - F.col("px"))), F.lit(0))
         .cast("long")
@@ -1503,16 +1455,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _katz_sql() -> str:
-    head = f"""
-WITH ev AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS day,
-         ts, event_id, user_id
-  FROM events WHERE user_id IS NOT NULL),
-adj AS (
-  SELECT user_id AS dst,
-         lag(user_id) OVER (PARTITION BY event_type, day ORDER BY ts, event_id) AS src
-  FROM ev),
-edges AS MATERIALIZED (
+    head = _USER_ADJ_CTES + f"""edges AS MATERIALIZED (
   SELECT src, dst, COUNT(*)::BIGINT AS w
   FROM adj WHERE src IS NOT NULL AND src <> dst
   GROUP BY src, dst),

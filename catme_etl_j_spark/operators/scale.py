@@ -475,8 +475,6 @@ ORDER BY day
 # count; the probe year is 1 of the ~7 shipped years so a date-clustered
 # layout can skip ~6/7 of the files while insertion order skips ~none.
 PRUNE_FILES = 64
-PRUNE_LO = "1997-01-01"
-PRUNE_HI_EXCL = "1998-01-01"
 # day index via the TZ-free DATE cast (l_shipdate is TIMESTAMP_NTZ —
 # not castable to DOUBLE, and NTZ->DATE ignores the session zone on
 # both engines, so this is deterministic under TZ stress too)

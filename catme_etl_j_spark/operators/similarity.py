@@ -56,10 +56,6 @@ def _dot_expr(a: str, b: str) -> str:
     )
 
 
-def _norm_expr(a: str) -> str:
-    return f"sqrt(CAST({_dot_expr(a, a)} AS DOUBLE))"
-
-
 def _dot_duck(a: str, b: str) -> str:
     return (
         f"CAST(list_sum(list_transform(range(1, len({a}) + 1), "

@@ -38,8 +38,7 @@ from catme_etl_j_spark.functions.numeric import rdet as _rdet
 from catme_etl_j_spark.functions.numeric import rdet_sql
 from catme_etl_j_spark.sources.tables import load_table, spread_small_scan
 
-HLL_P = 12  # bucket bits
-HLL_M = 1 << HLL_P  # 4096 buckets
+HLL_P = 12  # bucket bits: 4096 buckets
 _POW49 = 1 << 49  # rank material is 48 bits; rho in [1, 49]
 
 # leading-zero-bits of the first nonzero hex char (then +1 for rho)

@@ -22,12 +22,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# region/nation are constant-size; supplier/part/customer grow with SF but
-# stay orders of magnitude under the fact table — still broadcastable at
-# sf<=1; at 100 TB Catalyst/AQE decides from actual stats).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Guide §2.5 input-parallelism guard: when a scan arrives as fewer

@@ -64,6 +64,31 @@ def test_bfs_levels_consistent(spark, sf_dir):
             assert any(dists[p] == d - 1 for p in preds.get(node, ())), node
 
 
+def test_bfs_construction_schedules_no_count_jobs(spark, sf_dir):
+    """Level emptiness is an observed count on each level's eager
+    checkpoint (convention #16), not a count() probe job per level:
+    no SQL execution run while building the query is a Dataset.count."""
+    from catme_etl_j_spark.operators.graph import graph_bfs_backbone
+
+    sc = spark.sparkContext
+    desc = "bfs-count-probe"
+    try:
+        sc.setJobGroup("bfs-count-probe", desc)
+        graph_bfs_backbone(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    actions = [
+        execs.apply(i).details().split("\n")[0]
+        for i in range(execs.size())
+        if execs.apply(i).description() == desc
+    ]
+    assert any("localCheckpoint" in a for a in actions), actions
+    assert not [a for a in actions if ".count(" in a], actions
+
+
 def test_adamic_adar_dominates_common_neighbors(spark, sf_dir):
     """aa_fp grows with shared-neighbor count bounded by common *
     (1e9/ln 2); every listed pair has >=1 shared neighbor; ordering is
