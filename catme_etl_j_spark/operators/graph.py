@@ -473,8 +473,13 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return dist.unionByName(nxt.observe(obs, F.count(F.lit(1)).alias("c")))
 
+    # the source row as a JVM literal frame: a createDataFrame row list
+    # is a Python RDD that every reference in round 1 would re-run
+    src = spark.range(1).select(
+        F.lit(source).cast("long").alias("node"), F.lit(0).cast("long").alias("dist")
+    )
     dist, _ = iterate(
-        spark.createDataFrame([(source, 0)], "node long, dist long"),
+        src,
         step,
         BFS_MAX_DEPTH,
         every=1,
