@@ -118,11 +118,7 @@ def convert(
         outputs = [output]
     else:  # CSV: --output ignored, chunks under temp_dir (W1 semantics)
         base = os.path.splitext(os.path.basename(input.rstrip("/")))[0]
-        outputs = write_csv_chunks(
+        outputs, n = write_csv_chunks(
             df, base, temp_dir, batch_size=batch_size, overwrite=overwrite
         )
-        from catme_etl_j_spark.converter.sinks import _count_csv_records
-
-        # CSV-aware count (quoted cells may span lines), minus headers
-        n = _count_csv_records(*outputs) - len(outputs)
     return ConvertResult(rows_written=n, outputs=outputs, elapsed_s=time.time() - t0)

@@ -35,7 +35,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from catme_etl_j_spark.converter.errors import ConversionError
 
@@ -80,24 +81,6 @@ def _count_lines(*paths: str) -> int:
         with open(p, "rb") as f:
             for chunk in iter(lambda: f.read(1 << 20), b""):
                 n += chunk.count(b"\n")
-    return n
-
-
-def _count_csv_records(*paths: str) -> int:
-    """Newlines OUTSIDE quoted fields — cell values containing embedded
-    newlines are quoted multi-line by Spark's CSV writer, so a raw line
-    count would over-report rows. Quote state toggles on every '\"'
-    (escaped quotes are doubled, so the two toggles cancel)."""
-    n = 0
-    for p in paths:
-        in_quote = False
-        with open(p, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                for part in chunk.split(b'"'):
-                    if not in_quote:
-                        n += part.count(b"\n")
-                    in_quote = not in_quote
-                in_quote = not in_quote  # last split part has no quote after it
     return n
 
 
@@ -175,10 +158,14 @@ def write_csv_chunks(
     *,
     batch_size: int = 50_000,
     overwrite: bool = False,
-) -> list[str]:
+) -> tuple[list[str], int]:
     """Write ``<temp_dir>/<input_base>-chunk-N.csv`` files; returns them
-    in order. ``--output`` is ignored for CSV, as in the reference
-    (ConverterConfig.java:34)."""
+    in order, with the number of rows written. ``--output`` is ignored
+    for CSV, as in the reference (ConverterConfig.java:34).
+
+    Rows are counted by an Observation on the write itself: the output
+    cannot be re-read reliably, because quoted cells span lines and
+    Spark escapes a quote inside a cell as ``\\"``."""
     os.makedirs(temp_dir, exist_ok=True)
     existing = glob.glob(os.path.join(temp_dir, f"{input_base}-chunk-*.csv"))
     if existing:
@@ -190,10 +177,12 @@ def write_csv_chunks(
         for p in existing:
             os.remove(p)
     tmp = tempfile.mkdtemp(prefix="csv_", dir=temp_dir)
+    rows = Observation()
     try:
         (
             _ordered_single(df)
             .drop(*META_COLS)
+            .observe(rows, F.count(F.lit(1)).alias("n"))
             .write.mode("overwrite")
             .option("header", True)
             .option("maxRecordsPerFile", batch_size)
@@ -205,7 +194,7 @@ def write_csv_chunks(
             dst = os.path.join(temp_dir, f"{input_base}-chunk-{i}.csv")
             shutil.move(p, dst)
             outs.append(dst)
-        return outs
+        return outs, rows.get["n"]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import rdet, rdet_sql
+from catme_etl_j_spark.functions.tokens import normalized, windows, word_ngrams, words
 from catme_etl_j_spark.sources.tables import load_table
 
 # RE2-safe (and Java-regex-identical) patterns — keep to character
@@ -30,8 +31,8 @@ def corpus_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     count -> per-partition top-k merge. No driver-side loops.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.explode(F.split(F.trim("text"), " +")).alias("word")
-    counts = docs.select(words).groupBy("word").agg(F.count("*").alias("n"))
+    toks = F.explode(words()).alias("word")
+    counts = docs.select(toks).groupBy("word").agg(F.count("*").alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("word")).limit(TOP_TERMS)
 
 
@@ -50,7 +51,7 @@ def corpus_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.count()  # one scalar action; reused as a literal
     terms = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(F.split(F.trim("text"), " +"))).alias("word"),
+        F.explode(F.array_distinct(words())).alias("word"),
     )
     df_counts = terms.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
     idf = rdet(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)), 6)
@@ -152,15 +153,12 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrubbed = F.regexp_replace(
         F.regexp_replace("text", EMAIL_RE, "<EMAIL>"), URL_RE, "<URL>"
     )
-    n_words = F.size(F.split(F.trim(F.col("scrubbed")), " +")).cast("long")
-    norm = (
-        "trim(regexp_replace(regexp_replace(lower(scrubbed), '[^a-z0-9 ]', ''), ' +', ' '))"
-    )
+    n_words = F.size(words("scrubbed")).cast("long")
     staged = (
         docs.select("doc_id", scrubbed.alias("scrubbed"))
         .withColumn("n_words", n_words)
         .filter(F.col("n_words") >= 20)
-        .select("doc_id", "n_words", F.md5(F.expr(norm)).alias("fp"))
+        .select("doc_id", "n_words", F.md5(normalized("scrubbed")).alias("fp"))
     )
     deduped = staged.groupBy("fp").agg(
         F.min("doc_id").alias("doc_id"),
@@ -375,25 +373,11 @@ def _decontaminate(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     staged = docs.select(
         "doc_id",
         (bucket < EVAL_PCT).alias("is_eval"),
-        F.expr("split(trim(text), ' +')").alias("w"),
+        words().alias("w"),
     )
-    grams = (
-        staged.select(
-            "doc_id",
-            "is_eval",
-            # CASE guard: sequence(1, 0) is DESCENDING [1, 0] in Spark and
-            # slice(w, 0, n) throws — docs under n words get no grams
-            F.explode_outer(
-                F.expr(
-                    f"CASE WHEN size(w) >= {n} THEN "
-                    f"transform(sequence(1, size(w) - {n - 1}),"
-                    f" i -> md5(concat_ws(' ', slice(w, i, {n}))))"
-                    f" ELSE array() END"
-                )
-            ).alias("gh"),
-        )
-        .filter(F.col("gh").isNotNull())
-    )
+    grams = staged.select(
+        "doc_id", "is_eval", F.explode_outer(word_ngrams("w", n, hashed=True)).alias("gh")
+    ).filter(F.col("gh").isNotNull())
     eval_grams = grams.filter("is_eval").select("doc_id", "gh").distinct()
     train_grams = grams.filter("NOT is_eval").select("gh").distinct()
     # r11 (guide §1.2): gram totals and train hits come from ONE pass
@@ -529,18 +513,8 @@ def _word_grams(docs: DataFrame, n: int) -> DataFrame:
     (same CASE guard as :func:`_decontaminate`: under-``n``-word docs
     yield zero grams, never a descending ``sequence(1, 0)``)."""
     return (
-        docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
-        .select(
-            "doc_id",
-            F.explode_outer(
-                F.expr(
-                    f"CASE WHEN size(w) >= {n} THEN "
-                    f"transform(sequence(1, size(w) - {n - 1}),"
-                    f" i -> md5(concat_ws(' ', slice(w, i, {n}))))"
-                    f" ELSE array() END"
-                )
-            ).alias("gh"),
-        )
+        docs.select("doc_id", words().alias("w"))
+        .select("doc_id", F.explode_outer(word_ngrams("w", n, hashed=True)).alias("gh"))
         .filter(F.col("gh").isNotNull())
     )
 
@@ -630,7 +604,7 @@ def corpus_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         docs.select(
             "source",
-            F.expr("size(split(trim(text), ' +'))").cast("long").alias("n_tok"),
+            F.size(words()).cast("long").alias("n_tok"),
         )
         .groupBy("source")
         .agg(
@@ -836,7 +810,7 @@ def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the staged chunk transform into a pushed filter (plan-guarded).
     """
     docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
+    staged = docs.select("doc_id", words().alias("w"))
     chunks = (
         f"transform(sequence(0, CAST(ceil(size(w) / {CHUNK_TOKENS}.0) AS INT) - 1), "
         f"c -> array_join(slice(w, c * {CHUNK_TOKENS} + 1, {CHUNK_TOKENS}), ' '))"
@@ -896,7 +870,7 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.expr("size(split(trim(text), ' +'))").cast("long").alias("n_tok"),
+        F.size(words()).cast("long").alias("n_tok"),
         F.expr(f"doc_id DIV {PACK_BUCKET}").alias("bucket"),
     )
     bucket_tot = toks.groupBy("bucket").agg(F.sum("n_tok").alias("btot"))
@@ -1095,9 +1069,6 @@ def corpus_e2e_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrubbed = F.regexp_replace(
         F.regexp_replace("text", EMAIL_RE, "<EMAIL>"), URL_RE, "<URL>"
     )
-    norm = (
-        "trim(regexp_replace(regexp_replace(lower(scrubbed), '[^a-z0-9 ]', ''), ' +', ' '))"
-    )
     bucket = F.expr(
         "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"
     )
@@ -1116,9 +1087,9 @@ def corpus_e2e_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
     staged = (
         docs.select("doc_id", "source", scrubbed.alias("scrubbed"))
-        .withColumn("w", F.expr("split(trim(scrubbed), ' +')"))
+        .withColumn("w", words("scrubbed"))
         .withColumn("n_words", F.expr("size(w)").cast("long"))
-        .withColumn("fp", F.md5(F.expr(norm)))
+        .withColumn("fp", F.md5(normalized("scrubbed")))
         .drop("scrubbed")
         .withColumn("q", (F.col("n_words") >= 20).cast("long"))
         .withColumn(
@@ -1138,14 +1109,7 @@ def corpus_e2e_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = staged.filter("is_surv").select(
         "doc_id",
         "split",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(w) >= {DECON_N} THEN "
-                f"transform(sequence(1, size(w) - {DECON_N - 1}),"
-                f" i -> md5(concat_ws(' ', slice(w, i, {DECON_N}))))"
-                f" ELSE array() END"
-            )
-        ).alias("gh"),
+        F.explode(word_ngrams("w", DECON_N, hashed=True)).alias("gh"),
     )
     eval_grams = grams.filter("split = 'eval'").select("gh").distinct()
     contaminated = (
@@ -1290,17 +1254,8 @@ def corpus_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     all built-ins, map-side combinable, one shuffle on the bigram key.
     """
     docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(F.expr("split(trim(text), ' +')").alias("w"))
-    bg = staged.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(w) >= 2 THEN "
-                "transform(sequence(0, size(w) - 2), "
-                "i -> concat(w[i], ' ', w[i + 1])) "
-                "ELSE array() END"
-            )
-        ).alias("bigram")
-    )
+    staged = docs.select(words().alias("w"))
+    bg = staged.select(F.explode(word_ngrams("w", 2)).alias("bigram"))
     return (
         bg.groupBy("bigram")
         .agg(F.count("*").alias("n"))
@@ -1337,8 +1292,8 @@ def corpus_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is cast back (convention #5); top-k tie-breaks on (a, b).
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(F.split(F.trim("text"), " +")).alias("word"))
-    freq = words.groupBy("word").agg(F.count("*").alias("n_word"))
+    toks = docs.select(F.explode(words()).alias("word"))
+    freq = toks.groupBy("word").agg(F.count("*").alias("n_word"))
     wf = freq.filter(F.char_length("word") >= 2)
     pairs = wf.select(
         "word",
@@ -1394,8 +1349,8 @@ def corpus_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure integer counting; SUM cast per convention #5.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(F.split(F.trim("text"), " +")).alias("word"))
-    freq = words.groupBy("word").agg(F.count("*").alias("n_word"))
+    toks = docs.select(F.explode(words()).alias("word"))
+    freq = toks.groupBy("word").agg(F.count("*").alias("n_word"))
     wf = freq.filter(F.char_length("word") >= 2)
     pre_pairs = wf.select(
         "word",
@@ -1426,20 +1381,17 @@ def corpus_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = spaced.crossJoin(F.broadcast(top1)).withColumn(
         "syms", F.split(F.expr("replace(sp, pat, mrg)"), " ")
     )
+    pairs = windows(
+        "syms",
+        2,
+        lambda i: F.named_struct(
+            F.lit("a"), F.element_at("syms", i), F.lit("b"), F.element_at("syms", i + 1)
+        ),
+    )
     post = (
-        merged.filter(F.size("syms") >= 2)
-        .select(
-            "n_word",
-            "mrg",
-            F.explode(F.expr("sequence(1, size(syms) - 1)")).alias("i"),
-            F.col("syms"),
-        )
-        .select(
-            F.expr("element_at(syms, i)").alias("a"),
-            F.expr("element_at(syms, i + 1)").alias("b"),
-            "n_word",
-            "mrg",
-        )
+        merged.select("n_word", "mrg", F.explode_outer(pairs).alias("p"))
+        .filter(F.col("p").isNotNull())
+        .select("p.a", "p.b", "n_word", "mrg")
     )
     return (
         post.groupBy("a", "b", "mrg")
@@ -1569,10 +1521,8 @@ def corpus_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 fixed-point (DIV == // == trunc == floor, convention #7).
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    words = docs.select(
-        "source", F.explode(F.split(F.trim("text"), " +")).alias("word")
-    )
-    wc = words.groupBy("source", "word").agg(
+    toks = docs.select("source", F.explode(words()).alias("word"))
+    wc = toks.groupBy("source", "word").agg(
         F.count("*").alias("n_occ")
     ).localCheckpoint()  # the ONE corpus pass; vocab + application share it
     top = (
@@ -1698,7 +1648,7 @@ def corpus_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.expr("size(split(trim(text), ' +'))")).cast("long").alias("n_tokens"),
+        F.sum(F.size(words())).cast("long").alias("n_tokens"),
     )
     tot = per.agg(
         F.sum("n_tokens").cast("long").alias("total_tokens"),
@@ -1756,23 +1706,14 @@ def corpus_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first shuffle — no cumulative re-scans.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                # CASE guard: a 1-word doc makes sequence(1, 0) the
-                # DESCENDING [1, 0], whose i=0 hits element_at(_, 0) —
-                # an unconditional INVALID_INDEX_OF_ZERO (ADVICE r5 sweep)
-                "CASE WHEN size(split(trim(text), ' +')) >= 2 THEN "
-                "transform(sequence(1, size(split(trim(text), ' +')) - 1), "
-                "i -> concat_ws(' ', element_at(split(trim(text), ' +'), i), "
-                "element_at(split(trim(text), ' +'), i + 1))) ELSE array() END"
-            )
-        ).alias("word"),
-    ).filter("word <> ''")
+    toks = (
+        docs.select("doc_id", words().alias("w"))
+        .select("doc_id", F.explode_outer(word_ngrams("w", 2)).alias("word"))
+        .filter("word <> ''")
+    )
     from pyspark.sql import Window as W
 
-    firsts = words.groupBy("word").agg(F.min("doc_id").alias("first_doc"))
+    firsts = toks.groupBy("word").agg(F.min("doc_id").alias("first_doc"))
     buckets = firsts.groupBy(
         (F.col("first_doc") / VOCAB_BUCKET).cast("long").alias("bucket")
     ).agg(F.count("*").alias("new_words"))
@@ -1825,9 +1766,7 @@ def corpus_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_pack_sequences.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr("size(split(trim(text), ' +'))").cast("long").alias("n")
-    )
+    toks = docs.select("doc_id", F.size(words()).cast("long").alias("n"))
 
     out = []
     for strategy, order_sql in (
@@ -1910,7 +1849,7 @@ def corpus_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").select("text")
     top = (
-        docs.select(F.explode(F.split(F.trim("text"), " +")).alias("word"))
+        docs.select(F.explode(words()).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("word"))
@@ -1987,7 +1926,7 @@ def corpus_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10)"
                 f" AS BIGINT) % {N_SHARDS}"
             ).alias("shard"),
-            F.expr("size(split(trim(text), ' +'))").cast("long").alias("n_tok"),
+            F.size(words()).cast("long").alias("n_tok"),
         )
         .groupBy("shard")
         .agg(
@@ -2062,13 +2001,13 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (split-of-empty guard, conv. #9)."""
     docs = load_table(spark, sf_dir, "documents")
     tgt = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
-    words = docs.select(
+    toks = docs.select(
         "doc_id",
         "source",
-        F.explode(F.split(F.trim("text"), " +")).alias("word"),
+        F.explode(words()).alias("word"),
     ).filter(F.col("word") != "")
     dfc = (
-        words.withColumn(
+        toks.withColumn(
             "f",
             F.expr(
                 f"CAST(conv(substr(md5(word), 1, 8), 16, 10) AS BIGINT) % {DSIR_BUCKETS}"
@@ -2177,7 +2116,7 @@ def corpus_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         docs.select(
             "source",
-            F.expr("size(split(trim(text), ' +'))").cast("long").alias("n_tok"),
+            F.size(words()).cast("long").alias("n_tok"),
             F.expr(
                 f"CAST(n_chars >= {MIX_QUALITY_MIN_CHARS} AS INT)"
             ).alias("passes"),
@@ -2286,9 +2225,7 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = docs.select(
         "source",
         "lang",
-        F.expr("size(filter(split(trim(text), ' +'), w -> w <> ''))")
-        .cast("long")
-        .alias("nw"),
+        F.size(F.filter(words(), lambda x: x != "")).cast("long").alias("nw"),
         F.regexp_count("text", F.lit(_FERT_BPE_RE)).cast("long").alias("nt"),
         F.length(F.encode("text", "UTF-8")).cast("long").alias("nb"),
     )
@@ -2377,9 +2314,7 @@ def corpus_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    staged = docs.select(
-        "doc_id", F.expr("split(trim(text), ' +')").alias("w")
-    )
+    staged = docs.select("doc_id", words().alias("w"))
     segs = (
         staged.select(
             "doc_id",
@@ -2508,12 +2443,12 @@ def corpus_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = docs.select(
+    toks = docs.select(
         "doc_id",
-        F.posexplode(F.expr("split(trim(text), ' +')")).alias("pos", "w"),
+        F.posexplode(words()).alias("pos", "w"),
     ).filter(F.col("w") != "")
     wd = Window.partitionBy("doc_id").orderBy("pos")
-    grams = words.select(
+    grams = toks.select(
         "doc_id",
         "pos",
         "w",

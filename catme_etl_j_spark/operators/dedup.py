@@ -37,7 +37,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from catme_etl_j_spark.operators.text import NORM_DUCK, NORM_SPARK
+from catme_etl_j_spark.functions.tokens import normalized, split_words, word_ngrams, words
+from catme_etl_j_spark.operators.text import NORM_DUCK
 from catme_etl_j_spark.plans.iterate import iterate
 from catme_etl_j_spark.sources.tables import load_table, spread_small_scan
 
@@ -65,16 +66,6 @@ SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS  # 16 -> 65,536 buckets/bloc
 assert SIMHASH_BLOCKS * SIMHASH_BLOCK_BITS == SIMHASH_BITS
 assert 32 % SIMHASH_BLOCK_BITS == 0
 
-# Word-3-gram shingling (guards: <3 words -> no shingles; Spark's
-# sequence(1, 0) would yield a DESCENDING [1,0], hence the CASE).
-_SHINGLES_SPARK = """
-CASE WHEN size(w) >= 3
-     THEN array_distinct(transform(sequence(1, size(w) - 2),
-          i -> concat_ws(' ', element_at(w, i), element_at(w, i+1), element_at(w, i+2))))
-     ELSE array() END
-"""
-_WORDS_SPARK = "split(trim(text), ' +')"
-
 _SHINGLE_CTE_DUCK = """
 words AS (SELECT doc_id, regexp_split_to_array(trim(text), ' +') AS w FROM documents),
 shingles AS (
@@ -95,8 +86,8 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     reshuffles the gram stream by its own key right after)."""
     docs = spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
     return (
-        docs.withColumn("w", F.expr(_WORDS_SPARK))
-        .select("doc_id", F.explode(F.expr(_SHINGLES_SPARK)).alias("s"))
+        docs.withColumn("w", words())
+        .select("doc_id", F.explode(word_ngrams("w", 3, distinct=True)).alias("s"))
     )
 
 
@@ -122,7 +113,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text (case/punct/whitespace-folded)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", F.md5(F.expr(NORM_SPARK)).alias("fp"))
+        docs.select("doc_id", F.md5(normalized()).alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
         .select("fp", "doc_id", "n_copies")
@@ -222,9 +213,8 @@ def _minhash_rows_pandas(it):
     (doc_id, text) -> one (doc_id, m0..m31) row per document with >=1
     shingle. Replicates the expression pipeline exactly:
 
-    * words = split(trim(text), ' +') — Spark ``trim`` strips SPACES
-      only (not all whitespace), Java split keeps the lone empty
-      string for empty input, so ``strip(' ')`` + ``re.split`` match;
+    * words = functions.tokens.split_words(text), the Python mirror of
+      the Spark split;
     * shingles = distinct 'w[i] w[i+1] w[i+2]' for i in 1..len(w)-2
       (docs with <3 words emit nothing — exactly the rows the old
       explode+groupBy dropped);
@@ -237,15 +227,12 @@ def _minhash_rows_pandas(it):
     repeat heavily across near-duplicate documents); bounded so a
     pathological corpus cannot grow it without limit.
     """
-    import re as _re
-
     import numpy as np
     import pandas as pd
     from hashlib import md5 as _md5
 
     A = np.array(PERM_A, dtype=np.int64)[:, None]
     B = np.array(PERM_B, dtype=np.int64)[:, None]
-    split_re = _re.compile(" +")
     memo: dict[str, int] = {}
     cols = ["doc_id"] + [f"m{i}" for i in range(NUM_PERM)]
     for pdf in it:
@@ -255,7 +242,7 @@ def _minhash_rows_pandas(it):
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
             if text is None:
                 continue
-            w = split_re.split(text.strip(" "))
+            w = split_words(text)
             n = len(w) - 2
             if n < 1:
                 continue
@@ -1507,18 +1494,11 @@ def dedup_substring_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the gram stream is window-shuffled by gh right after
     docs = spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
     staged = docs.select(
-        "doc_id", "source", F.expr("split(trim(text), ' +')").alias("w")
+        "doc_id", "source", words().alias("w")
     ).withColumn("n_tokens", F.expr("size(w)").cast("long"))
     grams = staged.select(
         "doc_id",
-        F.posexplode_outer(
-            F.expr(
-                f"CASE WHEN size(w) >= {SUBSTR_N} THEN "
-                f"transform(sequence(1, size(w) - {SUBSTR_N - 1}),"
-                f" i -> md5(concat_ws(' ', slice(w, i, {SUBSTR_N}))))"
-                f" ELSE array() END"
-            )
-        ).alias("pos", "gh"),
+        F.posexplode_outer(word_ngrams("w", SUBSTR_N, hashed=True)).alias("pos", "gh"),
     ).filter(F.col("gh").isNotNull())
     # r11 (guide §2.4): the repeated-gram filter is a COUNT window over
     # the gram-hash partitions — one shuffle of ONE gram pass, instead

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import rdet, rdet_sql
+from catme_etl_j_spark.functions.tokens import words
 from catme_etl_j_spark.sources.tables import load_table
 
 
@@ -857,7 +858,7 @@ def embed_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"c -> array_join(slice(w, c * {E2E_CHUNK_TOKENS} + 1, {E2E_CHUNK_TOKENS}), ' '))"
     )
     chunks = (
-        docs.select("doc_id", F.expr("split(trim(text), ' +')").alias("w"))
+        docs.select("doc_id", words().alias("w"))
         .select("doc_id", F.posexplode_outer(F.expr(chunk_arr)).alias("idx", "chunk"))
         .filter(F.col("chunk").isNotNull())
         .select(

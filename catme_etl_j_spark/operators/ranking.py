@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import rdet, rdet_sql
+from catme_etl_j_spark.functions.tokens import words
 from catme_etl_j_spark.sources.tables import load_table
 
 TFIDF_TOP_PER_DOC = 5
@@ -55,9 +56,7 @@ def rank_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .count() action; the scalar folds into the one plan.
     ndf = docs.agg(F.count("*").alias("n_docs"))
     pairs = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term")
-        )
+        docs.select("doc_id", F.explode(words()).alias("term"))
         .filter("term <> ''")
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
@@ -151,9 +150,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11-ADVICE leak (one never-unpersisted ~|docs|-row frame per
     # call in selfcheck/run_query sessions) disappears with it.
     per_doc = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term")
-        )
+        docs.select("doc_id", F.explode(words()).alias("term"))
         .filter("term <> ''")
         .groupBy("doc_id")
         .agg(
@@ -290,7 +287,7 @@ def rank_postings_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = (
-        docs.select("doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term"))
+        docs.select("doc_id", F.explode(words()).alias("term"))
         .filter("term <> ''")
         .distinct()
     )
@@ -452,9 +449,7 @@ def rank_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     q = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
     rel = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term")
-        )
+        docs.select("doc_id", F.explode(words()).alias("term"))
         .filter(f"term IN ({q})")
         .groupBy("doc_id")
         .agg(F.countDistinct("term").alias("rel"))
@@ -590,7 +585,7 @@ def rank_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents scans in the static plan; one tokenize pass now feeds
     # them all
     toks = (
-        docs.select("doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term"))
+        docs.select("doc_id", F.explode(words()).alias("term"))
         .filter("term <> ''")
         .cache()
     )
@@ -765,9 +760,7 @@ def rank_smart_lnc_ltc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     ndf = docs.agg(F.count("*").alias("n_docs"))
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), " +")).alias("term")
-    ).filter("term <> ''")
+    toks = docs.select("doc_id", F.explode(words()).alias("term")).filter("term <> ''")
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     wdt = tf.select(
         "doc_id",

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import avg4, dec2, dec4, money2, rdet, rdet_sql
+from catme_etl_j_spark.functions.tokens import split_words, words
 from catme_etl_j_spark.sources.tables import load_table
 
 
@@ -323,15 +324,15 @@ FROM mid GROUP BY o_orderpriority
 
 def fn_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.trim("text"), " +")
+    toks = words()
     return docs.select(
         "doc_id",
-        F.element_at(words, 1).alias("first_word"),
-        F.element_at(words, -1).alias("last_word"),
-        F.array_join(F.slice(words, 1, 3), " ").alias("first3"),
-        F.array_contains(words, "spark").alias("has_spark"),
-        F.size(F.array_distinct(words)).cast("long").alias("n_distinct_words"),
-        F.array_position(words, "data").cast("long").alias("data_pos"),
+        F.element_at(toks, 1).alias("first_word"),
+        F.element_at(toks, -1).alias("last_word"),
+        F.array_join(F.slice(toks, 1, 3), " ").alias("first3"),
+        F.array_contains(toks, "spark").alias("has_spark"),
+        F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_words"),
+        F.array_position(toks, "data").cast("long").alias("data_pos"),
     )
 
 
@@ -640,12 +641,9 @@ def fn_udtf_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="word string, n bigint")
     class TopWords:
         def eval(self, text: str):
-            import re
             from collections import Counter
 
-            # split on ' +' exactly like the oracle (str.split() would
-            # also split on tabs/newlines and diverge cross-engine)
-            c = Counter(w for w in re.split(" +", (text or "").strip()) if w)
+            c = Counter(w for w in split_words(text or "") if w)
             for w, n in sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:3]:
                 yield w, n
 

@@ -31,11 +31,12 @@ pipeline surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import rdet as _rdet
 from catme_etl_j_spark.functions.numeric import rdet_sql
+from catme_etl_j_spark.functions.tokens import word_ngrams, words
 from catme_etl_j_spark.sources.tables import load_table, spread_small_scan
 
 HLL_P = 12  # bucket bits: 4096 buckets
@@ -63,32 +64,20 @@ def _rho_case(z: str, dialect: str = "spark") -> str:
     )
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word 3-gram shingles of documents.text — the high-cardinality
-    stream whose distinct count the sketch estimates.
+def _shingles(docs: DataFrame, *keys: Column | str) -> DataFrame:
+    """``keys`` + ``shingle``: one row per word 3-gram occurrence in
+    documents.text (a multiset) — the high-cardinality stream whose
+    distinct count the sketches estimate.
 
     Staged per the Catalyst hygiene rules (see tests/test_plans.py):
     ``ws`` is its own column so the transform lambda's three lookups
     don't re-run split(); explode_outer + isNotNull on the generator
     OUTPUT keeps InferFiltersFromGenerate from inlining the pipeline.
     """
-    docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.withColumn("ws", F.split(F.trim("text"), " +"))
-        .withColumn(
-            "sh",
-            F.expr(
-                # <3 words -> zero shingles: Spark's sequence(1, 0) is a
-                # DESCENDING [1,0] whose ws[i+1] lookup crashes under
-                # ANSI mode (ADVICE r5; same guard as dedup._SHINGLES_SPARK,
-                # minus array_distinct — the sketch stream is a multiset)
-                "CASE WHEN size(ws) >= 3"
-                " THEN transform(sequence(1, size(ws) - 2),"
-                " i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))"
-                " ELSE array() END"
-            ),
-        )
-        .select(F.explode_outer("sh").alias("shingle"))
+        docs.withColumn("ws", words())
+        .withColumn("sh", word_ngrams("ws", 3))
+        .select(*keys, F.explode_outer("sh").alias("shingle"))
         .filter(F.col("shingle").isNotNull())
     )
 
@@ -102,7 +91,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the same scan. Output is one row with the exact count, the
     estimate, buckets used, and the relative error in percent.
     """
-    sh = _shingles(spark, sf_dir).withColumn("h", F.md5("shingle"))
+    sh = _shingles(load_table(spark, sf_dir, "documents")).withColumn("h", F.md5("shingle"))
     tagged = sh.select(
         "shingle",
         F.expr("CAST(conv(substr(h, 13, 3), 16, 10) AS INT)").alias("bucket"),
@@ -191,9 +180,7 @@ def _cms_bucket(i: str, word: str, dialect: str = "spark") -> str:
 
 def _words(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        F.explode(F.split(F.trim("text"), " +")).alias("word")
-    ).filter("word <> ''")
+    return docs.select(F.explode(words()).alias("word")).filter("word <> ''")
 
 
 def sketch_countmin_topwords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,28 +652,9 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Estimator arithmetic is pure int64 (integer DIV; all operands
     positive, so DuckDB ``//`` truncation == floor — convention #7).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sh = (
-        docs.withColumn("ws", F.split(F.trim("text"), " +"))
-        .withColumn(
-            "sh",
-            F.expr(
-                # <3 words -> zero shingles: Spark's sequence(1, 0) is a
-                # DESCENDING [1,0] whose ws[i+1] lookup crashes under
-                # ANSI mode (ADVICE r5; same guard as dedup._SHINGLES_SPARK,
-                # minus array_distinct — the sketch stream is a multiset)
-                "CASE WHEN size(ws) >= 3"
-                " THEN transform(sequence(1, size(ws) - 2),"
-                " i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))"
-                " ELSE array() END"
-            ),
-        )
-        .select("source", F.explode_outer("sh").alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
-        # cached (r11, convention #12): sh feeds the hash side plus two
-        # exact countDistinct legs; uncached the shingle explode ran 6x
-        .cache()
-    )
+    # cached (r11, convention #12): sh feeds the hash side plus two
+    # exact countDistinct legs; uncached the shingle explode ran 6x
+    sh = _shingles(load_table(spark, sf_dir, "documents"), "source").cache()
     hashed = sh.select(
         "source",
         F.expr("CAST(conv(substr(md5(shingle), 1, 8), 16, 10) AS BIGINT)").alias("h"),
@@ -834,7 +802,7 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DuckDB.
     """
     cnt = (
-        _shingles(spark, sf_dir)
+        _shingles(load_table(spark, sf_dir, "documents"))
         .groupBy("shingle")
         .agg(F.count("*").alias("n"))
     )
@@ -950,24 +918,7 @@ def sketch_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams for the inner product to correlate); same BIGINT-before-
     division rule (DuckDB DECIMAL // rounds).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sh = (
-        docs.withColumn("ws", F.split(F.trim("text"), " +"))
-        .withColumn(
-            "sh",
-            F.expr(
-                "CASE WHEN size(ws) >= 3"
-                " THEN transform(sequence(1, size(ws) - 2),"
-                " i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))"
-                " ELSE array() END"
-            ),
-        )
-        .select(
-            (F.col("doc_id") % 2).alias("side"),
-            F.explode_outer("sh").alias("shingle"),
-        )
-        .filter(F.col("shingle").isNotNull())
-    )
+    sh = _shingles(load_table(spark, sf_dir, "documents"), (F.col("doc_id") % 2).alias("side"))
     cnt = (
         sh.groupBy("side", "shingle")
         .agg(F.count("*").alias("n"))
@@ -1343,20 +1294,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.5 spread: shingle generation is interpreted scan-stage CPU and
     # the stream is immediately distinct-shuffled by (source, h)
     docs = spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
-    sh = (
-        docs.withColumn("ws", F.split(F.trim("text"), " +"))
-        .withColumn(
-            "sh",
-            F.expr(
-                "CASE WHEN size(ws) >= 3"
-                " THEN transform(sequence(1, size(ws) - 2),"
-                " i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))"
-                " ELSE array() END"
-            ),
-        )
-        .select("source", F.explode_outer("sh").alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
-    )
+    sh = _shingles(docs, "source")
     # hashed has FOUR consumers (sketch window, size aggregate, both
     # sides of the exact self-join). The static plan shows the explode
     # + distinct re-expanded 12x, but AQE's runtime

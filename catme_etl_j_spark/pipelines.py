@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from catme_etl_j_spark.functions.tokens import normalized, word_ngrams, words
 from catme_etl_j_spark.operators.corpus import DECON_N, EMAIL_RE, EVAL_PCT, URL_RE
 from catme_etl_j_spark.session import apply_query_conf
 from catme_etl_j_spark.sources.tables import load_table
@@ -75,7 +76,7 @@ class CorpusPipeline:
         return self._with(self._df.withColumn("text", scrubbed))
 
     def quality_filter(self, min_words: int = 20) -> "CorpusPipeline":
-        n_words = F.size(F.split(F.trim("text"), " +"))
+        n_words = F.size(words())
         return self._with(self._df.filter(n_words >= min_words))
 
     def dedup_normalized(self) -> "CorpusPipeline":
@@ -83,11 +84,8 @@ class CorpusPipeline:
         the min doc_id per group (one fp-partitioned window)."""
         from pyspark.sql import Window
 
-        norm = (
-            "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ''), ' +', ' '))"
-        )
         w = Window.partitionBy("fp").orderBy("doc_id")
-        staged = self._df.withColumn("fp", F.md5(F.expr(norm)))
+        staged = self._df.withColumn("fp", F.md5(normalized()))
         kept = (
             staged.withColumn("_rn", F.row_number().over(w))
             .filter("_rn = 1")
@@ -113,17 +111,12 @@ class CorpusPipeline:
         product."""
         if "split" not in self._df.columns:
             raise ValueError("call .split() before .decontaminate()")
-        grams = self._df.select(
-            "doc_id",
-            "split",
-            F.explode(
-                F.expr(
-                    f"CASE WHEN size(split(trim(text), ' +')) >= {n} THEN "
-                    f"transform(sequence(1, size(split(trim(text), ' +')) - {n - 1}),"
-                    f" i -> md5(concat_ws(' ', slice(split(trim(text), ' +'), i, {n}))))"
-                    f" ELSE array() END"
-                )
-            ).alias("gh"),
+        grams = (
+            self._df.select("doc_id", "split", words().alias("w"))
+            .select(
+                "doc_id", "split", F.explode_outer(word_ngrams("w", n, hashed=True)).alias("gh")
+            )
+            .filter(F.col("gh").isNotNull())
         )
         eval_grams = grams.filter("split = 'eval'").select("gh").distinct()
         contaminated = (

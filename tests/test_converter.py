@@ -594,3 +594,22 @@ def test_bigsheet_conversion_bounded_memory():
         f"— the bounded-memory invariant regressed (peaks: {peaks})"
     )
     os.remove("/tmp/bigsheet_test.ndjson")
+
+
+def test_csv_rows_written_with_escaped_quote_and_multiline_cells(spark, tmp_path):
+    # Spark's CSV writer escapes a quote inside a cell as \" (not ""),
+    # so one `5"` cell leaves an odd number of quote characters in its
+    # chunk, and a multi-line cell is one quoted record across two lines:
+    # rows_written must count records, not quotes or lines.
+    p = write_xlsx(
+        str(tmp_path / "parts.xlsx"),
+        {"S": [["part", "note"], ['5" screw', "a"], ["bolt", "two\nlines"], ["nut", "c"], ["washer", "d"]]},
+    )
+    res = convert(
+        p, "CSV", batch_size=3, temp_dir=str(tmp_path / "out"), overwrite=True, spark=spark
+    )
+    assert res.rows_written == 4
+    assert [open(o, "rb").read() for o in res.outputs] == [
+        b'part,note\n"5\\" screw",a\nbolt,"two\nlines"\nnut,c\n',
+        b"part,note\nwasher,d\n",
+    ]

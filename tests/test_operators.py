@@ -1472,6 +1472,37 @@ def test_short_doc_guards_match_oracle(spark, tmp_path):
         assert _norm(scols, srows) == _norm(ocols, rel.fetchall()), name
 
 
+def test_udtf_top_words_keeps_tabs_and_newlines_like_oracle(spark, tmp_path):
+    """The UDTF's Python split must be the Spark/DuckDB one: ``trim``
+    strips spaces only, so a tab or newline at a document's edge stays
+    inside its edge word (``'\\tfoo'``, ``'bar\\n'``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = ["\tfoo foo bar\n", "\nfoo bar\t", "  a a  b  ", ""]
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+            "text": pa.array(texts),
+            "lang": pa.array(["en"] * len(texts)),
+            "source": pa.array(["web"] * len(texts)),
+            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+        }),
+        str(tmp_path / "documents.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    name = "fn_udtf_top_words"
+    sdf = entry_mod.queries()[name](spark, str(tmp_path))
+    rel = con.sql(entry_mod.oracle_sql()[name])
+    srows = [tuple(r) for r in sdf.collect()]
+    scols = [c.lower() for c in sdf.columns]
+    ocols = [c.lower() for c in rel.columns]
+    assert sorted(scols) == sorted(ocols)
+    assert _norm(scols, srows) == _norm(ocols, rel.fetchall())
+    assert (1, "\tfoo", 1) in srows
+
+
 def test_bpe_train_textbook_example():
     """The classic Sennrich toy corpus: first merges must be the
     highest-weighted pairs with (count DESC, pat ASC) tie-breaks."""
