@@ -427,17 +427,19 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest key on ties — data-dependent but deterministic). Each
     round k: frontier (the level-(k-1) rows of the visited set) ⋈
     edges -> dedup -> anti-join against visited, unioned onto it; the
-    edge set is localCheckpoint'd once before the loop and the rounds
-    run through ``iterate``, which checkpoints the visited set every
-    round and stops at the first empty level (an observed count on
-    that checkpoint, no probe job).
+    4-table edge join is localCheckpoint'd once, before the threshold
+    reads it (the threshold, the backbone and its source all derive
+    from that one materialization), and the rounds run through
+    ``iterate``, which checkpoints the visited set every round and
+    stops at the first empty level (an observed count on that
+    checkpoint, no probe job).
 
     Oracle: DuckDB recursive CTE with a depth cap; MIN(dist) per node
     is exactly the BFS level. All arithmetic is integer.
     """
     from pyspark.sql import Window as PW
 
-    edges_all = _trade_edges(spark, sf_dir)
+    edges_all = _trade_edges(spark, sf_dir).localCheckpoint()
     ranked = edges_all.withColumn(
         "rn", F.row_number().over(PW.orderBy(F.desc("w"), "src", "dst"))
     ).withColumn(
@@ -449,7 +451,7 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()
     )
     thr = int(thr_row["thr"])
-    bb = edges_all.filter(F.col("w") >= thr).localCheckpoint()
+    bb = edges_all.filter(F.col("w") >= thr)
     edges = bb.select("src", "dst")
     src_row = (
         bb.groupBy("src")
@@ -584,6 +586,29 @@ def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _adj_edges(_user_adj(spark, sf_dir))
 
 
+def _user_graph(
+    spark: SparkSession, sf_dir: str, truncate: bool = True
+) -> tuple[DataFrame, DataFrame]:
+    """(adj, edges): the ``_user_adj`` frame and its ``_adj_edges``.
+
+    ``truncate`` checkpoints the adjacency (lazily) first: the ONE pass
+    over the largest table, which the edge list and the node spine
+    (``_user_nodes``) both read (at 100 TB this cache is the window
+    shuffle's output — the cost you pay anyway). The loops' test pins
+    pass ``truncate=False`` to see the untruncated plan.
+    """
+    adj = _user_adj(spark, sf_dir)
+    if truncate:
+        adj = adj.localCheckpoint(eager=False)
+    return adj, _adj_edges(adj)
+
+
+def _user_nodes(adj: DataFrame) -> DataFrame:
+    """(node): every user with an event — ``_user_adj`` keeps exactly
+    the events that have a user."""
+    return adj.select(F.col("user_id").alias("node")).distinct()
+
+
 def _pagerank_users_ranks(
     spark: SparkSession, sf_dir: str, checkpoint_every: int = PRU_ITERS
 ) -> DataFrame:
@@ -619,14 +644,8 @@ def _pagerank_users_ranks(
     the audit's two round frames truncate. ``checkpoint_every=0``
     exposes the untruncated plan for the test pins.
     """
-    adj = _user_adj(spark, sf_dir)
-    if checkpoint_every:
-        # the ONE pass over the largest table: edge list and node
-        # spine both read this materialization (at 100 TB this cache
-        # is the window shuffle's output — the cost you pay anyway)
-        adj = adj.localCheckpoint(eager=False)
-    edges = _adj_edges(adj)
-    nodes = adj.select("user_id").distinct()
+    adj, edges = _user_graph(spark, sf_dir, truncate=checkpoint_every > 0)
+    nodes = _user_nodes(adj)
     nb = (
         nodes.agg(F.count("*").cast("long").alias("n"))
         .filter(F.col("n") > 0)  # ANSI DIV-0 guard; empty => no rows
@@ -639,9 +658,7 @@ def _pagerank_users_ranks(
     # node spine with the damping scalars attached once (a 1-row
     # broadcast — NOT a per-round crossJoin); referenced by every
     # round's zero-row branch, so it sits behind the checkpoint
-    nwb = nodes.crossJoin(F.broadcast(nb)).select(
-        F.col("user_id").alias("node"), "base", "r0"
-    )
+    nwb = nodes.crossJoin(F.broadcast(nb)).select("node", "base", "r0")
     if checkpoint_every:
         nwb = nwb.localCheckpoint(eager=False)
     outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("outw"))
@@ -762,12 +779,7 @@ def graph_lpa_communities(
     rounds run through ``iterate`` (``checkpoint_every=0`` exposes the
     untruncated plan for the test pins).
     """
-    ed = _user_edges(spark, sf_dir)
-    if checkpoint_every:
-        # ed appears on BOTH branches of the union — truncate first so
-        # the events window+groupBy runs once inside the `both`
-        # materialization, not per branch (conv. #12)
-        ed = ed.localCheckpoint(eager=False)
+    adj, ed = _user_graph(spark, sf_dir, truncate=checkpoint_every > 0)
     # undirected neighborhood: each directed edge contributes its
     # weight in both directions
     both = ed.select(
@@ -775,13 +787,7 @@ def graph_lpa_communities(
     ).unionAll(ed.select(F.col("dst").alias("node"), F.col("src").alias("nbr"), "w"))
     if checkpoint_every:
         both = both.localCheckpoint()
-    labels = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.col("user_id").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-    )
+    labels = _user_nodes(adj).withColumn("lbl", F.col("node"))
 
     def step(labels: DataFrame, k: int) -> DataFrame:
         nbr_lbl = both.join(
@@ -1263,10 +1269,7 @@ def graph_connected_components(
     Reference (waldfalke/catme-etl-j) has no graph surface (SURVEY.md
     §2.4); public algorithm: label propagation CC (Pregel canonical).
     """
-    ed = _user_edges(spark, sf_dir)
-    if checkpoint_every:
-        # ed feeds both union branches (conv. #12 — one window pass)
-        ed = ed.localCheckpoint(eager=False)
+    adj, ed = _user_graph(spark, sf_dir, truncate=checkpoint_every > 0)
     both = ed.select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
     ).unionAll(
@@ -1274,13 +1277,7 @@ def graph_connected_components(
     ).distinct()
     if checkpoint_every:
         both = both.localCheckpoint()
-    labels = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.col("user_id").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-    )
+    labels = _user_nodes(adj).withColumn("lbl", F.col("node"))
 
     def step(labels: DataFrame, k: int) -> DataFrame:
         nbr_min = (
@@ -1402,18 +1399,13 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha_den is a 1-row aggregate scalar, not data-sized driver
     state.
     """
-    # both loop-invariant frames materialize ONCE: every round (and the
-    # audit) re-references nodes, so an uncheckpointed node set would
-    # re-scan events per round (the one plan debt the pagerank loop
-    # still carries; pinned at zero parquet re-scans in test_plans.py)
-    nodes = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.col("user_id").alias("node"))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = _user_edges(spark, sf_dir).localCheckpoint()
+    # both loop-invariant frames materialize ONCE, from the one events
+    # pass: every round (and the audit) re-references nodes, so an
+    # uncheckpointed node set would re-scan per round (pinned at zero
+    # parquet re-scans in test_plans.py)
+    adj, edges = _user_graph(spark, sf_dir)
+    nodes = _user_nodes(adj).localCheckpoint()
+    edges = edges.localCheckpoint()
     row = edges.groupBy("dst").agg(F.sum("w").alias("instr")).agg(
         F.max("instr").alias("m")
     ).first()

@@ -15,6 +15,10 @@ chosen to also be the right default on a large cluster:
   are handed, so operator code never calls ``spark.conf.set``.
 * Arrow enabled — all pandas-UDF paths (xlsx source, multimodal, ANN)
   transfer columnar batches, not pickled rows.
+* Python workers fork from ``worker_daemon``, which stops every task
+  from re-reading the Spark zips' directories, and get the package
+  root on their path, so they import the package from any working
+  directory.
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime confs every query builds and runs under: UTC rendering and
 # events.ts TIMESTAMP(NANOS) read as int64 (tables._normalize_ts).
@@ -55,6 +61,8 @@ def get_spark(app_name: str = "catme_etl_j_spark", cpus: str | None = None) -> S
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "catme_etl_j_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # static conf: bucketed-table home (operators/scale.py)
         .config(
             "spark.sql.warehouse.dir",

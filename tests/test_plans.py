@@ -1328,6 +1328,60 @@ def test_katz_loop_reads_checkpointed_invariants(spark, sf_dir):
     )
 
 
+def _events_scans_run(spark, build, sf_dir):
+    """Output-row counts of the events parquet scans that RAN while
+    ``build(spark, sf_dir)`` was built and collected, from the SQL
+    status store (a scan whose stage was skipped reports no rows)."""
+    sc = spark.sparkContext
+    group = f"events-scans-{build.__name__}"
+    try:
+        sc.setJobGroup(group, group)
+        build(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    rows = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if ex.description() != group:
+            continue
+        values = store.executionMetrics(ex.executionId())
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not (node.name().startswith("Scan parquet") and "events" in node.desc()):
+                continue
+            metrics = node.metrics()
+            for m in range(metrics.size()):
+                metric = metrics.apply(m)
+                value = values.get(metric.accumulatorId())
+                if metric.name() == "number of output rows" and value.isDefined():
+                    rows.append(int(value.get().replace(",", "")))
+    return rows
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_pagerank_users",
+        "graph_lpa_communities",
+        "graph_connected_components",
+        "graph_katz_centrality",
+    ],
+)
+def test_user_graph_loops_scan_events_once(spark, sf_dir, name):
+    """Edge list and node spine both derive from the one checkpointed
+    ``_user_adj`` pass: building and running each user-graph loop
+    scans events exactly once, all of it."""
+    from catme_etl_j_spark.operators import graph
+    from catme_etl_j_spark.sources.tables import load_table
+
+    scans = _events_scans_run(spark, getattr(graph, name), sf_dir)
+    assert scans == [load_table(spark, sf_dir, "events").count()]
+
+
 def test_url_keep_first_map_only_single_aggregate(spark, sf_dir):
     """URL keep-first dedup is ONE pruned scan -> per-row
     canonicalization -> a single map-side-combining hash aggregate on
