@@ -103,15 +103,7 @@ def convert(
     )
 
     if fmt == "NDJSON":
-        n = write_ndjson(
-            df,
-            output,
-            overwrite=overwrite,
-            single_file=single_file,
-            # explicit threading (ADVICE r11): read_xlsx marks frames
-            # whose partitions are already in sheet-row order
-            slice_ordered=bool(getattr(df, "_catme_slice_ordered", False)),
-        )
+        n = write_ndjson(df, output, overwrite=overwrite, single_file=single_file)
         outputs = [output]
     elif fmt == "JSON":
         n = write_json_array(df, output, overwrite=overwrite, pretty_print=pretty_print)

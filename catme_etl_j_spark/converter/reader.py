@@ -1,13 +1,23 @@
-"""Spark DataFrame reader for XLSX (binaryFile + mapInArrow).
+"""Spark DataFrame reader for XLSX: the one home of xlsx scanning.
 
-SURVEY.md §2.1 chose option (b): ``spark.read.format("binaryFile")``
-fans whole files out to executors; each task streams its file's sheet
-XML with the constant-memory stdlib parser (xlsx.py) and emits Arrow
-record batches via ``mapInArrow`` (columnar build, no pandas
-round-trip). 100 TB posture: one sheet's XML is one
-unsplittable stream (SURVEY.md §7.7.1), so parallelism is per-file —
-a large corpus must be many files, and this reader scales linearly
-with file count while each task stays bounded-memory.
+SURVEY.md §2.1 chose option (b): the driver lists the input and plans
+ordered work units; executor tasks stream each unit's sheet XML with
+the constant-memory stdlib parser (xlsx.py) and emit Arrow record
+batches via ``mapInArrow`` (columnar build, no pandas round-trip).
+100 TB posture: one sheet's XML is one unsplittable DEFLATE stream
+(SURVEY.md §7.7.1), so parallelism is per work unit — a file, a
+(file, sheet), or a verified byte slice of one big local sheet. A
+large corpus must be many files, and this reader scales linearly with
+file count while each task stays bounded-memory.
+
+Every read is three steps, shared by ``read_xlsx`` and the
+``format("xlsx")`` DataSource (sources/xlsx_datasource.py):
+
+* **plan** — ``plan_units``: one unit per file in sorted path order,
+  one per (file, sheet) where the caller wants that grain, or
+  ``_plan_slices``'s byte slices of a single big sheet;
+* **infer** — ``infer_columns`` on the first file;
+* **parse** — ``parse_unit`` turns one unit into Arrow batches.
 
 Schema binding (reference semantics, SURVEY.md §2.2 R1/R2/R5):
 * the header row's cell strings become column names;
@@ -24,8 +34,15 @@ Cell conventions: a cell present-but-blank in the XML -> ``""``;
 a cell absent from the XML -> null (so NDJSON output can omit it,
 matching the EasyExcel path, while CSV pads it).
 
-Row order: ``_row_idx`` (0-based sheet row) + ``_file`` are carried so
-ordered single-file sinks can restore sheet order (SURVEY.md §1.5).
+Row order: ``_file`` + ``_row_idx`` (0-based sheet row), and
+``_sheet_idx`` on multi-sheet reads, are carried so ordered sinks can
+restore sheet order (SURVEY.md §1.5). A local read places its units in
+partitions as contiguous runs of the planned order, so its partitions
+are already in global (file, sheet, row) order with rows ordered inside
+each; the frame carries ``_catme_partition_ordered`` and the ordered
+NDJSON sink concatenates its partitions with no exchange and no sort.
+Any transformation drops the mark, and remote reads never carry it:
+those frames take the sorting sink.
 """
 
 from __future__ import annotations
@@ -34,8 +51,10 @@ import atexit
 import contextlib
 import logging
 import os
+import re
 import tempfile
 from collections.abc import Iterator
+from dataclasses import dataclass, replace
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -43,6 +62,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from catme_etl_j_spark.converter.errors import ConversionError
 from catme_etl_j_spark.converter.xlsx import (
@@ -97,12 +117,18 @@ def _reap_spools() -> None:
 atexit.register(_reap_spools)
 
 
-def _as_local_path(uri: str) -> str | None:
-    """``file:``-scheme URI -> filesystem path, else None."""
-    parsed = urlparse(uri)
-    if parsed.scheme in ("", "file"):
-        return unquote(parsed.path or uri)
-    return None
+_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
+
+
+def _as_local_path(path: str) -> str | None:
+    """Filesystem path of a ``file:`` or scheme-less path, else None (a
+    remote filesystem). binaryFile's path column holds the DECODED
+    Hadoop path (``file:/d/a b#1.xlsx``), so nothing is unquoted: a
+    name with ``%20``, ``#`` or ``?`` in it is taken literally."""
+    m = _SCHEME.match(path)
+    if m is None:
+        return path
+    return path[m.end() :] if m.group(0).lower() == "file:" else None
 
 
 def _dedupe(names: list[str]) -> list[str]:
@@ -135,58 +161,39 @@ def infer_columns(
     """Scan one workbook for the header row and the sheet's max width;
     returns final column names. Constant memory (single streaming pass).
 
-    ``max_col_override``: a width already established by an equivalent
-    strict scan (the slice plan's spool width, reader-internal) — only
-    the header row is read then."""
+    The width comes from the first source that can give it:
+    ``max_col_override`` (a width already established by an equivalent
+    strict scan — the slice plan's, reader-internal), the sheet's
+    ``dimension`` element, the light structural scan, or else a full
+    parse. Only the full parse reads past the header row.
+
+    The light scan sizes a dimension-less sheet ~10x faster than a full
+    parse (which cost ~40 s on the driver for the 1.2M-row bench sheet).
+    It is only equivalent when every row counts (header_row == 0 — the
+    full scan ignores pre-header rows), and returns None when it cannot
+    be strict (cells without refs, CDATA/comments)."""
     with XlsxWorkbook(
         content, min_inflate_ratio=min_inflate_ratio, max_entry_size=max_entry_size
     ) as wb:
+        max_col = max_col_override
+        if max_col is None:
+            dim = wb.sheet_dimension(sheet_name, sheet_index)
+            if dim is not None:
+                max_col = dim[1] - 1
+            elif header_row == 0:
+                max_col = wb.sheet_max_col(sheet_name, sheet_index)
+        full_scan = max_col is None
+        if full_scan:
+            max_col = -1
         header: dict[int, str] = {}
-        dim = wb.sheet_dimension(sheet_name, sheet_index)
-        if max_col_override is not None:
-            max_col = max_col_override
-            for row_idx, cells in wb.iter_rows(sheet_name, sheet_index):
-                if row_idx == header_row:
-                    header = cells
-                if row_idx >= header_row:
+        for row_idx, cells in wb.iter_rows(sheet_name, sheet_index):
+            if row_idx == header_row:
+                header = cells
+            if row_idx >= header_row:
+                if not full_scan:
                     break
-        elif dim is not None:
-            # O(1) width from the sheet's dimension element; only the
-            # header row needs reading. (Files without a dimension fall
-            # back to the full constant-memory scan below.)
-            max_col = dim[1] - 1
-            for row_idx, cells in wb.iter_rows(sheet_name, sheet_index):
-                if row_idx == header_row:
-                    header = cells
-                if row_idx >= header_row:
-                    break
-        else:
-            # r11: files without a dimension element used to pay a FULL
-            # iter_rows parse here just to size the schema (the 1.2M-row
-            # bench sheet parsed twice per conversion, ~40 s of it on
-            # the driver). A light structural scan finds the width
-            # ~10x faster; it is only equivalent when every row counts
-            # (header_row == 0 — the full scan ignores pre-header
-            # rows), and degrades to the full scan when it cannot be
-            # strict (cells without refs, CDATA/comments).
-            max_col = (
-                wb.sheet_max_col(sheet_name, sheet_index)
-                if header_row == 0
-                else None
-            )
-            if max_col is not None:
-                for row_idx, cells in wb.iter_rows(sheet_name, sheet_index):
-                    if row_idx == header_row:
-                        header = cells
-                    if row_idx >= header_row:
-                        break
-            else:
-                max_col = -1
-                for row_idx, cells in wb.iter_rows(sheet_name, sheet_index):
-                    if row_idx == header_row:
-                        header = cells
-                    if row_idx >= header_row and cells:
-                        max_col = max(max_col, max(cells))
+                if cells:
+                    max_col = max(max_col, max(cells))
     if max_col < 0:
         raise ConversionError("sheet has no rows at or after the header row")
     names = []
@@ -196,15 +203,155 @@ def infer_columns(
     return _dedupe(names)
 
 
+# A work unit: (path, sheet_idx, sheet, start, end). ``sheet`` is None
+# unless the unit is one (file, sheet) of a multi-sheet read; ``start``
+# and ``end`` are None unless the unit is a byte slice of a spooled
+# sheet. Units are planned in output order.
+Unit = tuple[str, int | None, str | None, int | None, int | None]
+_UNIT_DDL = "path string, sheet_idx long, sheet string, s_start long, s_end long"
+
+
+@dataclass(frozen=True)
+class Scan:
+    """What every parse task of one read shares: the read options, the
+    inferred data columns and, for a sliced sheet, the plan's spool.
+
+    ``sheet_name`` may be a single name, ``"*"`` (every sheet of every
+    workbook, in workbook order), or a list of names (those, in the
+    given order); the last two make a multi-sheet read, whose frames
+    carry ``_sheet_idx``/``_sheet`` meta columns."""
+
+    sheet_name: str | list[str] | None = None
+    sheet_index: int | None = None
+    header_row: int = 0
+    continue_on_error: bool = False
+    min_inflate_ratio: float = DEFAULT_MIN_INFLATE_RATIO
+    max_entry_size: int = DEFAULT_MAX_ENTRY_SIZE
+    columns: tuple[str, ...] = ()
+    spool: str | None = None
+
+    def __post_init__(self) -> None:
+        if self.multi and self.sheet_index is not None:
+            raise ConversionError("sheet_index cannot be combined with multi-sheet sheet_name")
+
+    @property
+    def multi(self) -> bool:
+        return self.sheet_name == "*" or isinstance(self.sheet_name, (list, tuple))
+
+    def workbook(self, source: str | bytes) -> XlsxWorkbook:
+        return XlsxWorkbook(
+            source,
+            min_inflate_ratio=self.min_inflate_ratio,
+            max_entry_size=self.max_entry_size,
+        )
+
+    def sheets(self, wb: XlsxWorkbook) -> list[tuple[int | None, str | None]]:
+        """``(sheet_idx, sheet)`` targets of one workbook, in output order;
+        ``sheet_idx`` is None on a single-sheet read."""
+        if not self.multi:
+            return [(None, self.sheet_name)]
+        return list(enumerate(wb.sheet_names if self.sheet_name == "*" else self.sheet_name))
+
+    def infer(self, source: str | bytes, max_col_override: int | None = None) -> Scan:
+        """This scan with its columns inferred from ``source``; a
+        multi-sheet read takes them from its first named (or the
+        first) sheet — all sheets must share the header layout."""
+        if self.sheet_name == "*":
+            sheet = None
+        else:
+            sheet = self.sheet_name[0] if self.multi else self.sheet_name
+        columns = infer_columns(
+            source,
+            sheet_name=sheet,
+            sheet_index=self.sheet_index,
+            header_row=self.header_row,
+            min_inflate_ratio=self.min_inflate_ratio,
+            max_entry_size=self.max_entry_size,
+            max_col_override=max_col_override,
+        )
+        return replace(self, columns=tuple(columns))
+
+    @property
+    def schema(self) -> T.StructType:
+        meta = [("_file", T.StringType())]
+        if self.multi:
+            meta += [("_sheet_idx", T.LongType()), ("_sheet", T.StringType())]
+        meta.append(("_row_idx", T.LongType()))
+        return T.StructType(
+            [T.StructField(n, t, False) for n, t in meta]
+            + [T.StructField(c, T.StringType(), True) for c in self.columns]
+        )
+
+
+def plan_units(scan: Scan, paths: list[str], *, per_sheet: bool = False) -> list[Unit]:
+    """Ordered work units for ``paths`` (already sorted): one per file,
+    or one per (file, sheet) of a multi-sheet read when ``per_sheet``
+    (listing sheets reads only each zip's central directory and
+    workbook.xml)."""
+    if not (per_sheet and scan.multi):
+        return [(p, None, None, None, None) for p in paths]
+    units: list[Unit] = []
+    for p in paths:
+        with scan.workbook(_as_local_path(p)) as wb:
+            units.extend((p, i, nm, None, None) for i, nm in scan.sheets(wb))
+    return units
+
+
+def _flush(
+    pa_schema: pa.Schema, meta: tuple, idxs: list[int], rows: list[dict]
+) -> pa.RecordBatch:
+    # Columnar batch building: one C-speed list comprehension per
+    # column instead of a Python tuple per row (~2x on wide scans).
+    n = len(idxs)
+    arrays = [pa.array([v] * n, f.type) for v, f in zip(meta, pa_schema)]
+    arrays.append(pa.array(idxs, pa.int64()))
+    n_data = len(pa_schema) - len(arrays)
+    arrays.extend(pa.array([r.get(i) for r in rows], pa.string()) for i in range(n_data))
+    return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
+
+
+def parse_unit(
+    scan: Scan, unit: Unit, content: bytes | None = None
+) -> Iterator[pa.RecordBatch]:
+    """The one parse: ``unit``'s data rows as Arrow batches of
+    ``scan.schema``, in sheet order, at most _BATCH_ROWS rows each.
+    The workbook is opened from its local path, or from ``content``
+    (its bytes) when the file lives on a remote filesystem."""
+    path, sheet_idx, sheet, start, end = unit
+    pa_schema = to_arrow_schema(scan.schema)
+    with scan.workbook(_as_local_path(path) if content is None else content) as wb:
+        targets = scan.sheets(wb) if sheet is None else [(sheet_idx, sheet)]
+        for s_idx, s_nm in targets:
+            if start is None:
+                it = wb.iter_rows(
+                    s_nm, scan.sheet_index, continue_on_error=scan.continue_on_error
+                )
+            else:
+                it = wb.iter_rows_slice(
+                    s_nm,
+                    scan.sheet_index,
+                    start=start,
+                    end=end,
+                    continue_on_error=scan.continue_on_error,
+                    spool_path=scan.spool,
+                )
+            meta = (path,) if s_idx is None else (path, s_idx, s_nm)
+            idxs: list[int] = []
+            rows: list[dict] = []
+            for row_idx, cells in it:
+                if row_idx <= scan.header_row:
+                    continue
+                idxs.append(row_idx)
+                rows.append(cells)
+                if len(idxs) >= _BATCH_ROWS:
+                    yield _flush(pa_schema, meta, idxs, rows)
+                    idxs, rows = [], []
+            if idxs:
+                yield _flush(pa_schema, meta, idxs, rows)
+
+
 def _plan_slices(
-    spark: SparkSession,
-    path: str,
-    spool: str,
-    n_par: int,
-    sheet_name: str | None,
-    sheet_index: int | None,
-    header_row: int,
-    **wb_kw,
+    spark: SparkSession, path: str, spool: str, n_par: int, scan: Scan
 ) -> tuple[list[tuple[int, int]] | None, int | None]:
     """Spool the sheet and run the strict slice scan as ONE Spark job:
     (slice plan, strict width or None), or (None, None) on any refusal —
@@ -213,12 +360,12 @@ def _plan_slices(
     stream to the spool (~1 s for 492 MB); the scan tasks read byte
     ranges of it (xlsx.slice_scan_tasks / scan_slice_range) and also
     measure the dimension-less width in the same pass."""
-    with XlsxWorkbook(path, **wb_kw) as wb:
-        meta = wb.spool_sheet(sheet_name, sheet_index, spool_path=spool)
+    with scan.workbook(path) as wb:
+        meta = wb.spool_sheet(scan.sheet_name, scan.sheet_index, spool_path=spool)
         want_width = (
             meta is not None
-            and header_row == 0
-            and wb.sheet_dimension(sheet_name, sheet_index) is None
+            and scan.header_row == 0
+            and wb.sheet_dimension(scan.sheet_name, scan.sheet_index) is None
         )
     tasks = slice_scan_tasks(meta, n_par) if meta is not None else None
     if tasks is None:
@@ -262,12 +409,13 @@ def read_xlsx(
     file reads assume a uniform header; column layout is inferred from
     the lexicographically first file.
     """
-    multi = sheet_name == "*" or isinstance(sheet_name, (list, tuple))
-    if multi and sheet_index is not None:
-        raise ConversionError("sheet_index cannot be combined with multi-sheet sheet_name")
-    sheet_list = list(sheet_name) if isinstance(sheet_name, (list, tuple)) else None
-    infer_sheet = (
-        None if sheet_name == "*" else (sheet_list[0] if sheet_list else sheet_name)
+    scan = Scan(
+        sheet_name=sheet_name,
+        sheet_index=sheet_index,
+        header_row=header_row,
+        continue_on_error=continue_on_error,
+        min_inflate_ratio=min_inflate_ratio,
+        max_entry_size=max_entry_size,
     )
     # A glob basename goes through pathGlobFilter on the parent dir:
     # same file set, but avoids FileStreamSink's metadata-dir probe on
@@ -281,233 +429,96 @@ def read_xlsx(
         binary = reader.option("pathGlobFilter", name).load(base)
     else:
         binary = reader.load(path)
-    # Header inference must NEVER materialize file content on the driver
-    # (the reference's design point is multi-GB files): collect paths
-    # only, then either open the first file straight from the local
-    # filesystem (zipfile reads just the central directory + the header
-    # row's bytes) or, for remote filesystems, run the inference in a
-    # one-file executor task and ship back only the column names.
-    # limit(2): the second row only tells the slice planner below
-    # whether this is a single-file read (never materializes content)
-    first = binary.select("path").orderBy("path").limit(2).collect()
-    if not first:
+    # The one listing, with no Spark job and never any content (the
+    # reference's design point is multi-GB files). inputFiles() gives
+    # encoded URIs (file:///d/a%20b.xlsx); decoding one gives exactly
+    # the path column's string (file:/d/a b.xlsx), which _file carries.
+    # Sorted on the driver: Python's code-point order on str is the
+    # UTF-8 byte order Spark sorts _file by, so the planned order IS
+    # the sorting sink's order.
+    uris = binary.inputFiles()
+    if not uris:
         raise ConversionError(f"no files matched {path!r}")
-    first_path = first[0]["path"]
-    single_file = len(first) == 1
-    infer_kw = dict(
-        sheet_name=infer_sheet,
-        sheet_index=sheet_index,
-        header_row=header_row,
-        min_inflate_ratio=min_inflate_ratio,
-        max_entry_size=max_entry_size,
-    )
-    local = _as_local_path(first_path)
+    if _as_local_path(uris[0]) is None:
+        return _read_remote(binary, scan)
+    paths = sorted("file:" + unquote(urlparse(u).path) for u in uris)
+    local = _as_local_path(paths[0])
+    n_par = int(spark.sparkContext.defaultParallelism)
+    units = plan_units(scan, paths)
+    width = None
     # Intra-sheet parallelism (guide §2 — one unsplittable stream is a
     # straggler): a single local workbook with one target sheet big
     # enough to matter is byte-sliced at STRICTLY-VERIFIED row
     # boundaries and parsed by N concurrent tasks (_plan_slices). Any
-    # refusal removes the spool and takes the serial path, which has
-    # byte-identical semantics.
-    slice_plan = None
-    n_par = int(spark.sparkContext.defaultParallelism)
-    if local is not None and not multi and single_file and n_par > 1:
+    # refusal removes the spool and keeps the one whole-file unit,
+    # which has byte-identical semantics.
+    if len(paths) == 1 and not scan.multi and n_par > 1:
         fd, spool = tempfile.mkstemp(prefix="catme_sheet_spool_", suffix=".xml")
         os.close(fd)
+        slices = None
         try:
-            slice_plan, slice_width = _plan_slices(
-                spark,
-                local,
-                spool,
-                n_par,
-                sheet_name,
-                sheet_index,
-                header_row,
-                min_inflate_ratio=min_inflate_ratio,
-                max_entry_size=max_entry_size,
-            )
+            slices, width = _plan_slices(spark, local, spool, n_par, scan)
         finally:
-            if slice_plan is None:
+            if slices is None:
                 with contextlib.suppress(OSError):
                     os.remove(spool)
-        if slice_plan is not None:
+        if slices is not None:
             _register_spool(spool)
-            if slice_width is not None:
-                infer_kw["max_col_override"] = slice_width
-    if local is not None:
-        columns = infer_columns(local, **infer_kw)
-    else:
-        name_schema = T.StructType([T.StructField("name", T.StringType(), False)])
-
-        def _infer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                for content in batch.column(0):
-                    names = infer_columns(content.as_py(), **infer_kw)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(names, pa.string())], ["name"]
-                    )
-
-        columns = [
-            r["name"]
-            for r in binary.filter(F.col("path") == first_path)
-            .select("content")
-            .mapInArrow(_infer, name_schema)
-            .collect()
-        ]
-        if not columns:
-            raise ConversionError(f"could not infer columns from {first_path!r}")
-
-    meta_fields = [
-        T.StructField("_file", T.StringType(), False),
-    ]
-    pa_meta = [pa.field("_file", pa.string(), False)]
-    if multi:
-        meta_fields += [
-            T.StructField("_sheet_idx", T.LongType(), False),
-            T.StructField("_sheet", T.StringType(), False),
-        ]
-        pa_meta += [
-            pa.field("_sheet_idx", pa.int64(), False),
-            pa.field("_sheet", pa.string(), False),
-        ]
-    meta_fields.append(T.StructField("_row_idx", T.LongType(), False))
-    pa_meta.append(pa.field("_row_idx", pa.int64(), False))
-
-    schema = T.StructType(meta_fields + [T.StructField(c, T.StringType(), True) for c in columns])
-    n_cols = len(columns)
-    pa_schema = pa.schema(pa_meta + [pa.field(c, pa.string()) for c in columns])
-    col_range = tuple(range(n_cols))
-
-    def _flush(
-        fpath: str, sheet: tuple[int, str] | None, idxs: list[int], rows: list[dict]
-    ) -> pa.RecordBatch:
-        # Columnar batch building: one C-speed list comprehension per
-        # column instead of a Python tuple per row (~2x on wide scans).
-        n = len(idxs)
-        arrays = [pa.array([fpath] * n, pa.string())]
-        if sheet is not None:
-            arrays.append(pa.array([sheet[0]] * n, pa.int64()))
-            arrays.append(pa.array([sheet[1]] * n, pa.string()))
-        arrays.append(pa.array(idxs, pa.int64()))
-        arrays.extend(pa.array([r.get(i) for r in rows], pa.string()) for i in col_range)
-        return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
-
-    # Bounded-memory fast path (the reference's headline invariant,
-    # contract :98/:220-225): when the input lives on a locally
-    # readable filesystem, ship only PATHS to the parse tasks and let
-    # each worker open the archive straight from disk — zipfile then
-    # streams the sheet through iterparse with O(batch) state, so the
-    # task's RSS is flat in BOTH row count and archive size (measured:
-    # 492 MB of sheet XML parses in ~180 MB worker RSS). Shipping
-    # whole-file bytes through the binaryFile content column (the
-    # remote-filesystem fallback below) adds JVM buffering + an Arrow
-    # transfer + a Python copy of the COMPRESSED archive — still far
-    # below the inflated sheet, but proportional to the file, and
-    # capped at Spark's 2 GB column limit, which the path mode escapes.
-    use_paths = _as_local_path(first_path) is not None
-
-    if slice_plan:
-        spool_for_tasks = spool
-        # one PARTITION per slice, in slice (= sheet row) order:
-        # parallelize assigns list element i to partition i, so the
-        # mapInArrow output partitions are already globally row-ordered
-        # with rows ordered inside each — the ordered single-file sink
-        # can then write partitions in parallel and concatenate them in
-        # partition order with NO exchange and NO sort
-        # (sinks._write_ndjson_partition_ordered).
-        sl_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(first_path, s, e) for (s, e) in slice_plan],
-                len(slice_plan),
-            ),
-            "path string, s_start long, s_end long",
-        )
-
-        def parse_slice(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                for p_sc, s0_sc, s1_sc in zip(
-                    batch.column(0), batch.column(1), batch.column(2)
-                ):
-                    fpath = p_sc.as_py()
-                    wb = XlsxWorkbook(
-                        _as_local_path(fpath),
-                        min_inflate_ratio=min_inflate_ratio,
-                        max_entry_size=max_entry_size,
-                    )
-                    try:
-                        idxs: list[int] = []
-                        rows: list[dict] = []
-                        for row_idx, cells in wb.iter_rows_slice(
-                            sheet_name,
-                            sheet_index,
-                            start=s0_sc.as_py(),
-                            end=s1_sc.as_py(),
-                            continue_on_error=continue_on_error,
-                            spool_path=spool_for_tasks,
-                        ):
-                            if row_idx <= header_row:
-                                continue
-                            idxs.append(row_idx)
-                            rows.append(cells)
-                            if len(idxs) >= _BATCH_ROWS:
-                                yield _flush(fpath, None, idxs, rows)
-                                idxs, rows = [], []
-                        if idxs:
-                            yield _flush(fpath, None, idxs, rows)
-                    finally:
-                        wb.close()
-
-        out_df = sl_df.mapInArrow(parse_slice, schema)
-        # Pure sink metadata (never semantics): partitions are in
-        # global row order with rows ordered inside each, so an ordered
-        # single-file sink may skip its sort entirely. convert()
-        # threads this explicitly into write_ndjson (ADVICE r11 — any
-        # intervening transformation by another caller simply loses the
-        # attribute and lands on the always-correct sorting path).
-        out_df._catme_slice_ordered = True
-        return out_df
+            scan = replace(scan, spool=spool)
+            units = [(paths[0], None, None, s, e) for s, e in slices]
+    scan = scan.infer(local, max_col_override=width)
 
     def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if use_paths:
-                pairs = ((p, None) for p in batch.column(0))
-            else:
-                pairs = zip(batch.column(0), batch.column(1))
-            for fpath_sc, content_sc in pairs:
-                fpath = fpath_sc.as_py()
-                wb = XlsxWorkbook(
-                    _as_local_path(fpath)
-                    if content_sc is None
-                    else content_sc.as_py(),
-                    min_inflate_ratio=min_inflate_ratio,
-                    max_entry_size=max_entry_size,
-                )
-                try:
-                    if multi:
-                        names = wb.sheet_names if sheet_name == "*" else sheet_list
-                        targets = [
-                            ((s_idx, s_nm), s_nm) for s_idx, s_nm in enumerate(names)
-                        ]
-                    else:
-                        targets = [(None, sheet_name)]
-                    for sheet_meta, s_nm in targets:
-                        idxs: list[int] = []
-                        rows: list[dict] = []
-                        for row_idx, cells in wb.iter_rows(
-                            s_nm, sheet_index, continue_on_error=continue_on_error
-                        ):
-                            if row_idx <= header_row:
-                                continue
-                            idxs.append(row_idx)
-                            rows.append(cells)
-                            if len(idxs) >= _BATCH_ROWS:
-                                yield _flush(fpath, sheet_meta, idxs, rows)
-                                idxs, rows = [], []
-                        if idxs:
-                            yield _flush(fpath, sheet_meta, idxs, rows)
-                finally:
-                    wb.close()
+            for unit in zip(*(c.to_pylist() for c in batch.columns)):
+                yield from parse_unit(scan, unit)
 
-    src = binary.select("path") if use_paths else binary.select("path", "content")
-    return src.mapInArrow(parse, schema=schema)
+    # Bounded-memory path mode (the reference's headline invariant,
+    # contract :98/:220-225): tasks get only units and open the archive
+    # straight from disk, so zipfile streams the sheet through expat
+    # with O(batch) state — task RSS is flat in BOTH row count and
+    # archive size (measured: 492 MB of sheet XML parses in ~180 MB
+    # worker RSS). parallelize puts contiguous runs of the unit list in
+    # partitions 0..k-1, so the frame is partition-ordered by
+    # construction.
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(units, min(len(units), n_par)), _UNIT_DDL
+    ).mapInArrow(parse, scan.schema)
+    df._catme_partition_ordered = True
+    return df
+
+
+def _read_remote(binary: DataFrame, scan: Scan) -> DataFrame:
+    """Files on a filesystem the driver cannot open: the workbook bytes
+    travel in binaryFile's ``content`` column. The columns are inferred
+    in a one-file executor task that ships back only the names; the
+    frame is in binaryFile's partition order, so it is not marked and
+    ordered sinks sort it. The content column adds JVM buffering, an
+    Arrow transfer and a Python copy of the COMPRESSED archive per file
+    — proportional to the file and capped at Spark's 2 GB column limit,
+    which the local path mode escapes."""
+    first_path = min(r[0] for r in binary.select("path").collect())
+
+    def infer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for content in batch.column(0):
+                names = scan.infer(content.as_py()).columns
+                yield pa.RecordBatch.from_arrays([pa.array(names, pa.string())], ["name"])
+
+    columns = [
+        r[0]
+        for r in binary.filter(F.col("path") == first_path)
+        .select("content")
+        .mapInArrow(infer, "name string")
+        .collect()
+    ]
+    if not columns:
+        raise ConversionError(f"could not infer columns from {first_path!r}")
+    scan = replace(scan, columns=tuple(columns))
+
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for path, content in zip(batch.column(0).to_pylist(), batch.column(1)):
+                yield from parse_unit(scan, (path, None, None, None, None), content.as_py())
+
+    return binary.select("path", "content").mapInArrow(parse, scan.schema)

@@ -6,8 +6,8 @@ divergences (§7.7.4), per sink:
 * NDJSON — native ``df.write.json`` (Spark's JSON sink IS ndjson).
   Absent cells are omitted from each object (EasyExcel-path parity;
   Spark drops null fields by default); present-but-blank cells are
-  ``""``. Single-file parity mode orders by ``_row_idx`` and renames
-  the lone part file. The reference's per-row flush
+  ``""``. Single-file parity mode writes the part files in sheet
+  order and concatenates them. The reference's per-row flush
   (NdjsonDataWriter.java:145-147) is a perf anti-feature with no Spark
   analog — buffering is the task commit protocol's job.
 * CSV — chunk files named ``<inputbase>-chunk-N.csv``, N starting at 1
@@ -84,48 +84,24 @@ def _count_lines(*paths: str) -> int:
     return n
 
 
-def _write_ndjson_partition_ordered(df: DataFrame, output: str) -> int:
-    """Ordered single-file NDJSON from a frame whose PARTITIONS are
-    already in global row order with rows ordered inside each (the
-    slice-parallel reader's contract — one partition per byte slice,
-    slices in sheet order): drop the meta columns and let every task
-    stream its partition straight to a JSON part file — NO exchange,
-    NO sort — then concatenate the part files in partition order.
-    Byte-identical to the serial repartition(1)+sort write (r12: this
-    replaces the r11 bucketed sink, which re-shuffled every row by a
-    _row_idx bucket and re-sorted what the parse tasks already emit in
-    order). Empty partitions write no part file; the remaining names
-    still sort in partition order."""
-    tmp = tempfile.mkdtemp(prefix="ndjson_", dir=os.path.dirname(os.path.abspath(output)))
-    try:
-        df.drop(*META_COLS).write.mode("overwrite").json(tmp)
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        with open(output, "wb") as out:
-            for part in parts:
-                with open(part, "rb") as src:
-                    shutil.copyfileobj(src, out, 1 << 20)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return _count_lines(output)
-
-
 def write_ndjson(
     df: DataFrame,
     output: str,
     *,
     overwrite: bool = False,
     single_file: bool = True,
-    slice_ordered: bool | None = None,
 ) -> int:
     """Write NDJSON; returns rows written. ``single_file=False`` is the
     scale path: parallel partitioned write, `output` becomes a dir.
 
-    ``slice_ordered``: the frame's partitions are already in global row
-    order (the slice-parallel reader's contract) so the single-file
-    sink may skip its sort. ``convert()`` threads it explicitly; when
-    None the reader's ``_catme_slice_ordered`` attribute is consulted
-    (lost by any intervening transformation, which safely lands on the
-    sorting path).
+    The single file is Spark's part files concatenated in partition
+    order. A frame carrying the reader's ``_catme_partition_ordered``
+    mark (every local ``read_xlsx`` frame: partitions already in global
+    row order, rows ordered inside each) is written as it is — every
+    task streams its partition, NO exchange, NO sort. Any other frame
+    (a remote read, or one a caller transformed, which drops the mark)
+    is first brought to one sorted partition by ``_ordered_single``.
+    Both are byte-identical for a reader frame.
 
     Rows-written is counted from the OUTPUT files (cheap local line
     count), not via df.count() — counting the frame would re-execute
@@ -134,18 +110,19 @@ def write_ndjson(
     if not single_file:
         df.drop(*META_COLS).write.mode("overwrite").json(output)
         return _count_lines(*glob.glob(os.path.join(output, "part-*")))
-    if slice_ordered is None:
-        slice_ordered = bool(getattr(df, "_catme_slice_ordered", False))
-    if slice_ordered:
-        return _write_ndjson_partition_ordered(df, output)
+    if not getattr(df, "_catme_partition_ordered", False):
+        df = _ordered_single(df)
     tmp = tempfile.mkdtemp(prefix="ndjson_", dir=os.path.dirname(os.path.abspath(output)))
     try:
-        (_ordered_single(df).drop(*META_COLS).write.mode("overwrite").json(tmp))
+        df.drop(*META_COLS).write.mode("overwrite").json(tmp)
         parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        if not parts:  # zero-row frame: Spark may emit no part file
-            open(output, "w").close()
-        else:
+        if len(parts) == 1:
             shutil.move(parts[0], output)
+        else:  # empty partitions write no part file; none at all -> empty output
+            with open(output, "wb") as out:
+                for part in parts:
+                    with open(part, "rb") as src:
+                        shutil.copyfileobj(src, out, 1 << 20)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return _count_lines(output)

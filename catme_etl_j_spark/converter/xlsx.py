@@ -927,8 +927,3 @@ def combine_slice_scans(
         if sum(r["n_open"] for r in results) == sum(r["n_ref"] for r in results) and mc >= 0:
             width = mc
     return list(zip(starts, starts[1:] + [sd_close])), width
-
-
-def list_sheets(source: str | bytes) -> list[str]:
-    with XlsxWorkbook(source) as wb:
-        return wb.sheet_names

@@ -178,12 +178,11 @@ def test_slice_parallel_parse_matches_serial(spark, tmp_path, monkeypatch):
         sliced = [r for s, e in plan for r in wb.iter_rows_slice(start=s, end=e)]
         assert sliced == list(wb.iter_rows())
 
-    # end-to-end: the sliced frame equals the serial frame, and the
-    # partition-ordered NDJSON sink is byte-identical to the serial
-    # repartition(1)+sort sink
+    # end-to-end: the sliced frame equals the serial frame, and its
+    # concatenated NDJSON is byte-identical to the serial one-unit read's
     sliced_df = read_xlsx(spark, p)
     assert sliced_df.rdd.getNumPartitions() > 1  # really took the slice path
-    assert sliced_df._catme_slice_ordered  # sink metadata attached
+    assert sliced_df._catme_partition_ordered  # sink metadata attached
     assert sliced_df.orderBy("_row_idx").collect() == serial_df
     out_sliced = str(tmp_path / "sliced.ndjson")
     convert(p, "NDJSON", out_sliced, overwrite=True, spark=spark)
@@ -216,7 +215,7 @@ def test_slice_scan_failure_falls_back_to_serial(spark, tmp_path, monkeypatch, c
     with caplog.at_level("WARNING", logger="catme_etl_j_spark.converter.reader"):
         df = read_xlsx(spark, p)
     assert "slice scan job failed" in caplog.text  # the job ran, and failed
-    assert not getattr(df, "_catme_slice_ordered", False)  # serial path
+    assert df.rdd.getNumPartitions() == 1  # serial path: one whole-file unit
     out = str(tmp_path / "fallback.ndjson")
     res = convert(p, "NDJSON", out, overwrite=True, spark=spark)
     assert res.rows_written == 2000
@@ -489,6 +488,114 @@ def test_multi_file_read(spark, tmp_path):
     rows = df.orderBy("_file", "_row_idx").collect()
     assert [r["k"] for r in rows] == ["k0", "k1", "k2"]
     assert len({r["_file"] for r in rows}) == 3
+
+
+def test_file_names_are_taken_literally(spark, tmp_path):
+    """``_file`` is binaryFile's path string, and a name holding ``%20``,
+    ``#``, ``?``, a space or non-ASCII is opened as written — the
+    listing's encoded URIs are decoded exactly once."""
+    d = tmp_path / "in dir%20x"
+    d.mkdir()
+    names = ["a b.xlsx", "p%20q.xlsx", "x#y.xlsx", "q?z.xlsx", "ü日本.xlsx", "plain.xlsx"]
+    for i, n in enumerate(names):
+        write_xlsx(str(d / n), {"S": [["k"], [str(i)]]})
+    listed = sorted(r[0] for r in spark.read.format("binaryFile").load(str(d)).collect())
+    df = read_xlsx(spark, str(d / "*.xlsx"))
+    assert [r["_file"] for r in df.collect()] == listed
+    assert df.count() == len(names)
+
+
+@pytest.fixture(scope="module")
+def glob_dirs(tmp_path_factory):
+    """Eight single-sheet workbooks and three two-sheet workbooks, with
+    sparse rows; file names sort differently from their sizes."""
+    d = tmp_path_factory.mktemp("globs")
+    (d / "single").mkdir()
+    (d / "multi").mkdir()
+    for k in range(8):
+        rows = [["k", "v"]] + [[f"f{k}r{i}", "x" * ((k * 37) % 11)] for i in range(5 + 7 * (k % 3))]
+        rows[3] = [None, "sparse"]
+        write_xlsx(str(d / "single" / f"part_{k:02d}.xlsx"), {"S": rows})
+    for k in range(3):
+        write_xlsx(
+            str(d / "multi" / f"wb{k}.xlsx"),
+            {
+                "alpha": [["k", "v"]] + [[f"a{k}.{i}", str(i)] for i in range(4 + k)],
+                "beta": [["k", "v"], [f"b{k}", None], [None, "only-v"]],
+            },
+        )
+    return {"single": str(d / "single" / "*.xlsx"), "multi": str(d / "multi" / "*.xlsx")}
+
+
+def _partition_keys(df) -> list[list[tuple]]:
+    cols = [c for c in ("_file", "_sheet_idx", "_row_idx") if c in df.columns]
+    return [[tuple(r) for r in part] for part in df.select(*cols).rdd.glom().collect() if part]
+
+
+@pytest.mark.parametrize("layout", ["single", "multi"])
+def test_local_reads_are_partition_ordered(spark, glob_dirs, tmp_path, layout):
+    """A local glob or multi-sheet read places contiguous runs of the
+    sorted units in partitions: each partition's rows are in (file,
+    sheet, row) order and start after the previous partition's last
+    row, so the marked frame's concat NDJSON is byte-identical to the
+    sorting sink's (``_ordered_single``) output of the same frame."""
+    from catme_etl_j_spark.converter.sinks import write_ndjson
+
+    sheet_name = "*" if layout == "multi" else None
+    df = read_xlsx(spark, glob_dirs[layout], sheet_name=sheet_name)
+    parts = _partition_keys(df)
+    assert len(parts) > 1
+    for prev, part in zip(parts, parts[1:]):
+        assert part[0] > prev[-1]
+    assert all(part == sorted(part) for part in parts)
+    assert df._catme_partition_ordered
+
+    out = str(tmp_path / "convert.ndjson")
+    res = convert(glob_dirs[layout], "NDJSON", out, sheet_name=sheet_name, spark=spark)
+    sorted_out = str(tmp_path / "sorted.ndjson")
+    unmarked = df.select("*")  # any transformation drops the mark
+    assert not getattr(unmarked, "_catme_partition_ordered", False)
+    assert write_ndjson(unmarked, sorted_out) == res.rows_written
+    assert open(out, "rb").read() == open(sorted_out, "rb").read()
+
+
+def test_reordered_frame_still_written_in_row_order(spark, glob_dirs, tmp_path):
+    """The sorting sink is the fallback for frames a caller reordered:
+    a repartitioned reader frame still writes sheet order."""
+    from catme_etl_j_spark.converter.sinks import write_ndjson
+
+    out = str(tmp_path / "o.ndjson")
+    convert(glob_dirs["single"], "NDJSON", out, spark=spark)
+    shuffled = read_xlsx(spark, glob_dirs["single"]).repartition(3)
+    assert shuffled.rdd.getNumPartitions() == 3
+    again = str(tmp_path / "again.ndjson")
+    write_ndjson(shuffled, again)
+    assert open(again, "rb").read() == open(out, "rb").read()
+    keys = [json.loads(ln).get("k") for ln in open(out)]
+    assert [k for k in keys if k][:2] == ["f0r0", "f0r1"]
+    assert [k for k in keys if k][-1] == "f7r11"
+
+
+@pytest.mark.parametrize("layout", ["single", "multi"])
+def test_remote_content_read_matches_local(spark, glob_dirs, tmp_path, monkeypatch, layout):
+    """Input the driver cannot open travels as binaryFile content: the
+    columns are inferred in an executor task and the parse runs on the
+    workbook bytes; the frame is unmarked, and its NDJSON equals the
+    local read's byte for byte."""
+    from catme_etl_j_spark.converter import reader as reader_mod
+
+    sheet_name = "*" if layout == "multi" else None
+    local_out = str(tmp_path / "local.ndjson")
+    convert(glob_dirs[layout], "NDJSON", local_out, sheet_name=sheet_name, spark=spark)
+    local_cols = read_xlsx(spark, glob_dirs[layout], sheet_name=sheet_name).columns
+
+    monkeypatch.setattr(reader_mod, "_as_local_path", lambda uri: None)
+    remote = read_xlsx(spark, glob_dirs[layout], sheet_name=sheet_name)
+    assert remote.columns == local_cols
+    assert not getattr(remote, "_catme_partition_ordered", False)
+    remote_out = str(tmp_path / "remote.ndjson")
+    convert(glob_dirs[layout], "NDJSON", remote_out, sheet_name=sheet_name, spark=spark)
+    assert open(remote_out, "rb").read() == open(local_out, "rb").read()
 
 
 @pytest.mark.slow

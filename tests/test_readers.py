@@ -46,6 +46,7 @@ def test_schema_inference_never_collects_content(spark, tmp_path, monkeypatch):
     except ImportError:
         from pyspark.sql import DataFrame
 
+    from catme_etl_j_spark.converter import reader as reader_mod
     from catme_etl_j_spark.converter.reader import read_xlsx
 
     p = _fixture(tmp_path)
@@ -59,6 +60,10 @@ def test_schema_inference_never_collects_content(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", spy)
     df = read_xlsx(spark, p)
     assert df.count() == 40
+    assert collected == []  # a local read lists through inputFiles(), no job
+    # a remote read collects its path list and the executor-inferred names
+    monkeypatch.setattr(reader_mod, "_as_local_path", lambda path: None)
+    assert read_xlsx(spark, p).count() == 40
     assert collected, "inference should collect paths"
     for cols in collected:
         assert "content" not in cols, f"driver collected file content: {cols}"

@@ -19,6 +19,12 @@ def _norm(df):
 
 
 def test_datasource_matches_mapinpandas_reader(spark, tmp_path):
+    """Both readers plan one unit per file in sorted path order and
+    parse it with the same function: their frames are equal partition
+    by partition (``_file`` is a plain path here, a ``file:`` URI
+    there)."""
+    from catme_etl_j_spark.converter.reader import _as_local_path
+
     for i in range(3):
         write_xlsx(
             str(tmp_path / f"f{i}.xlsx"),
@@ -29,6 +35,15 @@ def test_datasource_matches_mapinpandas_reader(spark, tmp_path):
     assert via_ds.columns == via_mp.columns
     assert _norm(via_ds) == _norm(via_mp)
     assert via_ds.count() == 6
+
+    def parts(df):
+        return [
+            [(_as_local_path(r[0]),) + tuple(r[1:]) for r in part]
+            for part in df.rdd.glom().collect()
+        ]
+
+    assert parts(via_ds) == parts(via_mp)
+    assert len(parts(via_ds)) == 3
 
 
 def test_datasource_options(spark, tmp_path):

@@ -9,7 +9,7 @@ from catme_etl_j_spark.converter.errors import (
     SheetNotFoundError,
     ZipBombDetectedError,
 )
-from catme_etl_j_spark.converter.xlsx import XlsxWorkbook, list_sheets
+from catme_etl_j_spark.converter.xlsx import XlsxWorkbook
 from catme_etl_j_spark.converter.xlsx_writer import write_xlsx
 
 
@@ -63,8 +63,8 @@ def test_sheet_selection_precedence(tmp_path):
         str(tmp_path / "a.xlsx"),
         {"First": [["f"]], "Second": [["s"]]},
     )
-    assert list_sheets(p) == ["First", "Second"]
     with XlsxWorkbook(p) as wb:
+        assert wb.sheet_names == ["First", "Second"]
         assert wb.resolve_sheet(sheet_name="First", sheet_index=1).endswith("sheet2.xml")
         assert wb.resolve_sheet(sheet_name="Second").endswith("sheet2.xml")
         assert wb.resolve_sheet().endswith("sheet1.xml")
