@@ -74,7 +74,9 @@ from catme_etl_j_spark.converter.xlsx import (
     slice_scan_tasks,
 )
 
-_BATCH_ROWS = 50_000  # rows per emitted Arrow batch; bounds task memory
+# Cell text per emitted Arrow batch: a batch is cut by bytes, not rows,
+# so its memory is flat in row width as well as row count.
+_BATCH_BYTES = 1 << 20
 
 _log = logging.getLogger(__name__)
 
@@ -314,7 +316,9 @@ def parse_unit(
     scan: Scan, unit: Unit, content: bytes | None = None
 ) -> Iterator[pa.RecordBatch]:
     """The one parse: ``unit``'s data rows as Arrow batches of
-    ``scan.schema``, in sheet order, at most _BATCH_ROWS rows each.
+    ``scan.schema``, in sheet order, each cut once its rows reach
+    _BATCH_BYTES. A row costs its cell string lengths plus 16 per cell
+    and 64 per row, so runs of empty rows flush too.
     The workbook is opened from its local path, or from ``content``
     (its bytes) when the file lives on a remote filesystem."""
     path, sheet_idx, sheet, start, end = unit
@@ -338,14 +342,16 @@ def parse_unit(
             meta = (path,) if s_idx is None else (path, s_idx, s_nm)
             idxs: list[int] = []
             rows: list[dict] = []
+            size = 0
             for row_idx, cells in it:
                 if row_idx <= scan.header_row:
                     continue
                 idxs.append(row_idx)
                 rows.append(cells)
-                if len(idxs) >= _BATCH_ROWS:
+                size += 64 + 16 * len(cells) + sum(map(len, cells.values()))
+                if size >= _BATCH_BYTES:
                     yield _flush(pa_schema, meta, idxs, rows)
-                    idxs, rows = [], []
+                    idxs, rows, size = [], [], 0
             if idxs:
                 yield _flush(pa_schema, meta, idxs, rows)
 
@@ -358,8 +364,9 @@ def _plan_slices(
     a failed scan job (spool gone, worker lost) included. The driver
     keeps only the inherently serial step, inflating the one DEFLATE
     stream to the spool (~1 s for 492 MB); the scan tasks read byte
-    ranges of it (xlsx.slice_scan_tasks / scan_slice_range) and also
-    measure the dimension-less width in the same pass."""
+    ranges of it in fixed windows (xlsx.slice_scan_tasks /
+    scan_slice_range) and also measure the dimension-less width in the
+    same pass."""
     with scan.workbook(path) as wb:
         meta = wb.spool_sheet(scan.sheet_name, scan.sheet_index, spool_path=spool)
         want_width = (
@@ -374,7 +381,7 @@ def _plan_slices(
     try:
         res = (
             spark.sparkContext.parallelize(ranges, len(ranges))
-            .map(lambda r: scan_slice_range(spool, r[0], r[1], targets, decl_q, want_width))
+            .flatMap(lambda r: scan_slice_range(spool, r[0], r[1], targets, decl_q, want_width))
             .collect()
         )
     except Exception:
@@ -476,9 +483,11 @@ def read_xlsx(
     # Bounded-memory path mode (the reference's headline invariant,
     # contract :98/:220-225): tasks get only units and open the archive
     # straight from disk, so zipfile streams the sheet through expat
-    # with O(batch) state — task RSS is flat in BOTH row count and
-    # archive size (measured: 492 MB of sheet XML parses in ~180 MB
-    # worker RSS). parallelize puts contiguous runs of the unit list in
+    # and a batch holds at most _BATCH_BYTES of cell text — task RSS is
+    # flat in row count, row width and archive size (measured on 4
+    # cores: 492 MB of sheet XML converts with a 125 MB Python-worker
+    # VmHWM; the shared-strings table is the one per-task term left,
+    # ROADMAP #2). parallelize puts contiguous runs of the unit list in
     # partitions 0..k-1, so the frame is partition-ordered by
     # construction.
     df = spark.createDataFrame(

@@ -748,11 +748,12 @@ def _cell_width(buf: bytes, limit: int) -> tuple[int, int, int]:
 
 # --- the slice planner ------------------------------------------------
 # spool_sheet inflates the sheet once; slice_scan_tasks turns its facts
-# into byte ranges; scan_slice_range strict-scans each range (the
-# reader runs them as ONE Spark job); combine_slice_scans sums the
-# needle counts, takes first/last positions by min/max, and resolves
-# each slice boundary ("first strict row start at/after target T") from
-# the range owning T or the first later range with a row start. The
+# into byte ranges; scan_slice_range strict-scans each range in
+# _SCAN_WINDOW windows (the reader runs them as ONE Spark job);
+# combine_slice_scans sums the windows' needle counts, takes first/last
+# positions by min/max, and resolves each slice boundary ("first strict
+# row start at/after target T") from the window owning T or the first
+# later window with a row start. The
 # plan refuses — None, the caller parses serially — on:
 # * a sheet below SLICE_TARGET_BYTES;
 # * a UTF-16 BOM, an unterminated XML declaration, or a declared
@@ -766,6 +767,9 @@ def _cell_width(buf: bytes, limit: int) -> tuple[int, int, int]:
 # * fewer than two slices.
 
 _SCAN_OVERLAP = 4096  # > max row-number digits and the width scan's tag carry
+# Bytes of spool a scan task holds at once: its range is scanned in
+# windows of this size, so scan memory is flat in sheet size.
+_SCAN_WINDOW = 4 << 20
 
 
 def slice_scan_tasks(
@@ -806,17 +810,29 @@ def scan_slice_range(
     targets: list[int],
     decl_q_pos: int | None,
     want_width: bool,
-) -> dict:
+) -> list[dict]:
     """Strict-scan ONE byte range [lo, hi) of a spooled sheet XML (the
-    per-task body of the slice plan). Only occurrences that START
-    inside [lo, hi) count; the overlap read past ``hi`` lets needles,
-    row-number digits and cell tags that straddle the range edge
-    resolve here without being double-counted by the next range.
-    Returns a plain picklable dict for :func:`combine_slice_scans`."""
-    n = hi - lo
+    per-task body of the slice plan), one _SCAN_WINDOW at a time, so a
+    task holds one window however big the sheet is. Returns one plain
+    picklable dict per window for :func:`combine_slice_scans`, which
+    treats windows exactly as it treats ranges."""
     with open(spool_path, "rb") as f:
-        f.seek(lo)
-        buf = f.read(n + _SCAN_OVERLAP)
+        return [
+            _scan_window(f, w, min(w + _SCAN_WINDOW, hi), targets, decl_q_pos, want_width)
+            for w in range(lo, hi, _SCAN_WINDOW)
+        ]
+
+
+def _scan_window(
+    f, lo: int, hi: int, targets: list[int], decl_q_pos: int | None, want_width: bool
+) -> dict:
+    """Strict-scan [lo, hi) of the open spool ``f``. Only occurrences
+    that START inside [lo, hi) count; the overlap read past ``hi`` lets
+    needles, row-number digits and cell tags that straddle the window
+    edge resolve here without being double-counted by the next window."""
+    n = hi - lo
+    f.seek(lo)
+    buf = f.read(n + _SCAN_OVERLAP)
     limit = min(n, len(buf))
 
     def first_pos(needle: bytes) -> int | None:
@@ -842,9 +858,9 @@ def scan_slice_range(
         "first_ok": None,
         "bounds": {},
     }
-    # Walk strict row starts only as far as needed: the range's first
+    # Walk strict row starts only as far as needed: the window's first
     # one, its first with a digit after r= ("ok"), and the first ok one
-    # at/after each in-range target. Slices start only at ok rows: the
+    # at/after each in-window target. Slices start only at ok rows: the
     # handler numbers a digit-less r="" row from the row before it,
     # which a slice starting there would not have.
     tq = sorted(t - lo for t in targets if lo <= t < hi)
@@ -876,7 +892,8 @@ def combine_slice_scans(
     targets: list[int],
     want_width: bool,
 ) -> tuple[list[tuple[int, int]] | None, int | None]:
-    """Driver-side combine of :func:`scan_slice_range` results into the
+    """Driver-side combine of the windows of every
+    :func:`scan_slice_range` result, in one flat list, into the
     slice plan ``[(start, end)]`` — each slice starts at a row element's
     ``<`` and ends at the next slice's start (the last at
     ``</sheetData``) — plus the strict max-column width when requested.
@@ -908,8 +925,8 @@ def combine_slice_scans(
         for r in results:
             if t in r["bounds"]:
                 return r["bounds"][t]
-            # t's own range ran out of rows past t: the first later
-            # range's first ok row start is the first at/after t
+            # t's own window ran out of rows past t: the first later
+            # window's first ok row start is the first at/after t
             if r["lo"] > t and r["first_ok"] is not None:
                 return r["first_ok"]
         return None

@@ -20,8 +20,8 @@ with no SparkContext) and read remote filesystems; this source lists
 local paths with a Python glob. Both parse the same units in the same
 order (read_xlsx packs them into at most one partition per core), so
 their frames are equal partition by partition on up to one file per
-core (tests/test_xlsx_datasource.py); ``_file`` here is the plain path
-where read_xlsx carries binaryFile's ``file:`` path. Measured
+core (tests/test_xlsx_datasource.py); both carry binaryFile's decoded
+``file:`` path in ``_file``. Measured
 head-to-head on a 4-vCPU VM (local[4], 8 files x 12.5k rows x 4
 columns to the ``noop`` sink, median of 7 alternating runs after
 warm-up) this source takes 1.62 s and read_xlsx 1.10 s: it runs one
@@ -37,7 +37,7 @@ from dataclasses import replace
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from catme_etl_j_spark.converter.errors import ConversionError
-from catme_etl_j_spark.converter.reader import Scan, parse_unit, plan_units
+from catme_etl_j_spark.converter.reader import Scan, _as_local_path, parse_unit, plan_units
 from catme_etl_j_spark.converter.xlsx import (
     DEFAULT_MAX_ENTRY_SIZE,
     DEFAULT_MIN_INFLATE_RATIO,
@@ -78,13 +78,14 @@ class XlsxDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ConversionError("xlsx source requires a path: .load('/data/*.xlsx')")
-        paths = sorted(glob.glob(os.path.join(path, "*.xlsx") if os.path.isdir(path) else path))
+        pattern = os.path.join(path, "*.xlsx") if os.path.isdir(path) else path
+        paths = sorted("file:" + os.path.abspath(p) for p in glob.glob(pattern))
         if not paths:
             raise ConversionError(f"no files matched {path!r}")
         return paths
 
     def schema(self):
-        return self._scan().infer(self._paths()[0]).schema
+        return self._scan().infer(_as_local_path(self._paths()[0])).schema
 
     def reader(self, schema) -> DataSourceReader:
         scan = self._scan()

@@ -12,19 +12,11 @@ def _register(spark):
     register(spark)
 
 
-def _norm(df):
-    return sorted(
-        tuple(r)[1:] for r in df.select(*sorted(df.columns)).collect()
-    )  # drop _file (absolute paths differ), order-insensitive
-
-
 def test_datasource_matches_mapinpandas_reader(spark, tmp_path):
     """Both readers plan one unit per file in sorted path order and
-    parse it with the same function: their frames are equal partition
-    by partition (``_file`` is a plain path here, a ``file:`` URI
-    there)."""
-    from catme_etl_j_spark.converter.reader import _as_local_path
-
+    parse it with the same function, and both carry binaryFile's
+    decoded ``file:`` path in ``_file``: their frames are equal
+    partition by partition."""
     for i in range(3):
         write_xlsx(
             str(tmp_path / f"f{i}.xlsx"),
@@ -33,17 +25,14 @@ def test_datasource_matches_mapinpandas_reader(spark, tmp_path):
     via_ds = spark.read.format("xlsx").load(str(tmp_path / "*.xlsx"))
     via_mp = read_xlsx(spark, str(tmp_path / "*.xlsx"))
     assert via_ds.columns == via_mp.columns
-    assert _norm(via_ds) == _norm(via_mp)
     assert via_ds.count() == 6
 
     def parts(df):
-        return [
-            [(_as_local_path(r[0]),) + tuple(r[1:]) for r in part]
-            for part in df.rdd.glom().collect()
-        ]
+        return [[tuple(r) for r in part] for part in df.rdd.glom().collect()]
 
     assert parts(via_ds) == parts(via_mp)
     assert len(parts(via_ds)) == 3
+    assert parts(via_ds)[0][0][0] == "file:" + str(tmp_path / "f0.xlsx")
 
 
 def test_datasource_options(spark, tmp_path):
