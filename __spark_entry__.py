@@ -154,12 +154,12 @@ def _with_query_conf(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _modules():
-        out.update(getattr(mod, "QUERIES", {}))
+        out.update(mod.QUERIES)
     return {name: _with_query_conf(fn) for name, fn in _reorder(out).items()}
 
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
     for mod in _modules():
-        out.update(getattr(mod, "ORACLES", {}))
+        out.update(mod.ORACLES)
     return _reorder(out)

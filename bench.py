@@ -292,7 +292,7 @@ def _bench_converter_bigsheet(spark) -> float:
     use). Single run, not min-of-N — at ~85 s the steady-state number
     IS the number, and the memory pin lives in
     tests/test_converter.py::test_bigsheet_conversion_bounded_memory
-    (parse-task peak RSS < 320 MB, measured 184 MB). rows/sec =
+    (Python-worker peak VmHWM < 150 MB, measured 125 MB). rows/sec =
     1_200_000 / this entry's seconds."""
     import tempfile
 

@@ -401,9 +401,12 @@ class XlsxWorkbook:
         with _typed(self._name, "shared strings"), f:
             parts: list[str] = []
             in_rph = 0
+            root = None
             for event, el in iterparse(f, events=("start", "end")):
                 if event == "start":
-                    if el.tag == f"{_NS_MAIN}rPh":
+                    if root is None:
+                        root = el
+                    elif el.tag == f"{_NS_MAIN}rPh":
                         in_rph += 1
                     continue
                 if el.tag == f"{_NS_MAIN}rPh":
@@ -416,7 +419,11 @@ class XlsxWorkbook:
                 elif el.tag == f"{_NS_MAIN}si":
                     strings.append("".join(parts))
                     parts = []
+                    # iterparse attaches every <si> to the <sst> root;
+                    # clearing alone would keep one empty Element per
+                    # entry alive beside the strings
                     el.clear()
+                    root.clear()
         return strings
 
     def _style_renderers(self) -> list:

@@ -2,55 +2,29 @@
 
 The engine's rule: built-in ``pyspark.sql.functions`` for anything they
 can express (JVM-side, codegen'd); when Python is unavoidable, Arrow-
-batched pandas UDFs — never row-at-a-time ``F.udf``. These examples are
-the sanctioned patterns; tests/test_udfs.py proves each agrees with its
-built-in twin, which is also the performance moral: if a built-in twin
-exists, use it.
+batched pandas UDFs — never row-at-a-time ``F.udf``. tests/test_udfs.py
+proves the UDF below agrees with its built-in twin, which is also the
+performance moral: if a built-in twin exists, use it.
 
-* scalar pandas UDF       — vectorized element-wise (numpy under Arrow)
-* grouped applyInPandas   — per-group frame in/out (z-score per group)
-* mapInPandas             — partition-batch iterator (see
-                            operators/multimodal.py for the real use)
+The other sanctioned shapes live with their gated queries:
+
+* scalar pandas UDF       — ``token_count_udf`` below
+                            (relational2.fn_pandas_udf_tokens)
+* grouped applyInPandas   — per-group frame in/out
+                            (embed.embed_group_stats)
+* mapInPandas             — partition-batch iterator
+                            (operators/multimodal.py)
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-@F.pandas_udf(T.DoubleType())
-def log1p_price(s: pd.Series) -> pd.Series:
-    """Vectorized log1p — numpy over Arrow batches."""
-    return np.log1p(s)
 
 
 @F.pandas_udf(T.LongType())
 def token_count_udf(text: pd.Series) -> pd.Series:
     """Whitespace token count, vectorized via pandas str ops."""
     return text.str.split().str.len().astype("int64")
-
-
-def zscore_per_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Per-group z-score via applyInPandas (ddof=0 population std).
-
-    The built-in twin is a Window mean/std — applyInPandas is the shape
-    to reach for when the per-group logic outgrows window algebra
-    (model scoring, curve fitting, resampling).
-    """
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", zscore double"
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf[value_col]
-        std = v.std(ddof=0)
-        pdf = pdf.copy()
-        pdf["zscore"] = 0.0 if std == 0 else (v - v.mean()) / std
-        return pdf
-
-    return df.groupBy(group_col).applyInPandas(per_group, schema=out_schema)

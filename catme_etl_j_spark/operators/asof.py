@@ -67,61 +67,6 @@ ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
 """
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    by: str,
-    right_cols: list[str] | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """Generic backward as-of join: for each left row, attach the last
-    right row with ``right.on <= left.on`` within the same ``by`` key
-    (pd.merge_asof(direction='backward') semantics; left rows with no
-    prior right row keep nulls).
-
-    Spark-first formulation: tag both inputs, union, sort within one
-    window per ``by`` key, forward-fill the right columns with
-    ``last(..., ignorenulls)``, keep left rows. ONE shuffle on the key,
-    no range-join explosion, no per-group pandas — the composition
-    scales like any windowed aggregation.
-
-    Ties (equal ``on``): right rows sort before left rows, so a right
-    row at exactly left.on IS matched — same as merge_asof/ASOF JOIN.
-    """
-    right_cols = right_cols or [c for c in right.columns if c not in (on, by)]
-    lt = left.withColumn("_side", F.lit(1))
-    rt = right.select(
-        F.col(by),
-        F.col(on),
-        F.lit(0).alias("_side"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in right_cols],
-    ).withColumn(f"{on}{suffix}", F.col(on))
-    for c in lt.columns:
-        if c not in rt.columns:
-            rt = rt.withColumn(c, F.lit(None))
-    for c in rt.columns:
-        if c not in lt.columns:
-            lt = lt.withColumn(c, F.lit(None))
-    rt = rt.select(*lt.columns)
-    u = lt.unionByName(rt)
-    w = (
-        W.partitionBy(by)
-        .orderBy(on, "_side")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    filled = u.select(
-        *[c for c in left.columns],
-        "_side",
-        *[
-            F.last(f"{c}{suffix}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
-            for c in right_cols + [on]
-        ],
-    )
-    return filled.filter(F.col("_side") == 1).drop("_side")
-
-
 ASOF_TOLERANCE_S = 3600.0  # 1 hour
 
 

@@ -23,7 +23,6 @@ format-code renderer's shortest-repr half-up rounding).
 
 from __future__ import annotations
 
-import itertools
 import os
 import tempfile
 import threading
@@ -219,9 +218,6 @@ def convert_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(_SCHEMA).option("multiLine", True).json(out)
 
 
-_seq = itertools.count()
-
-
 def convert_stream_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole raison d'être, composed end to end: xlsx
     -> streaming parse -> NDJSON sink -> **Structured Streaming
@@ -234,6 +230,7 @@ def convert_stream_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from catme_etl_j_spark.converter import convert
+    from catme_etl_j_spark.streaming.events import run_to_memory
 
     out_dir = tempfile.mkdtemp(prefix="convq_stream_")
     out = os.path.join(out_dir, "out.ndjson")
@@ -243,17 +240,8 @@ def convert_stream_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum(F.col("quantity").cast("long")).alias("sum_qty"),
     )
-    name = f"convq_stream_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name)
+    q = run_to_memory(agg, "convq_stream", "complete")
+    return spark.table(q.name)
 
 
 _ORACLE_STREAM = f"""

@@ -96,14 +96,6 @@ def salted_group_sum(
     )
 
 
-def plain_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        money2(F.sum(dec2("l_extendedprice"))).alias("sum_price"),
-        F.count("*").alias("n_rows"),
-    )
-
-
 def scale_salted_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gated wrapper for :func:`salted_group_sum` — proves on the hash
     gate (not just the local equivalence test) that the two-phase
@@ -868,15 +860,4 @@ def write_date_partitioned(spark: SparkSession, sf_dir: str, out_dir: str) -> No
         .write.mode("overwrite")
         .partitionBy("order_year")
         .parquet(out_dir)
-    )
-
-
-def read_one_year(spark: SparkSession, out_dir: str, year: int = 1997) -> DataFrame:
-    """Filter on the partition column — expect PartitionFilters in the
-    scan and only that year's directory read."""
-    return (
-        spark.read.parquet(out_dir)
-        .filter(F.col("order_year") == year)
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
     )

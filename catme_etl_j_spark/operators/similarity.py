@@ -48,14 +48,6 @@ def _fxp_expr(a: str) -> str:
     return f"transform({a}, x -> CAST(floor(CAST(x AS DOUBLE) * {_FXP} + 0.5) AS BIGINT))"
 
 
-def _dot_expr(a: str, b: str) -> str:
-    """Exact fixed-point dot product of two array columns (Spark expr)."""
-    return (
-        f"aggregate(zip_with({_fxp_expr(a)}, {_fxp_expr(b)}, (x, y) -> x * y), "
-        f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-
-
 def _dot_duck(a: str, b: str) -> str:
     return (
         f"CAST(list_sum(list_transform(range(1, len({a}) + 1), "
@@ -145,50 +137,6 @@ def _dot_fx(a: str, b: str) -> str:
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
-
-
-def dot_fx_pandas():
-    """Arrow-batched int64 dot product column: `dot_fx_pandas()(a, b)`.
-
-    Spark's higher-order `aggregate`/`zip_with` lambdas are INTERPRETED
-    per element (no codegen), which makes them the cost center of every
-    pair stage (measured: 2.6 s -> 1.9 s on semdedup's 380k x 64-dim
-    probe at sf0.1). This is the vectorized twin: numpy int64
-    element-wise multiply + row sum — EXACT integer arithmetic, so the
-    result is bit-identical to the JVM fold at any batch split. Bounds:
-    at the 1e4 component scale products are <= 4e8 (64-dim sums
-    <= 2.6e10); even at the 1e8 similarity scale products are <= 1e16
-    and 64-dim sums <= 6.4e17 < 2^63 — no overflow in either regime.
-    Built lazily (a module-level pandas_udf would create it at import
-    in sessions that never use it)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _dot64(a, b):
-        av, bv = a.to_numpy(), b.to_numpy()
-        lens = {len(x) for x in av} | {len(x) for x in bv}
-        if len(lens) == 1:
-            A = np.stack(av).astype(np.int64)
-            B = np.stack(bv).astype(np.int64)
-            return pd.Series((A * B).sum(axis=1))
-        # ragged batch (degenerate short/empty embeddings): replicate
-        # the JVM zip_with semantics exactly — NULL when lengths
-        # differ (zip_with NULL-pads, the product poisons the fold),
-        # 0 for two empties
-        out = [
-            int(np.dot(x.astype(np.int64), y.astype(np.int64)))
-            if len(x) == len(y)
-            else None
-            for x, y in zip(av, bv)
-        ]
-        return pd.Series(out, dtype="Int64")
-
-    # real (non-string) hints: this module's `from __future__ import
-    # annotations` would stringify inline hints, which pandas_udf's
-    # signature inference rejects
-    _dot64.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(_dot64, "long")
 
 
 def _norm_fx(a: str) -> str:

@@ -17,7 +17,7 @@ cannot flip a half-boundary.
 
 from __future__ import annotations
 
-import itertools
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,30 +25,18 @@ from pyspark.sql import functions as F
 from catme_etl_j_spark.functions.numeric import dec2, money2
 from catme_etl_j_spark.operators.events import _SLIDING_SQL, _TS_FMT, _TUMBLING_SQL
 from catme_etl_j_spark.session import apply_query_conf
-
-_seq = itertools.count()
+from catme_etl_j_spark.streaming.events import WATERMARK, read_event_stream, run_to_memory
 
 
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts/sums per event type, computed by the
     streaming engine (complete mode) over the events files."""
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         money2(F.sum(dec2("value"))).alias("sum_value"), F.count("*").alias("n")
     )
-    name = f"streamq_tumbling_{next(_seq)}"  # fresh sink per invocation
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    q = run_to_memory(agg, "streamq_tumbling", "complete")
+    return spark.table(q.name).select(
         F.date_format("w.start", _TS_FMT).alias("window_start"),
         "event_type",
         "sum_value",
@@ -60,23 +48,12 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-min windows sliding every 15 min, computed by the streaming
     engine (complete mode, availableNow) — same oracle as the batch
     twin events_sliding_window."""
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w")).agg(
         F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value")
     )
-    name = f"streamq_sliding_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    q = run_to_memory(agg, "streamq_sliding", "complete")
+    return spark.table(q.name).select(
         F.date_format("w.start", _TS_FMT).alias("window_start"), "n", "sum_value"
     )
 
@@ -94,24 +71,13 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming one (half-open window) — with nanosecond event times an
     exact 1800.000000000s delta does not occur in the data.
     """
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id").agg(
         F.count("*").alias("n_events"),
         money2(F.sum(dec2("value"))).alias("sum_value"),
     )
-    name = f"streamq_session_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    q = run_to_memory(agg, "streamq_session", "complete")
+    return spark.table(q.name).select(
         "user_id",
         F.date_format("w.start", _TS_FMT).alias("session_start"),
         F.date_format(
@@ -163,13 +129,17 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the sum independent of arrival order; the only float op is
     one final cents/100 division, identical IEEE on both engines.
     """
+    return _stateful_totals(read_event_stream(spark, sf_dir, glob="events.parquet"))
+
+
+def _stateful_totals(ev: DataFrame) -> DataFrame:
+    """Drain ``ev`` through the per-user state machine and return each
+    user's final totals. One emission per user per touched micro-batch;
+    the final state has the max running n_events (monotone), so
+    max(struct) picks it however many batches the source splits into."""
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
-    ev = read_event_stream(spark, sf_dir, glob="events.parquet")
 
     def update(key, pdfs, state):
         import numpy as np
@@ -192,21 +162,9 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    name = f"streamq_stateful_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # One emission per user per touched micro-batch; the final state has
-    # the max running n_events (monotone), so max(struct) picks it even
-    # if the source ever splits into multiple batches.
+    q = run_to_memory(agg, "streamq_stateful", "update")
     return (
-        spark.table(name)
+        ev.sparkSession.table(q.name)
         .groupBy("user_id")
         .agg(F.max(F.struct("n_events", "sum_value")).alias("m"))
         .select("user_id", F.col("m.n_events").alias("n_events"), F.col("m.sum_value").alias("sum_value"))
@@ -234,8 +192,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that final rollup runs in batch on the sink table, keeping the
     streaming part exactly the join under test.
     """
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     clicks = (
         read_event_stream(spark, sf_dir, glob="events.parquet")
         .filter("event_type = 'click'")
@@ -258,18 +214,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND click_ts >= ts - INTERVAL 30 MINUTES"
         ),
     )
-    name = f"streamq_ssjoin_{next(_seq)}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    q = run_to_memory(joined, "streamq_ssjoin", "append")
     return (
-        spark.table(name)
+        spark.table(q.name)
         .groupBy("event_id", "user_id", "ts")
         .agg(
             F.count("*").alias("n_clicks_30m"),
@@ -314,8 +261,6 @@ def stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest (Kafka replays, file re-drops): state is sharded by
     event_id and bounded by the watermark window.
     """
-    from catme_etl_j_spark.streaming.events import WATERMARK, read_event_stream
-
     s1 = read_event_stream(spark, sf_dir, glob="events.parquet")
     s2 = read_event_stream(spark, sf_dir, glob="events.parquet")
     deduped = (
@@ -323,18 +268,9 @@ def stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    name = f"streamq_dedup_{next(_seq)}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    q = run_to_memory(deduped, "streamq_dedup", "append")
     return (
-        spark.table(name)
+        spark.table(q.name)
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
@@ -449,17 +385,8 @@ def run_late_stream(spark: SparkSession, sf_dir: str):
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value"))
     )
-    name = f"streamq_late_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.table(name).select(
+    q = run_to_memory(agg, "streamq_late", "append")
+    out = spark.table(q.name).select(
         F.date_format("w.start", _TS_FMT).alias("window_start"),
         "event_type",
         "n",
@@ -527,7 +454,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     src = _upsert_fixture_dir(sf_dir)
-    state_root = f"{src}_state_{next(_seq)}_{os.getpid()}"
+    state_root = tempfile.mkdtemp(prefix="catme_upsert_state_")
     cur = f"{state_root}/cur"
     schema = T.StructType(
         [
@@ -617,7 +544,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash gate.
     """
     from catme_etl_j_spark.sources.tables import load_table
-    from catme_etl_j_spark.streaming.events import read_event_stream
 
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     dim = load_table(spark, sf_dir, "customer").select(
@@ -631,17 +557,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
     )
-    name = f"streamq_enrich_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    q = run_to_memory(agg, "streamq_enrich", "complete")
+    return spark.table(q.name).select(
         "c_mktsegment", "event_type", "n", "sum_value"
     )
 
@@ -674,8 +591,6 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain batch SQL — equality proves the state backend swap
     changes storage only, never semantics.
     """
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     child = spark.newSession()
     apply_query_conf(child)
     child.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
@@ -687,17 +602,8 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         money2(F.sum(dec2("value"))).alias("sum_value"),
     )
-    name = f"streamq_rocksdb_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return child.table(name).select("day", "event_type", "n", "sum_value")
+    q = run_to_memory(agg, "streamq_rocksdb", "complete")
+    return child.table(q.name).select("day", "event_type", "n", "sum_value")
 
 
 _ROCKSDB_SQL = """
@@ -733,9 +639,9 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     fixture = _upsert_fixture_dir(sf_dir)
-    root = f"/tmp/catme_ckpt_{os.path.basename(sf_dir.rstrip('/'))}_{next(_seq)}_{os.getpid()}"
+    root = tempfile.mkdtemp(prefix=f"catme_ckpt_{os.path.basename(sf_dir.rstrip('/'))}_")
     src, cp = f"{root}/src", f"{root}/cp"
-    os.makedirs(src, exist_ok=True)
+    os.makedirs(src)
     shutil.copy(f"{fixture}/a_first.parquet", f"{src}/a_first.parquet")
     schema = T.StructType(
         [
@@ -747,29 +653,18 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run_once(name: str) -> int:
+    def run_once() -> tuple[int, str]:
         ev = spark.readStream.schema(schema).parquet(src)
         agg = ev.groupBy("event_type").agg(
             F.count("*").alias("n"),
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        rows = sum(int(p["numInputRows"]) for p in q.recentProgress)
-        q.stop()
-        return rows
+        q = run_to_memory(agg, "streamq_ckpt", "complete", checkpoint=cp)
+        return sum(int(p["numInputRows"]) for p in q.recentProgress), q.name
 
-    rows_a = run_once(f"streamq_ckpt_a_{next(_seq)}")  # batch A, then STOP
+    rows_a, _ = run_once()  # batch A, then STOP
     shutil.copy(f"{fixture}/b_second.parquet", f"{src}/b_second.parquet")
-    final = f"streamq_ckpt_b_{next(_seq)}"
-    rows_b = run_once(final)  # recovery: offsets + state restored, B only
+    rows_b, final = run_once()  # recovery: offsets + state restored, B only
     out = spark.table(final).select("event_type", "n", "sum_value")
     result = out.collect()
     shutil.rmtree(root, ignore_errors=True)

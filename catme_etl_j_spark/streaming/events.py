@@ -1,31 +1,25 @@
-"""Structured Streaming slice over the events table (SURVEY.md §7.6).
+"""Structured Streaming helpers over the events table (SURVEY.md §7.6).
 
 The reference is single-pass batch with no streaming analog
-(SURVEY.md §2.4); this module is the North-Star extension. Each
-builder takes a *streaming* DataFrame (``spark.readStream``) and
-returns the transformed streaming frame, so the same logic serves
-any source (files here; Kafka in production) and any sink via
-``writeStream`` / ``foreachBatch``.
-
-Batch twins of these queries live in operators/events.py and are
-DuckDB-oracle checked; the streaming tests (tests/test_streaming.py)
-drive these through the memory sink with ``processAllAvailable`` and
-assert against the batch results — semantics parity is the test.
-
-Scale notes: watermarks bound state (late data beyond 10 min is
-dropped); ``dropDuplicatesWithinWatermark`` keeps the dedup state
-window-bounded; aggregations run as incremental stateful operators
-sharded by group key across executors.
+(SURVEY.md §2.4); streaming is the North-Star extension. The
+streaming queries themselves are the registered ``stream_*`` entries
+in operators/streamq.py, each hash-checked against a DuckDB oracle.
+This module holds what they share: the file source over the events
+parquet (``read_event_stream``) and the one drain into a memory
+table (``run_to_memory``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import itertools
 
-from catme_etl_j_spark.functions.numeric import dec2, money2
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 WATERMARK = "10 minutes"
+
+_seq = itertools.count()
+
 
 def read_event_stream(
     spark: SparkSession,
@@ -79,108 +73,30 @@ def read_event_stream(
     return _normalize_ts(reader.parquet(path))
 
 
-def tumbling_counts(events: DataFrame) -> DataFrame:
-    """Hourly tumbling counts/sums per event type, late data bounded by
-    the watermark (append-mode emits a window once it's closed)."""
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        # decimal-sum convention (functions/numeric.py): float sums are
-        # partition-order dependent and can flip a half-boundary
-        .agg(F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
+def run_to_memory(
+    stream_df: DataFrame,
+    prefix: str,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Drain a streaming frame into a fresh in-memory table (availableNow
+    trigger) and return the stopped StreamingQuery; read the table back
+    with ``stream_df.sparkSession.table(q.name)``.
 
-
-def sliding_counts(events: DataFrame) -> DataFrame:
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native session windows (the streaming twin of the batch
-    lag+cumsum sessionization in operators/events.py)."""
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
-def dedup_stream(events: DataFrame) -> DataFrame:
-    """Stateful exact-once dedup by event_id, state bounded by the
-    watermark window."""
-    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(["event_id"])
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: running
-    per-user event count / value sum, carried across micro-batches in
-    explicit GroupState (the ladder's rung (b) — used when built-in
-    streaming aggs can't express the state machine; here the state is
-    simple so the test can verify against the batch groupBy).
-
-    State is sharded by user_id across executors; each micro-batch
-    updates only the touched keys and emits their new totals.
+    The counter appended to ``prefix`` makes every table name unique,
+    so queries built from several threads at once never share a sink.
+    ``checkpoint`` sets ``checkpointLocation``, so a second run over the
+    same path resumes from the first run's offsets and state.
     """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "user_id long, n_events long, sum_value double"
-    state_schema = "n long, s double"
-
-    def update(key, pdfs, state):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_value": [s]})
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def write_stream_exactly_once(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
-    """Exactly-once file sink via foreachBatch: each micro-batch writes
-    to an epoch-named subdirectory, so replays after failure overwrite
-    instead of duplicating (idempotent per epoch), and the checkpoint
-    guarantees each epoch is committed once.
-    """
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    """Drive a streaming frame to completion into an in-memory table;
-    returns the StreamingQuery (stopped). Test/smoke harness."""
-    q = (
+    writer = (
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
-        .queryName(name)
+        .queryName(f"{prefix}_{next(_seq)}")
         .trigger(availableNow=True)
-        .start()
     )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
     q.processAllAvailable()
     q.stop()
     return q

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from catme_etl_j_spark.operators import similarity as S
 from catme_etl_j_spark.session import apply_query_conf
 
+__all__ = ["VectorIndex"]
+
 _TOPK_STRATEGIES = ("exact", "ivf", "ivf_kmeans", "pq", "lsh")
 
 

@@ -395,44 +395,12 @@ def test_nn_within_label_cap_exact_below_pool_cap(spark, sf_dir):
     assert n_pool <= NN_POOL_CAP
 
 
-def test_dot_fx_pandas_matches_jvm_fold(spark):
-    """The Arrow-vectorized int64 dot must replicate the JVM
-    aggregate/zip_with fold EXACTLY, including the edge semantics the
-    degenerate fixtures exercise: NULL when lengths differ (zip_with
-    NULL-pads and the product poisons the fold), 0 for two empties,
-    and exact int64 products elsewhere (no float64 rounding at the
-    1e8 component scale)."""
-    import pyspark.sql.functions as F
-
-    from catme_etl_j_spark.operators.similarity import dot_fx_pandas
-
-    df = spark.sql(
-        "SELECT * FROM VALUES "
-        "(array(1L,2L,3L), array(1L,2L)), "
-        "(array(1L,2L), array(3L,4L)), "
-        "(array(), array()), "
-        "(array(100000000L, 99999999L), array(100000000L, 99999999L)), "
-        "(array(7L), array(7L)) t(a, b)"
-    )
-    jvm = [
-        r["d"]
-        for r in df.select(
-            F.expr(
-                "aggregate(zip_with(a, b, (x, y) -> x * y), "
-                "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-            ).alias("d")
-        ).collect()
-    ]
-    pdu = [r["d"] for r in df.select(dot_fx_pandas()("a", "b").alias("d")).collect()]
-    assert jvm == pdu
-    assert jvm[3] == 100000000**2 + 99999999**2  # exact above 2^53
-
-
 def test_lsh_pairs_cogroup_matches_join(spark, sf_dir):
     """r11: the cogrouped (band, bucket) block-matmul pair stage must be
-    bit-identical to the independent banded self-join + per-pair Arrow
-    dot formulation it replaced (exceptAll both ways empty), including
-    the threshold filter and the cross-band dedup."""
+    bit-identical to the banded self-join + per-pair dot formulation it
+    replaced, here with the JVM ``_dot_fx`` fold as the dot (exceptAll
+    both ways empty), including the threshold filter and the cross-band
+    dedup."""
     from pyspark.sql import functions as F
 
     from catme_etl_j_spark.functions.numeric import rdet
@@ -458,7 +426,7 @@ def test_lsh_pairs_cogroup_matches_join(spark, sf_dir):
     x = emb.select(F.col("vec_id").alias("vec_a"), F.col("fx").alias("fa"), F.col("norm").alias("na"))
     y = emb.select(F.col("vec_id").alias("vec_b"), F.col("fx").alias("fb"), F.col("norm").alias("nb"))
     cos = rdet(
-        S.dot_fx_pandas()("fa", "fb").cast("double") / (F.col("na") * F.col("nb")), 6
+        F.expr(f"CAST({S._dot_fx('fa', 'fb')} AS DOUBLE)") / (F.col("na") * F.col("nb")), 6
     )
     old = (
         cand.join(x, "vec_a")

@@ -1,49 +1,38 @@
-"""Generic as-of join vs pandas merge_asof (the semantics oracle)."""
+"""As-of joins against pandas merge_asof and their own invariants."""
 
 import pandas as pd
 
 from pyspark.sql import functions as F
 
-from catme_etl_j_spark.operators.asof import asof_join
+from catme_etl_j_spark.operators.asof import asof_purchase_view
 from catme_etl_j_spark.sources.tables import load_table
 
 
 def test_asof_join_matches_merge_asof(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    right = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("value").alias("view_value")
+    """asof_purchase_view against pandas merge_asof (backward, exact
+    matches allowed): a second semantics oracle beside the gate's DuckDB
+    ASOF JOIN. Purchases with no prior view are absent from both."""
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_type").isin("purchase", "view"))
+        .select("event_id", "user_id", "ts", "event_type")
+        .toPandas()
+        .sort_values("ts")
     )
-    got = asof_join(left, right, on="ts", by="user_id").toPandas()
-
-    lp = left.toPandas().sort_values("ts")
-    rp = right.toPandas().sort_values("ts")
-    rp["matched_ts"] = rp["ts"]  # merge_asof drops the right 'on' column
-    want = pd.merge_asof(lp, rp, on="ts", by="user_id", direction="backward")
-
-    got = got.sort_values("event_id").reset_index(drop=True)
-    want = want.sort_values("event_id").reset_index(drop=True)
-    assert len(got) == len(want)
-    pd.testing.assert_series_equal(
-        got["ts_right"], want["matched_ts"].rename("ts_right"), check_exact=True
-    )
-    pd.testing.assert_series_equal(
-        got["view_value_right"],
-        want["view_value"].rename("view_value_right"),
-        check_exact=True,
-    )
-
-
-def test_asof_join_no_prior_match_is_null(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    # right side starting after all lefts -> every match null
-    right = ev.filter(F.col("event_type") == "view").select("user_id", "ts").filter(
-        F.col("ts") > F.lit("2999-01-01").cast("timestamp")
-    )
-    got = asof_join(left, right, on="ts", by="user_id", right_cols=[])
-    assert got.count() == left.count()
-    assert got.filter(F.col("ts_right").isNotNull()).count() == 0
+    purchases = ev[ev["event_type"] == "purchase"]
+    views = ev[ev["event_type"] == "view"][["user_id", "ts"]]
+    views["view_ts"] = views["ts"]  # merge_asof drops the right 'on' column
+    want = pd.merge_asof(
+        purchases, views, on="ts", by="user_id", direction="backward"
+    ).dropna(subset=["view_ts"])
+    got = {
+        r["purchase_id"]: r["view_ts"]
+        for r in asof_purchase_view(spark, sf_dir).collect()
+    }
+    assert got and got == {
+        int(r.event_id): r.view_ts.strftime("%Y-%m-%d %H:%M:%S.%f")
+        for r in want.itertuples()
+    }
 
 
 def test_nearest_view_picks_smaller_gap(spark, sf_dir):

@@ -100,6 +100,19 @@ def test_every_query_has_callable_and_alias_contract():
         assert name in qs, f"oracle {name} has no query"
 
 
+def test_registry_modules_pair_queries_with_oracles():
+    """Each registered module names the same queries in QUERIES and
+    ORACLES, and no name is registered by two modules (the later one
+    would silently replace the earlier entry in queries())."""
+    owner: dict[str, str] = {}
+    for mod in entry_mod._modules():
+        assert set(mod.QUERIES) == set(mod.ORACLES), mod.__name__
+        for name in mod.QUERIES:
+            assert name not in owner, (name, owner.get(name), mod.__name__)
+            owner[name] = mod.__name__
+    assert len(owner) == len(entry_mod.queries())
+
+
 def test_no_oracle_emits_hugeint(oracle_con):
     """Convention #5 tripwire: DuckDB SUM(int*)→HUGEINT repr()s like a
     Python int, so it passes value comparison locally yet hash-fails at

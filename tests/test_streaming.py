@@ -1,33 +1,19 @@
-"""Structured Streaming slice: memory-sink runs asserted against the
-batch twins (semantic parity is the correctness definition here).
-
-Technique: the stream dir carries an extra "flush" event 1 day past the
-real data, so the watermark advances past every real window/session and
-append mode emits them all — then exact equality with the batch
-operators is assertable (flush rows filtered out).
+"""Structured Streaming: the registered ``stream_*`` queries asserted
+against their batch twins and against properties the oracle gate does
+not see (state carried across micro-batches, every event in exactly two
+sliding windows, a source that starts empty).
 """
 
 import shutil
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
-from catme_etl_j_spark.streaming.events import (
-    dedup_stream,
-    read_event_stream,
-    run_to_memory,
-    session_windows,
-    sliding_counts,
-    tumbling_counts,
-)
-
-FLUSH_USER = -1
-
-
-import pytest
+from catme_etl_j_spark.operators import streamq
+from catme_etl_j_spark.sources.tables import load_table
+from catme_etl_j_spark.streaming.events import read_event_stream, run_to_memory
 
 # Deep/expensive class (plan pins, iterative loops, streaming waits):
 # excluded from the fast gate `pytest -m "not slow"`; the FULL suite
@@ -35,81 +21,27 @@ import pytest
 pytestmark = pytest.mark.slow
 
 
-@pytest.fixture(scope="module")
-def stream_dir(sf_dir, tmp_path_factory):
-    d = tmp_path_factory.mktemp("events_stream")
-    shutil.copy(f"{sf_dir}/events.parquet", d / "batch0.parquet")
-    # The flush row must carry the SAME physical ts type as the source
-    # file (the driver has shipped both int64-nanos and timestamp[us]
-    # across rounds; a schema mismatch breaks the file stream source).
-    src = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_type = src.schema.field("ts").type
-    per_day = (
-        86_400 * 10**9
-        if pa.types.is_integer(ts_type)
-        else 86_400 * {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts_type.unit]
-    )
-    flush_ts = max(src.column("ts").cast(pa.int64()).to_pylist()) + per_day
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([10**9], pa.int64()),
-                "ts": pa.array([flush_ts], pa.int64()).cast(ts_type),
-                "user_id": pa.array([FLUSH_USER], pa.int64()),
-                "event_type": pa.array(["flush"], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            }
-        ),
-        d / "zz_flush.parquet",
-    )
-    return str(d)
-
-
-def test_tumbling_counts_match_batch_exactly(spark, sf_dir, stream_dir):
-    stream = tumbling_counts(read_event_stream(spark, stream_dir, max_files_per_trigger=4))
-    run_to_memory(stream, "tumbling_out")
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM tumbling_out").collect()
-        if r["event_type"] != "flush"
-    }
+def test_tumbling_counts_match_batch_exactly(spark, sf_dir):
     from catme_etl_j_spark.operators.events import events_tumbling_window
 
-    want = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in events_tumbling_window(spark, sf_dir).collect()
-    }
-    assert set(got) == set(want)
-    for k, n in want.items():
-        assert got[k][0] == n, k
+    cols = ["window_start", "event_type", "n", "sum_value"]
+    got = {tuple(r) for r in streamq.stream_tumbling_window(spark, sf_dir).select(cols).collect()}
+    want = {tuple(r) for r in events_tumbling_window(spark, sf_dir).select(cols).collect()}
+    assert got and got == want
 
 
-def test_sliding_counts_total(spark, stream_dir, sf_dir):
-    run_to_memory(
-        sliding_counts(read_event_stream(spark, stream_dir, max_files_per_trigger=4)),
-        "sliding_out",
-    )
-    from catme_etl_j_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    n_events = ev.count()
-    max_real = ev.agg(F.max("ts")).collect()[0][0]
+def test_sliding_counts_total(spark, sf_dir):
     total = (
-        spark.sql("SELECT sum(n) AS t FROM sliding_out WHERE window_start <= ?", args=[max_real])
-        .collect()[0]["t"]
+        streamq.stream_sliding_window(spark, sf_dir).agg(F.sum("n")).collect()[0][0]
     )
+    n_events = load_table(spark, sf_dir, "events").count()
     assert total == 2 * n_events  # every event lands in exactly 2 sliding windows
 
 
-def test_session_windows_match_batch(spark, stream_dir, sf_dir):
-    run_to_memory(
-        session_windows(read_event_stream(spark, stream_dir, max_files_per_trigger=4)),
-        "session_out",
-    )
-    sess = spark.sql(f"SELECT * FROM session_out WHERE user_id != {FLUSH_USER}")
+def test_session_windows_match_batch(spark, sf_dir):
     from catme_etl_j_spark.operators.events import events_sessionize
 
+    sess = streamq.stream_session_window(spark, sf_dir)
     batch = events_sessionize(spark, sf_dir)
     got = {r["user_id"]: r["c"] for r in
            sess.groupBy("user_id").agg(F.count("*").alias("c")).collect()}
@@ -121,72 +53,43 @@ def test_session_windows_match_batch(spark, stream_dir, sf_dir):
 
 
 def test_stateful_user_totals(spark, sf_dir, tmp_path):
-    # Split events into 2 files -> 2 micro-batches; state must carry over.
-    from catme_etl_j_spark.streaming.events import stateful_user_totals
-
+    """stream_stateful_totals' state machine over two files -> two
+    micro-batches: a user's final totals equal the whole table's only
+    if its GroupState carried across them."""
     t = pq.read_table(f"{sf_dir}/events.parquet")
     d = tmp_path / "halves"
     d.mkdir()
     half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), d / "a.parquet")
-    pq.write_table(t.slice(half), d / "b.parquet")
+    first, second = t.slice(0, half), t.slice(half)
+    pq.write_table(first, d / "a.parquet")
+    pq.write_table(second, d / "b.parquet")
+    users = [set(x.column("user_id").to_pylist()) for x in (first, second)]
+    assert users[0] & users[1]  # some user's state must cross the batches
 
-    stream = stateful_user_totals(read_event_stream(spark, str(d), max_files_per_trigger=1))
-    run_to_memory(stream, "stateful_out", output_mode="update")
-    # update-mode memory sink appends one row per (batch, key); the row
-    # with the max n_events per user is the final state
-    final = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
-        for r in spark.sql(
-            """SELECT user_id, n_events, sum_value FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM stateful_out) WHERE rn = 1"""
+    got = {
+        tuple(r)
+        for r in streamq._stateful_totals(
+            read_event_stream(spark, str(d), max_files_per_trigger=1)
         ).collect()
     }
-    from catme_etl_j_spark.sources.tables import load_table
-
+    cents = F.floor(F.col("value") * 100.0 + 0.5).cast("long")
     want = {
-        r["user_id"]: (r["n"], round(r["s"], 2))
+        tuple(r)
         for r in load_table(spark, sf_dir, "events")
         .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+        .agg(F.count("*").alias("n"), (F.sum(cents) / 100.0).alias("s"))
         .collect()
     }
-    assert final == want
+    assert got == want
 
 
-def test_exactly_once_foreachbatch_sink(spark, sf_dir, tmp_path):
-    from catme_etl_j_spark.streaming.events import write_stream_exactly_once
-
-    src = tmp_path / "src"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "a.parquet")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stream = read_event_stream(spark, str(src))
-    q = write_stream_exactly_once(stream, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert spark.read.parquet(out).count() == n_src
-    # restart with NO new data: checkpoint prevents re-processing
-    q2 = write_stream_exactly_once(read_event_stream(spark, str(src)), out, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-    assert spark.read.parquet(out).count() == n_src
-
-
-def test_dedup_stream(spark, sf_dir, tmp_path):
-    # Duplicate the file -> every event_id appears twice in the stream.
-    dup_dir = tmp_path / "dup"
-    dup_dir.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", dup_dir / "a.parquet")
-    shutil.copy(f"{sf_dir}/events.parquet", dup_dir / "b.parquet")
-    run_to_memory(dedup_stream(read_event_stream(spark, str(dup_dir))), "dedup_out")
-    out = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM dedup_out"
-    ).collect()[0]
-    n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert out["n"] == out["d"] == n_src  # exactly one row per event_id
+def test_dedup_stream(spark, sf_dir):
+    """stream_dedup_totals unions two sources of the same file, so every
+    event_id arrives twice; after dropDuplicatesWithinWatermark each
+    event is counted exactly once."""
+    rows = streamq.stream_dedup_totals(spark, sf_dir).collect()
+    n_src = load_table(spark, sf_dir, "events").count()
+    assert sum(r["n"] for r in rows) == n_src
 
 
 def test_stream_stream_join_semantics(spark, sf_dir):
@@ -208,9 +111,9 @@ def test_stream_starts_on_empty_directory(spark, sf_dir, tmp_path):
     src.mkdir()
     stream = read_event_stream(spark, str(src))  # no files yet — must not raise
     shutil.copy(f"{sf_dir}/events.parquet", src / "a.parquet")
-    run_to_memory(stream, "late_out")
+    q = run_to_memory(stream, "late_out")
     n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert spark.sql("SELECT count(*) AS n FROM late_out").collect()[0]["n"] == n_src
+    assert spark.table(q.name).count() == n_src
 
 
 def test_late_data_policy_pinned(spark, sf_dir):

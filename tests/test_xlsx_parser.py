@@ -198,3 +198,34 @@ def test_corrupt_archives_raise_typed_errors(tmp_path):
 
     # and the pristine bytes still parse (the fuzz guard changed nothing)
     assert len(_rows(base_path)) == 3
+
+
+def test_shared_strings_load_holds_only_the_strings(tmp_path):
+    """The shared-strings load keeps the strings and nothing per entry
+    beside them: every finished ``<si>`` is detached from the ``<sst>``
+    root iterparse builds, so its peak traced memory stays within 1.5x
+    of the strings' own size (an attached empty Element per entry
+    roughly doubles it)."""
+    import sys
+    import tracemalloc
+
+    n = 100_000
+    sst = "".join(f"<si><t>cell text {i:06d}</t></si>" for i in range(n))
+    path = write_xlsx(str(tmp_path / "base.xlsx"), {"S": [["h"], ["x"]]})
+    with zipfile.ZipFile(path, "a") as z:
+        z.writestr(
+            "xl/sharedStrings.xml",
+            '<?xml version="1.0" encoding="UTF-8"?>'
+            '<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
+            f' count="{n}" uniqueCount="{n}">{sst}</sst>',
+        )
+    with XlsxWorkbook(path) as wb:
+        tracemalloc.start()
+        try:
+            strings = wb._shared_strings()
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+    assert len(strings) == n and strings[7] == "cell text 000007"
+    own = sum(sys.getsizeof(s) for s in strings)
+    assert peak < 1.5 * own, (peak, own)
