@@ -240,8 +240,8 @@ def convert_stream_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum(F.col("quantity").cast("long")).alias("sum_qty"),
     )
-    q = run_to_memory(agg, "convq_stream", "complete")
-    return spark.table(q.name)
+    snap, _ = run_to_memory(agg, "convq_stream", "complete")
+    return snap
 
 
 _ORACLE_STREAM = f"""

@@ -35,8 +35,8 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         money2(F.sum(dec2("value"))).alias("sum_value"), F.count("*").alias("n")
     )
-    q = run_to_memory(agg, "streamq_tumbling", "complete")
-    return spark.table(q.name).select(
+    snap, _ = run_to_memory(agg, "streamq_tumbling", "complete")
+    return snap.select(
         F.date_format("w.start", _TS_FMT).alias("window_start"),
         "event_type",
         "sum_value",
@@ -52,8 +52,8 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w")).agg(
         F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value")
     )
-    q = run_to_memory(agg, "streamq_sliding", "complete")
-    return spark.table(q.name).select(
+    snap, _ = run_to_memory(agg, "streamq_sliding", "complete")
+    return snap.select(
         F.date_format("w.start", _TS_FMT).alias("window_start"), "n", "sum_value"
     )
 
@@ -76,8 +76,8 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         money2(F.sum(dec2("value"))).alias("sum_value"),
     )
-    q = run_to_memory(agg, "streamq_session", "complete")
-    return spark.table(q.name).select(
+    snap, _ = run_to_memory(agg, "streamq_session", "complete")
+    return snap.select(
         "user_id",
         F.date_format("w.start", _TS_FMT).alias("session_start"),
         F.date_format(
@@ -162,10 +162,9 @@ def _stateful_totals(ev: DataFrame) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    q = run_to_memory(agg, "streamq_stateful", "update")
+    snap, _ = run_to_memory(agg, "streamq_stateful", "update")
     return (
-        ev.sparkSession.table(q.name)
-        .groupBy("user_id")
+        snap.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "sum_value")).alias("m"))
         .select("user_id", F.col("m.n_events").alias("n_events"), F.col("m.sum_value").alias("sum_value"))
     )
@@ -214,10 +213,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND click_ts >= ts - INTERVAL 30 MINUTES"
         ),
     )
-    q = run_to_memory(joined, "streamq_ssjoin", "append")
+    snap, _ = run_to_memory(joined, "streamq_ssjoin", "append")
     return (
-        spark.table(q.name)
-        .groupBy("event_id", "user_id", "ts")
+        snap.groupBy("event_id", "user_id", "ts")
         .agg(
             F.count("*").alias("n_clicks_30m"),
             F.max("click_ts").alias("last_click"),
@@ -268,10 +266,9 @@ def stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = run_to_memory(deduped, "streamq_dedup", "append")
+    snap, _ = run_to_memory(deduped, "streamq_dedup", "append")
     return (
-        spark.table(q.name)
-        .groupBy("event_type")
+        snap.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
             money2(F.sum(dec2("value"))).alias("sum_value"),
@@ -385,8 +382,8 @@ def run_late_stream(spark: SparkSession, sf_dir: str):
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value"))
     )
-    q = run_to_memory(agg, "streamq_late", "append")
-    out = spark.table(q.name).select(
+    snap, q = run_to_memory(agg, "streamq_late", "append")
+    out = snap.select(
         F.date_format("w.start", _TS_FMT).alias("window_start"),
         "event_type",
         "n",
@@ -557,8 +554,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
     )
-    q = run_to_memory(agg, "streamq_enrich", "complete")
-    return spark.table(q.name).select(
+    snap, _ = run_to_memory(agg, "streamq_enrich", "complete")
+    return snap.select(
         "c_mktsegment", "event_type", "n", "sum_value"
     )
 
@@ -602,8 +599,8 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         money2(F.sum(dec2("value"))).alias("sum_value"),
     )
-    q = run_to_memory(agg, "streamq_rocksdb", "complete")
-    return child.table(q.name).select("day", "event_type", "n", "sum_value")
+    snap, _ = run_to_memory(agg, "streamq_rocksdb", "complete")
+    return snap.select("day", "event_type", "n", "sum_value")
 
 
 _ROCKSDB_SQL = """
@@ -653,19 +650,19 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run_once() -> tuple[int, str]:
+    def run_once() -> tuple[int, DataFrame]:
         ev = spark.readStream.schema(schema).parquet(src)
         agg = ev.groupBy("event_type").agg(
             F.count("*").alias("n"),
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
-        q = run_to_memory(agg, "streamq_ckpt", "complete", checkpoint=cp)
-        return sum(int(p["numInputRows"]) for p in q.recentProgress), q.name
+        snap, q = run_to_memory(agg, "streamq_ckpt", "complete", checkpoint=cp)
+        return sum(int(p["numInputRows"]) for p in q.recentProgress), snap
 
     rows_a, _ = run_once()  # batch A, then STOP
     shutil.copy(f"{fixture}/b_second.parquet", f"{src}/b_second.parquet")
     rows_b, final = run_once()  # recovery: offsets + state restored, B only
-    out = spark.table(final).select("event_type", "n", "sum_value")
+    out = final.select("event_type", "n", "sum_value")
     result = out.collect()
     shutil.rmtree(root, ignore_errors=True)
     total = sum(r["n"] for r in result)

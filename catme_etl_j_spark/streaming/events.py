@@ -6,7 +6,8 @@ streaming queries themselves are the registered ``stream_*`` entries
 in operators/streamq.py, each hash-checked against a DuckDB oracle.
 This module holds what they share: the file source over the events
 parquet (``read_event_stream``) and the one drain into a memory
-table (``run_to_memory``).
+table (``run_to_memory``), which returns the snapshot as a frame and
+leaves no view behind.
 """
 
 from __future__ import annotations
@@ -38,17 +39,24 @@ def read_event_stream(
     so the schema is inferred from a one-file batch read of the same
     path (footer-only, no data scan) and ts is normalized to
     TimestampType exactly as the batch loader does (tables._normalize_ts).
+    When ``glob`` names one regular file, that read goes through the
+    batch loader's schema memo (tables.read_parquet) and starts no job
+    after the file's first read in the session.
     """
+    import os
+
     from pyspark.sql import types as T
     from pyspark.sql.utils import AnalysisException
 
-    from catme_etl_j_spark.sources.tables import _normalize_ts
+    from catme_etl_j_spark.sources.tables import _normalize_ts, read_parquet
 
-    batch = spark.read
-    if glob:
-        batch = batch.option("pathGlobFilter", glob)
     try:
-        schema = batch.parquet(path).schema
+        if glob and os.path.isfile(f"{path}/{glob}"):
+            schema = read_parquet(spark, f"{path}/{glob}").schema
+        elif glob:
+            schema = spark.read.option("pathGlobFilter", glob).parquet(path).schema
+        else:
+            schema = spark.read.parquet(path).schema
     except AnalysisException:
         # Directory exists but holds no matching files yet (producer
         # drops them after the stream starts — the normal file-stream
@@ -78,10 +86,16 @@ def run_to_memory(
     prefix: str,
     output_mode: str = "append",
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> tuple[DataFrame, StreamingQuery]:
     """Drain a streaming frame into a fresh in-memory table (availableNow
-    trigger) and return the stopped StreamingQuery; read the table back
-    with ``stream_df.sparkSession.table(q.name)``.
+    trigger) and return ``(snapshot, query)``: the sink's rows as a
+    DataFrame, and the stopped StreamingQuery (for its progress).
+
+    The memory sink registers its table as a temp view named after the
+    query. The snapshot frame is resolved against that view and the view
+    is dropped before returning: the frame's plan holds the sink itself,
+    so the rows live exactly as long as the caller keeps the frame, and
+    the session's catalog keeps no ``<prefix>_<n>`` view. No job runs.
 
     The counter appended to ``prefix`` makes every table name unique,
     so queries built from several threads at once never share a sink.
@@ -99,4 +113,7 @@ def run_to_memory(
     q = writer.start()
     q.processAllAvailable()
     q.stop()
-    return q
+    spark = stream_df.sparkSession
+    snapshot = spark.table(q.name)
+    spark.catalog.dropTempView(q.name)
+    return snapshot, q

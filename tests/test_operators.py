@@ -1924,8 +1924,10 @@ def test_eager_construction_set_is_mechanically_exact(spark, sf_dir):
 
     queries = m.queries()
     tracker = spark.sparkContext.statusTracker()
-    # EVERY spark.read.<fmt> schedules one distributed schema-inference
-    # job (single stage named "<fmt> at ..."); bench.py's lazy protocol
+    # A spark.read.<fmt> without a schema schedules one distributed
+    # schema-inference job (single stage named "<fmt> at ..."); for
+    # load_table's parquet files that is only each file's first read in
+    # the session (sources.tables memoizes the schema); bench.py's lazy protocol
     # deliberately excludes those per-session read costs by resetting
     # t0 after construction. "Eager" means any OTHER job: checkpoint
     # materializations ("localCheckpoint at ..."), AQE stage futures

@@ -111,9 +111,9 @@ def test_stream_starts_on_empty_directory(spark, sf_dir, tmp_path):
     src.mkdir()
     stream = read_event_stream(spark, str(src))  # no files yet — must not raise
     shutil.copy(f"{sf_dir}/events.parquet", src / "a.parquet")
-    q = run_to_memory(stream, "late_out")
+    snap, _ = run_to_memory(stream, "late_out")
     n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert spark.table(q.name).count() == n_src
+    assert snap.count() == n_src
 
 
 def test_late_data_policy_pinned(spark, sf_dir):
