@@ -55,9 +55,11 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-# Session confs that change the schema parquet inference returns
-# (nanosAsLong switches events.ts between long and TIMESTAMP_NTZ), so
-# a session under QUERY_CONF and a vanilla one never share a memo entry.
+# Session confs that change the schema parquet inference returns:
+# nanosAsLong turns a TIMESTAMP(NANOS) ts into long (with it off Spark
+# cannot read that column at all), and inferTimestampNTZ.enabled picks
+# TIMESTAMP_NTZ or TIMESTAMP for the current TIMESTAMP(MICROS) ts. So a
+# session under QUERY_CONF and a vanilla one never share a memo entry.
 _SCHEMA_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",

@@ -39,24 +39,17 @@ def read_event_stream(
     so the schema is inferred from a one-file batch read of the same
     path (footer-only, no data scan) and ts is normalized to
     TimestampType exactly as the batch loader does (tables._normalize_ts).
-    When ``glob`` names one regular file, that read goes through the
-    batch loader's schema memo (tables.read_parquet) and starts no job
-    after the file's first read in the session.
+    That read goes through the batch loader's schema memo
+    (tables.read_parquet), so when ``glob`` names one file it starts no
+    job after the file's first read in the session.
     """
-    import os
-
     from pyspark.sql import types as T
     from pyspark.sql.utils import AnalysisException
 
     from catme_etl_j_spark.sources.tables import _normalize_ts, read_parquet
 
     try:
-        if glob and os.path.isfile(f"{path}/{glob}"):
-            schema = read_parquet(spark, f"{path}/{glob}").schema
-        elif glob:
-            schema = spark.read.option("pathGlobFilter", glob).parquet(path).schema
-        else:
-            schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, f"{path}/{glob}" if glob else path).schema
     except AnalysisException:
         # Directory exists but holds no matching files yet (producer
         # drops them after the stream starts — the normal file-stream

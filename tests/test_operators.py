@@ -86,6 +86,29 @@ def test_query_matches_oracle(spark, sf_dir, oracle_con, name):
     assert _norm(scols, srows) == _norm(ocols, orows)
 
 
+def test_stream_queries_leave_no_sink_views(spark, sf_dir, oracle_con):
+    """The memory-sink drain (``streaming.events.run_to_memory``) leaves
+    no temp view in the session, and the frames it returns still match
+    their DuckDB twins after the view is gone."""
+    streams = ("stream_tumbling_window", "stream_stream_join", "stream_sliding_window")
+    queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    frames = {name: queries[name](spark, sf_dir) for name in streams}
+
+    views = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith(("streamq_", "convq_"))
+    ]
+    assert views == []
+    for name, sdf in frames.items():
+        rel = oracle_con.sql(oracles[name])
+        srows = [tuple(r) for r in sdf.collect()]
+        orows = rel.fetchall()
+        assert srows, name
+        assert len(srows) == len(orows), name
+        assert _norm(sdf.columns, srows) == _norm(rel.columns, orows), name
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
