@@ -295,9 +295,22 @@ def _minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(_minhash_rows_pandas, schema)
 
 
-def _band_col(j: int, rows_per_band: int = ROWS_PER_BAND):
-    cols = [F.col(f"m{j * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
-    return F.md5(F.concat_ws(",", *cols))
+def _bands(
+    mh: DataFrame, bands: int = BANDS, rows_per_band: int = ROWS_PER_BAND
+) -> DataFrame:
+    """Signature frame ``(doc_id, m0..)`` -> ``(doc_id, band_idx, bh)``,
+    one row per document and band. The bucket key ``bh`` is the band's
+    ``rows_per_band`` signature values as an exact array, so two docs
+    share a bucket iff they agree on every row of the band — the same
+    buckets as the oracles' ``md5(concat_ws(',', ...))`` key. One SQL
+    expression, so building it costs one py4j call, not one per column."""
+    band_arrays = ", ".join(
+        "array({})".format(
+            ", ".join(f"m{j * rows_per_band + r}" for r in range(rows_per_band))
+        )
+        for j in range(bands)
+    )
+    return mh.selectExpr("doc_id", f"posexplode(array({band_arrays})) AS (band_idx, bh)")
 
 
 def minhash_lsh_candidates(
@@ -326,22 +339,7 @@ def minhash_lsh_candidates(
     # the whole shingle -> hash -> 32-way minhash aggregate pipeline
     # re-expands into BOTH sides (the similarity._lsh banded-frame
     # precedent, r11)
-    bands_df = (
-        mh.select(
-            "doc_id",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(j).alias("band_idx"),
-                        _band_col(j, rows_per_band).alias("bh"),
-                    )
-                    for j in range(bands)
-                ])
-            ).alias("band"),
-        )
-        .select("doc_id", "band.band_idx", "band.bh")
-        .cache()
-    )
+    bands_df = _bands(mh, bands, rows_per_band).cache()
     a, b = bands_df.alias("a"), bands_df.alias("b")
     return (
         a.join(
@@ -718,49 +716,62 @@ WHERE CAST(i AS DOUBLE) / (x.n + y.n - i) >= {WINNOW_SIM_THRESHOLD}
 # (connected components) -> keep the min doc_id per cluster.
 # ---------------------------------------------------------------------------
 
-def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Min-label propagation to fixpoint: (nid) x (src, dst) -> (nid, rep)
-    where rep = min doc_id in the node's component.
+def _connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Min-label propagation to fixpoint: (nid) x undirected pairs
+    (any two id columns) -> (nid, rep) where rep = min id in the
+    node's component.
 
     Each step is one neighbor-min equi-join + agg over a self-looped
     edge set (the loop edge makes the dst-min include the node's own
     rep, so there is no separate labels-merge join) PLUS a
     path-halving shortcut (rep <- min(rep, rep-of-rep)): halving makes
     label distances contract geometrically, so steps drop from
-    O(diameter) to O(log diameter) — measured at sf0.1 the LSH-edge
-    components took 9 plain-propagation steps vs 6 with halving
-    (shallow 2-step MinHash components are unaffected). Each
-    ``iterate`` round (eager checkpoint, convention #15) runs TWO
-    steps, so the per-round fixed costs are paid half as often; every
-    intermediate has exactly one consumer, so the fused lineage never
-    re-expands. Every rep value is itself a node id, so the halving
-    shortcut is an equi-join against the round base's checkpointed
-    materialization — a scan, not a recompute. The fixpoint (min label
-    per component) is unchanged: halving only ever lowers a label
-    toward the same minimum the DuckDB oracles converge to (their
-    unrolled rounds use the same rep-of-rep shortcut).
+    O(diameter) to O(log diameter). Measured on the embedding-cosine
+    closure (sf0.1 and the gen_scale sf1.0 replica alike): 8 plain
+    propagation steps vs 5 with halving. MinHash closures are shallow
+    on either edge set (bucket stars or all candidate pairs): 1 step
+    at sf0.1, 2 at sf1.0. Each ``iterate`` round (eager checkpoint,
+    convention #15) runs TWO steps, so the per-round fixed costs are
+    paid half as often; every intermediate has exactly one consumer,
+    so the fused lineage never re-expands. Every rep value is itself a
+    node id, so the halving shortcut is an equi-join against the round
+    base's checkpointed materialization — a scan, not a recompute. The
+    fixpoint (min label per component) is unchanged: halving only ever
+    lowers a label toward the same minimum the DuckDB oracles converge
+    to (their unrolled rounds use the same rep-of-rep shortcut).
 
     Convergence test: both steps' label sums ride the round's
     checkpoint as observed metrics (convention #16 — no probe job).
     Propagation only ever lowers a label, so equal sums within a round
     (exact integers, per-node monotone non-increasing) mean step 2
     changed nothing: the fixpoint is reached, possibly on the round's
-    FIRST step — shallow closures (MinHash components converge in 1-2
-    steps) finish in ONE round.
+    FIRST step — shallow closures finish in ONE round.
     """
     # Materialize the edge set ONCE before iterating: without this,
     # every round's join re-executes the edges' full upstream pipeline
-    # (for LSH edges: shingle -> minhash -> band self-join), multiplying
-    # the most expensive stage by rounds-to-fixpoint. This was the
-    # round-3 dedup_minhash_keep bench regression (2.18s -> 2.61s).
-    # r11: the edge set carries a SELF-LOOP per node, so each step's
-    # neighbor-min over dst already includes the node's own rep — the
-    # old labels-left-join-neigh merge (one extra join + shuffle per
-    # step) is gone, and the groupBy(dst) covers every node.
-    edges = edges.union(
-        nodes.select(F.col("nid").alias("src"), F.col("nid").alias("dst"))
-    ).localCheckpoint()
-    labels = nodes.select(F.col("nid"), F.col("nid").alias("rep")).localCheckpoint()
+    # (for MinHash: shingle -> minhash -> band window), multiplying the
+    # most expensive stage by rounds-to-fixpoint. Each pair is exploded
+    # into both directions in one pass (a two-select union would run the
+    # pairs pipeline twice), and each node gets a SELF-LOOP, so a step's
+    # neighbor-min over dst already includes the node's own rep and the
+    # groupBy(dst) covers every node.
+    a, b = (F.col(c) for c in pairs.columns)
+    edges = (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .union(nodes.select(F.col("nid").alias("src"), F.col("nid").alias("dst")))
+        .localCheckpoint()
+    )
+    # the identity map is a loop-invariant scan of `nodes`, which
+    # ``iterate`` accepts as the initial state without a checkpoint
+    labels = nodes.select(F.col("nid"), F.col("nid").alias("rep"))
 
     def _step(cur: DataFrame, halve_vs: DataFrame | None) -> DataFrame:
         nxt = (
@@ -802,27 +813,44 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return labels
 
 
+def _bucket_star_edges(mh: DataFrame) -> DataFrame:
+    """Signature frame -> undirected edges ``(doc_id, bucket_min)``
+    joining every LSH bucket member to the bucket's minimum doc_id.
+
+    A bucket ``(band_idx, bh)`` is a clique in the candidate-pair graph
+    :func:`minhash_lsh_candidates` builds, and a star over the same
+    members has the same connected components, so the closure gets the
+    same ``rep`` from O(docs x bands) edges, where the band self-join
+    emits O(sum |bucket|^2) pairs. One window keyed on the bucket is
+    the only exchange; the same doc pair may appear once per band it
+    shares, which the min-label closure ignores."""
+    w = Window.partitionBy("band_idx", "bh")
+    return (
+        _bands(mh)
+        .select("doc_id", F.min("doc_id").over(w).alias("bucket_min"))
+        .filter(F.col("doc_id") != F.col("bucket_min"))
+    )
+
+
+def _minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document with its near-dup cluster representative:
+    ``(nid, rep)``, rep = min doc_id over the document's component of
+    the LSH candidate graph (bucket stars closed by
+    :func:`_connected_components`)."""
+    nodes = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("nid"))
+    return _connected_components(nodes, _bucket_star_edges(_minhash_df(spark, sf_dir)))
+
+
 def dedup_minhash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated corpus membership: every document with its near-dup
     cluster representative (min doc_id over the LSH-pair component) and
     a kept flag — the downstream ``Deduplicator`` stage the reference's
     contract names but never implements
-    (HighVolumeExcelConverter-Contract-v2.0.1.md:45).
+    (HighVolumeExcelConverter-Contract-v2.0.1.md:45). The components
+    are closed over bucket stars (:func:`_bucket_star_edges`), not the
+    candidate pairs; the oracle closes the pairs and must agree.
     """
-    pairs = minhash_lsh_candidates(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("nid"))
-    # one pairs consumer: explode each pair into both directions (the
-    # old two-select union re-ran the whole candidate pipeline twice
-    # before the edge checkpoint; same edge multiset)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    labels = _connected_components(docs, edges)
+    labels = _minhash_clusters(spark, sf_dir)
     return labels.select(
         F.col("nid").alias("doc_id"),
         F.col("rep").alias("rep_id"),
@@ -856,27 +884,14 @@ def dedup_minhash_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the min doc_id — the policy production corpus pipelines use
     (keep the richest near-duplicate, drop the truncated mirrors).
 
-    Scale shape: linear CC labels (checkpointed, see
-    ``_connected_components``) + one co-partitioned join back to
-    ``documents`` + one window PARTITIONED BY cluster — no global
+    Scale shape: O(docs x bands) bucket-star edges (one window keyed on
+    the LSH bucket, no band self-join), CC labels checkpointed per
+    round (see ``_connected_components``), one join back to
+    ``documents`` and one window PARTITIONED BY cluster — no global
     window, no cross product, so it survives a 100 TB corpus.
     """
-    pairs = minhash_lsh_candidates(spark, sf_dir)
+    labels = _minhash_clusters(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    # one pairs consumer: explode each pair into both directions (the
-    # old two-select union re-ran the whole candidate pipeline twice
-    # before the edge checkpoint; same edge multiset)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    labels = _connected_components(
-        docs.select(F.col("doc_id").alias("nid")), edges
-    )
     j = labels.join(docs, labels["nid"] == docs["doc_id"]).select(
         docs["doc_id"], labels["rep"].alias("cluster_id"), docs["n_chars"]
     )
@@ -1151,26 +1166,12 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     backfill; this is the steady state.
     """
     mh = _minhash_df(spark, sf_dir).cache()
-
-    def bands_of(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(j).alias("band_idx"), _band_col(j).alias("bh")
-                    )
-                    for j in range(BANDS)
-                ])
-            ).alias("band"),
-        ).select("doc_id", "band.band_idx", "band.bh")
-
     index = mh.filter(F.expr(f"doc_id % {INCR_SPLIT_MOD} < {INCR_BATCH_MIN}"))
     batch = mh.filter(F.expr(f"doc_id % {INCR_SPLIT_MOD} >= {INCR_BATCH_MIN}"))
     cand = (
-        bands_of(batch)
+        _bands(batch)
         .alias("nb")
-        .join(bands_of(index).alias("ib"), ["band_idx", "bh"])
+        .join(_bands(index).alias("ib"), ["band_idx", "bh"])
         .select(
             F.col("nb.doc_id").alias("doc_id"), F.col("ib.doc_id").alias("idx_id")
         )

@@ -1482,18 +1482,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = ann_lsh_hyperplane_pairs(spark, sf_dir)
     nodes = load_table(spark, sf_dir, "embeddings").select(F.col("vec_id").alias("nid"))
-    # one pairs consumer: explode each pair into both directions (the
-    # old two-select union re-ran the whole LSH pipeline twice before
-    # the edge checkpoint; same edge multiset)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")),
-                F.struct(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    labels = _connected_components(nodes, edges)
+    labels = _connected_components(nodes, pairs.select("vec_a", "vec_b"))
     return labels.select(
         F.col("nid").alias("vec_id"),
         F.col("rep").alias("rep_id"),

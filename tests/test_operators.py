@@ -170,6 +170,80 @@ def test_minhash_band_knob_validated(spark, sf_dir):
     assert strict <= loose
 
 
+def _closures(spark, nodes, mh, monkeypatch):
+    """(doc_id, rep_id) sets of the bucket-star closure and of the
+    candidate-pair closure over the same signature frame, plus the
+    rounds the star closure ran."""
+    from catme_etl_j_spark.operators import dedup
+    from catme_etl_j_spark.plans.iterate import iterate
+
+    rounds = []
+
+    def counting(state, step, *args, **kwargs):
+        def counted(df, k):
+            rounds.append(k)
+            return step(df, k)
+
+        return iterate(state, counted, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "iterate", counting)
+    star = set(dedup._connected_components(nodes, dedup._bucket_star_edges(mh)).collect())
+    n_rounds = max(rounds)
+    monkeypatch.undo()
+    pairs = dedup.minhash_lsh_candidates(spark, None, mh=mh)
+    return star, set(dedup._connected_components(nodes, pairs).collect()), n_rounds
+
+
+def test_bucket_star_closure_matches_pair_closure(spark, sf_dir, monkeypatch):
+    """Each LSH bucket is a clique of candidate pairs, so joining every
+    member to the bucket minimum must give the same components as the
+    all-pairs band self-join: on the fixture corpus, and on a synthetic
+    signature frame with a 200-doc hot bucket, two chains bridged
+    across bands (deep enough to need a second closure round) and
+    documents with no signature row (which must stay singletons)."""
+    from pyspark.sql import functions as F
+
+    from catme_etl_j_spark.operators.dedup import BANDS, NUM_PERM, ROWS_PER_BAND, _minhash_df
+    from catme_etl_j_spark.sources.tables import load_table
+
+    mh = _minhash_df(spark, sf_dir).cache()
+    nodes = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("nid"))
+    star, pair, _ = _closures(spark, nodes, mh, monkeypatch)
+    assert star == pair
+    assert any(nid != rep for nid, rep in star)  # the corpus has near-dups
+
+    # bucket tokens per (doc, band); docs sharing a token share a bucket
+    hot = list(range(1000, 1200))
+    chain_a = list(range(100, 106))
+    chain_b = list(range(200, 206))
+    orphans = [5000, 5001, 5002]
+    docs = hot + chain_a + chain_b
+    token = {(d, j): (d, j) for d in docs for j in range(BANDS)}
+    for d in hot:
+        token[d, 0] = "hot"
+    for chain in (chain_a, chain_b):
+        for i, (x, y) in enumerate(zip(chain, chain[1:])):
+            j = 1 + i % (BANDS - 1)  # consecutive links use different bands
+            token[x, j] = token[y, j] = (x, y)
+    token[chain_a[-1], 0] = token[chain_b[-1], 0] = "bridge"
+    ids = {t: n for n, t in enumerate(dict.fromkeys(token.values()))}
+    rows = [
+        [d] + [ids[token[d, k // ROWS_PER_BAND]] * 10 + k % ROWS_PER_BAND
+               for k in range(NUM_PERM)]
+        for d in docs
+    ]
+    schema = ", ".join(["doc_id bigint"] + [f"m{i} bigint" for i in range(NUM_PERM)])
+    mh = spark.createDataFrame(rows, schema)
+    nodes = spark.createDataFrame([(d,) for d in docs + orphans], "nid bigint")
+    star, pair, n_rounds = _closures(spark, nodes, mh, monkeypatch)
+    assert star == pair
+    assert n_rounds >= 2
+    reps = dict(star)
+    assert {reps[d] for d in hot} == {hot[0]}
+    assert {reps[d] for d in chain_a + chain_b} == {chain_a[0]}
+    assert all(reps[d] == d for d in orphans)
+
+
 def _minhash_df_expr(spark, sf_dir):
     """The pre-r12 expression pipeline (explode + HOF shingles + JVM
     md5 + 32 min-aggs), the equivalence witness for the Arrow path."""

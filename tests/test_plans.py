@@ -93,6 +93,30 @@ def test_minhash_lsh_shuffle_budget(spark, sf_dir):
     assert len([k for k in kinds if k == "RoundRobinPartitioning"]) <= 1, plan
 
 
+def test_minhash_closure_edges_are_bucket_stars(spark, sf_dir):
+    """The near-dup closure's edges come from ONE window keyed on the
+    LSH bucket (each member -> bucket minimum), never from a band-frame
+    self-join, whose pair count is quadratic in a hot bucket's size.
+    One keyed exchange, plus at most the round-robin scan spread."""
+    import re
+
+    from catme_etl_j_spark.operators.dedup import _bucket_star_edges, _minhash_df
+
+    # a bands frame an earlier test cached would match by plan equality,
+    # and the cached relation prints its initial AND final plan, so the
+    # scan spread would be listed twice
+    spark.catalog.clearCache()
+    plan = formatted_plan(_bucket_star_edges(_minhash_df(spark, sf_dir)))
+    window = re.search(r"\(\d+\) Window\n.*\nArguments: (.*)", plan)
+    assert window, plan
+    assert window.group(1).startswith("[min(doc_id#"), plan
+    assert re.search(r"\], \[band_idx#\d+, bh#\d+\]$", window.group(1)), plan
+    assert "Join" not in plan, plan
+    kinds = re.findall(r"\(\d+\) Exchange\nInput .*\nArguments: ([A-Za-z]+)", plan)
+    assert [k for k in kinds if k != "RoundRobinPartitioning"] == ["hashpartitioning"], plan
+    assert kinds.count("RoundRobinPartitioning") <= 1, plan
+
+
 def test_corpus_pipeline_single_shuffle(spark, sf_dir):
     import re
 
