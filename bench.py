@@ -2,9 +2,16 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line with per-query wall seconds.
 
-Each query is executed through the ``noop`` write sink, which forces
-full computation of the plan (unlike ``count()``, which lets Catalyst
-prune projection work) while writing nothing.
+    python bench.py [name ...]
+
+With names, it times the q03 control and then those entries (any
+registered query or converter key) under the same protocol.
+
+Every query is timed end to end: construction, then execution through
+the ``noop`` write sink, which forces full computation of the plan
+(unlike ``count()``, which lets Catalyst prune projection work) while
+writing nothing. ``BENCH_RECORD=1`` keeps each sample's
+construct_s/exec_s split in BENCH_LOG.jsonl.
 """
 
 from __future__ import annotations
@@ -141,64 +148,6 @@ HEADLINE = [
     "corpus_decontaminate_vs",
 ]
 
-# Queries that materialize eagerly during construction (checkpointed
-# iterative state, driver-side bounded collects) must be timed
-# end-to-end; lazy queries time execution only (construction is
-# driver-side plan analysis, which a resident service pays once).
-# SINGLE SOURCE OF TRUTH (VERDICT r10 ADVICE): tools/bench_subset.py
-# imports this set, and tests/test_operators.py asserts any registered
-# query whose construction schedules Spark jobs is listed here.
-EAGER_CONSTRUCTION = frozenset(
-    {
-        "dedup_minhash_keep",
-        "graph_pagerank_nations",
-        "corpus_e2e_funnel",  # localCheckpoints the staged text frame
-        "corpus_bpe_tokenize",  # driver-side merge training in the builder
-        "embed_e2e_pipeline",  # localCheckpoints chunks + pairs
-        # sketch_ams_f2 left the set in r11: the fused single-aggregate
-        # rewrite removed its localCheckpoint, so construction is lazy
-        "graph_pagerank_users",  # localCheckpoints adjacency + round frames
-        "graph_s_core_peeling",  # checkpoints edges/alive + median collect
-        "dedup_embedding_cosine",  # CC fixpoint loop: per-round first()
-        # r11 additions: the Lloyd loop's comp localCheckpoint is EAGER,
-        # so both k-means consumers pay real construction jobs —
-        # embed_kmeans_sse was HEADLINE-timed execution-only since r8
-        # (underreported; the r11 number includes construction and is
-        # honestly higher than r10's)
-        "embed_kmeans_sse",
-        "dedup_semdedup_prune",
-        # r11 driver-side Lloyd codebooks: construction collects the
-        # K-row centroid state each round (the MLlib KMeans shape), so
-        # the codebook training is real construction-time work
-        "ann_topk_ivf_kmeans",
-        "ann_pq_topk",
-        # r12 (VERDICT r11 #7): the mechanical job-group probe
-        # (tests/test_operators.py::test_eager_construction_set_is_
-        # mechanically_exact) found 12 MORE queries whose construction
-        # schedules real Spark jobs — bounded first()/collect lookups
-        # (similarity.py's query-vector fetch) and localCheckpoint
-        # upstream-stage materializations (convention #15: even
-        # eager=False checkpoints materialize pending query stages at
-        # construction). Their pre-r12 bench numbers were
-        # execution-only and UNDER-reported; from r12 on they are
-        # timed end-to-end, so their r12 numbers are honestly HIGHER
-        # than r11's for measurement reasons, not code regressions
-        # (the r11 ivf/pq precedent, called out in OPTIMIZATION_r12.md).
-        "ann_lsh_rerank_topk",
-        "ann_matryoshka_recall",
-        "rank_rrf_fusion",
-        "rank_smart_lnc_ltc",
-        "events_survival_km",
-        "graph_lpa_communities",
-        "graph_connected_components",
-        "graph_bfs_backbone",
-        "graph_katz_centrality",
-        "stats_permutation_test",
-        "stats_kendall_tau",
-        "text_kneser_ney_bigram",
-    }
-)
-
 
 def _bench_converter(spark, sf_dir: str, n_rows: int = 100_000) -> float:
     """Reference-workload throughput: xlsx -> NDJSON, seconds.
@@ -285,7 +234,7 @@ def _bench_converter_parallel(
     return round(best, 3)
 
 
-def _bench_converter_bigsheet(spark) -> float:
+def _bench_converter_bigsheet(spark, sf_dir: str) -> float:
     """The reference's headline size (VERDICT r8 #5): ONE serial
     conversion of the cached 1.2M-row / ~492 MB-sheet-XML single-sheet
     workbook (tools/gen_bigxlsx.py builds it deterministically on first
@@ -293,15 +242,17 @@ def _bench_converter_bigsheet(spark) -> float:
     IS the number, and the memory pin lives in
     tests/test_converter.py::test_bigsheet_conversion_bounded_memory
     (Python-worker peak VmHWM < 150 MB, measured 125 MB). rows/sec =
-    1_200_000 / this entry's seconds."""
+    1_200_000 / this entry's seconds. The fixture does not depend on
+    ``sf_dir``."""
     import tempfile
 
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+    here = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(here, "tools"))
     import gen_bigxlsx
 
     from catme_etl_j_spark.converter import convert
 
-    fixture = gen_bigxlsx.generate("/root/repo/.scaledata/bigsheet.xlsx")
+    fixture = gen_bigxlsx.generate(os.path.join(here, ".scaledata", "bigsheet.xlsx"))
     out = os.path.join(tempfile.mkdtemp(prefix="bench_conv_big_"), "out.ndjson")
     t0 = time.time()
     convert(fixture, "NDJSON", out, overwrite=True, spark=spark)
@@ -310,69 +261,109 @@ def _bench_converter_bigsheet(spark) -> float:
     return elapsed
 
 
-def _run_session() -> dict[str, float]:
-    """One JVM session's worth of timings (the round-5 protocol).
+# Converter bench paths by key: each takes (spark, sf_dir) and returns
+# its own seconds (see each docstring); they carry no construct/exec
+# split.
+CONVERTERS = {
+    "convert_xlsx_ndjson": _bench_converter,
+    "convert_xlsx_parallel_8files": _bench_converter_parallel,
+    "convert_xlsx_bigsheet_1m2rows": _bench_converter_bigsheet,
+}
+BIGSHEET = "convert_xlsx_bigsheet_1m2rows"
+# The pinned machine-speed control (VERDICT r10 #2): a named run always
+# times it first, so every receipt carries its own anchor.
+CONTROL = "q03_shipping_priority"
 
-    SPARK_GRAFT_BENCH_SUBSET (comma-separated names) restricts the run
-    to those HEADLINE/converter entries — the BENCH_SCALE child
-    protocol."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench")
 
-    subset_env = os.environ.get("SPARK_GRAFT_BENCH_SUBSET")
-    subset = set(subset_env.split(",")) if subset_env else None
-    headline = [n for n in HEADLINE if subset is None or n in subset]
+def time_query(spark, query, sf_dir: str) -> dict[str, list[float]]:
+    """Time one registered query end to end — the one per-query bench
+    protocol. Every run clears the session cache (a query that
+    .cache()s a multi-consumer intermediate would otherwise serve the
+    runs after the first from memory), constructs the frame (driver
+    planning plus any eager checkpoint or bounded-collect jobs), then
+    computes it through the ``noop`` sink. One untimed warm-up pays the
+    session's one-time costs (a file's first read infers its schema,
+    file listing, codegen, Python-worker spawn); then median-of-3, and
+    sub-second queries get 2 more timed runs (median-of-5), because
+    their run-over-run jitter (~±0.06 s) is a large relative error only
+    below ~1 s.
 
+    Returns per-run ``construct_s``, ``exec_s`` and ``samples``; each
+    sample is exactly the sum of its two rounded parts."""
+    runs: dict[str, list[float]] = {"samples": [], "construct_s": [], "exec_s": []}
+
+    def run_once() -> tuple[float, float]:
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        df = query(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return round(t1 - t0, 3), round(time.perf_counter() - t1, 3)
+
+    run_once()  # warm-up
+    for i in range(5):
+        if i == 3 and sorted(runs["samples"])[1] >= 1.0:
+            break
+        construct_s, exec_s = run_once()
+        runs["construct_s"].append(construct_s)
+        runs["exec_s"].append(exec_s)
+        runs["samples"].append(round(construct_s + exec_s, 3))
+    return runs
+
+
+def entries(names: list[str]) -> list[str]:
+    """The entries a run times, in order. No names: HEADLINE, then the
+    converters. Otherwise the q03 control, then the names — any
+    registered query or CONVERTERS key."""
+    if not names:
+        return HEADLINE + list(CONVERTERS)
+    known = entry_mod.queries().keys() | CONVERTERS.keys()
+    unknown = [n for n in names if n not in known]
+    if unknown:
+        sys.exit(f"bench.py: not a registered query or converter: {' '.join(unknown)}")
+    return [CONTROL] + [n for n in dict.fromkeys(names) if n != CONTROL]
+
+
+def run_session(spark, sf_dir: str, names: list[str]):
+    """Time ``names`` in order in one session. Returns ({name: median
+    seconds}, {name: time_query record}); converters have no record."""
     queries = entry_mod.queries()
     # Warm the JVM/session so the first timed query doesn't pay startup.
     spark.range(1000).selectExpr("sum(id)").collect()
-
-    # 1 untimed warm-up (pays file-listing/codegen/Python-worker spawn)
-    # + median-of-3 timed runs; sub-second queries get 2 extra timed
-    # runs (median-of-5) because their run-over-run jitter (~±0.06s
-    # observed r02->r03 on unchanged q01/q05) is a large RELATIVE error
-    # only below ~1s. Target stability: unchanged queries move <=0.03s.
-    eager = EAGER_CONSTRUCTION
     timings: dict[str, float] = {}
-    raw_samples: dict[str, list[float]] = {}
-    for name in headline:
-        samples: list[float] = []
+    raw: dict[str, dict[str, list[float]]] = {}
+    for name in names:
+        if name in CONVERTERS:
+            timings[name] = CONVERTERS[name](spark, sf_dir)
+            continue
+        raw[name] = time_query(spark, queries[name], sf_dir)
+        samples = sorted(raw[name]["samples"])
+        timings[name] = samples[len(samples) // 2]
+    return timings, raw
 
-        def run_once(timed: bool) -> None:
-            # r11 measurement fix: queries that .cache() a multi-consumer
-            # intermediate (convention #12) would otherwise serve every
-            # timed run after the warm-up from the session cache — the
-            # bench then times a cached scan, not the computation. Every
-            # timed run must compute from the parquet inputs.
-            spark.catalog.clearCache()
-            t0 = time.time()
-            df = queries[name](spark, sf_dir)
-            if name not in eager:
-                t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            if timed:
-                samples.append(time.time() - t0)
 
-        run_once(False)  # warm-up
-        for _ in range(3):
-            run_once(True)
-        if sorted(samples)[1] < 1.0:
-            for _ in range(2):
-                run_once(True)
-        timings[name] = round(sorted(samples)[len(samples) // 2], 3)
-        raw_samples[name] = [round(s, 3) for s in samples]
+def _run_child(names: list[str], **env: str):
+    """One fresh-JVM session of ``names`` in a child interpreter: its
+    (timings, raw), or None (stderr tail reported) if it printed none."""
+    import subprocess
 
-    if subset is None or "convert_xlsx_ndjson" in subset:
-        timings["convert_xlsx_ndjson"] = _bench_converter(spark, sf_dir)
-    if subset is None or "convert_xlsx_parallel_8files" in subset:
-        timings["convert_xlsx_parallel_8files"] = _bench_converter_parallel(
-            spark, sf_dir
+    r = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), *names],
+        env=dict(os.environ, SPARK_GRAFT_BENCH_CHILD="1", **env),
+        capture_output=True, text=True,
+    )
+    out = {}
+    for line in r.stdout.splitlines():
+        tag, _, payload = line.partition(" ")
+        if tag in ("CHILD_TIMINGS", "CHILD_SAMPLES"):
+            out[tag] = json.loads(payload)
+    if "CHILD_TIMINGS" not in out:
+        sys.stderr.write(
+            f"# bench child produced no timings (rc={r.returncode}); "
+            f"stderr tail: {r.stderr[-500:]}\n"
         )
-    if os.environ.get("SPARK_GRAFT_BENCH_BIG") == "1" or (
-        subset is not None and "convert_xlsx_bigsheet_1m2rows" in subset
-    ):
-        timings["convert_xlsx_bigsheet_1m2rows"] = _bench_converter_bigsheet(spark)
-    return timings, raw_samples
+        return None
+    return out["CHILD_TIMINGS"], out.get("CHILD_SAMPLES", {})
 
 
 # The core-scaling probe set (VERDICT r11 #1a): the heaviest genuinely
@@ -402,7 +393,6 @@ SCALE_SET = [
 
 def _run_scale_probe() -> None:
     import math
-    import subprocess
 
     here = os.path.dirname(os.path.abspath(__file__))
     sf_dir = os.environ.get(
@@ -410,30 +400,10 @@ def _run_scale_probe() -> None:
     )
     per_cpus: dict[str, dict[str, float]] = {}
     for cpus in ("8", "32"):
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_BENCH_CHILD="1",
-            SPARK_GRAFT_CPUS=cpus,
-            SPARK_GRAFT_SF_DIR=sf_dir,
-            SPARK_GRAFT_BENCH_SUBSET=",".join(SCALE_SET),
-            SPARK_GRAFT_BENCH_BIG="0",
-        )
-        r = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env, capture_output=True, text=True,
-        )
-        raw: dict[str, list[float]] = {}
-        for line in r.stdout.splitlines():
-            if line.startswith("CHILD_TIMINGS "):
-                per_cpus[cpus] = json.loads(line[len("CHILD_TIMINGS "):])
-            elif line.startswith("CHILD_SAMPLES "):
-                raw = json.loads(line[len("CHILD_SAMPLES "):])
-        if cpus not in per_cpus:
-            sys.stderr.write(
-                f"# scale child cpus={cpus} produced no timings "
-                f"(rc={r.returncode}); stderr tail: {r.stderr[-500:]}\n"
-            )
-            sys.exit(1)
+        got = _run_child(SCALE_SET, SPARK_GRAFT_CPUS=cpus, SPARK_GRAFT_SF_DIR=sf_dir)
+        if got is None:
+            sys.exit(f"# scale child cpus={cpus} failed")
+        per_cpus[cpus], raw = got
         if os.environ.get("BENCH_RECORD") == "1":
             write_bench_log(
                 tool=f"bench.py[scale,c{cpus}]", sf_dir=sf_dir,
@@ -469,13 +439,18 @@ def _run_scale_probe() -> None:
 
 
 def main() -> None:
-    if (
-        os.environ.get("BENCH_SCALE") == "1"
-        and os.environ.get("SPARK_GRAFT_BENCH_CHILD") != "1"
-    ):
+    """``python bench.py [name ...]``: time HEADLINE and the converters,
+    or the q03 control and then the named entries (see ``entries``)."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1":
+        timings, raw = run_session(get_spark("bench"), sf_dir, sys.argv[1:])
+        print("CHILD_TIMINGS " + json.dumps(timings))
+        print("CHILD_SAMPLES " + json.dumps(raw))
+        return
+    if os.environ.get("BENCH_SCALE") == "1":
         _run_scale_probe()
         return
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    names = entries(sys.argv[1:])
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     # VERDICT r5 #6: single-session numbers carry JVM-session noise
@@ -487,46 +462,20 @@ def main() -> None:
     # sessions estimates the noise floor, which is the number that
     # tracks code changes. The converter benches get a fresh JVM in
     # every child session for free.
-    if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1":
-        timings, raw = _run_session()
-        print("CHILD_TIMINGS " + json.dumps(timings))
-        print("CHILD_SAMPLES " + json.dumps(raw))
-        return
-
     n_sessions = int(os.environ.get("SPARK_GRAFT_BENCH_SESSIONS", "2"))
     per_session: list[dict[str, float]] = []
-    per_session_raw: list[dict[str, list[float]]] = []
+    per_session_raw: list[dict[str, dict[str, list[float]]]] = []
     if n_sessions > 1:
-        import subprocess
-
         for i in range(n_sessions):
             # the ~85 s bigsheet conversion runs in session 0 only (it
             # is serial and single-shot; min-of-sessions handles the
             # key being absent elsewhere)
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_BENCH_CHILD="1",
-                SPARK_GRAFT_BENCH_BIG="1" if i == 0 else "0",
-            )
-            r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env, capture_output=True, text=True,
-            )
-            got = False
-            for line in r.stdout.splitlines():
-                if line.startswith("CHILD_TIMINGS "):
-                    per_session.append(json.loads(line[len("CHILD_TIMINGS "):]))
-                    got = True
-                elif line.startswith("CHILD_SAMPLES "):
-                    per_session_raw.append(json.loads(line[len("CHILD_SAMPLES "):]))
-            if not got:
-                sys.stderr.write(
-                    f"# bench child {i} produced no timings "
-                    f"(rc={r.returncode}); stderr tail: {r.stderr[-500:]}\n"
-                )
-    if not per_session:  # single-session fallback (child spawn failed)
-        os.environ["SPARK_GRAFT_BENCH_BIG"] = "1"
-        timings1, raw1 = _run_session()
+            got = _run_child(names if i == 0 else [n for n in names if n != BIGSHEET])
+            if got is not None:
+                per_session.append(got[0])
+                per_session_raw.append(got[1])
+    if not per_session:  # single session, or every child spawn failed
+        timings1, raw1 = run_session(get_spark("bench"), sf_dir, names)
         per_session = [timings1]
         per_session_raw = [raw1]
 
@@ -597,8 +546,12 @@ def main() -> None:
             sf_dir=sf_dir,
             timings=timings,
             raw={
-                name: [s for sess in per_session_raw for s in sess.get(name, [])]
+                name: {
+                    k: [x for sess in per_session_raw for x in sess.get(name, {}).get(k, [])]
+                    for k in ("samples", "construct_s", "exec_s")
+                }
                 for name in timings
+                if name not in CONVERTERS
             },
             n_sessions=len(per_session),
         )
@@ -608,13 +561,14 @@ def write_bench_log(
     tool: str,
     sf_dir: str,
     timings: dict[str, float],
-    raw: dict[str, list[float]],
+    raw: dict[str, dict[str, list[float]]],
     **extra,
 ) -> None:
     """Append one replayable receipt to BENCH_LOG.jsonl (VERDICT r10 #2):
-    raw per-query samples (not just medians), the pinned q03 control,
-    and an env fingerprint, so any later reader can re-run the same
-    tool and compare like-for-like. Opt-in via BENCH_RECORD=1."""
+    raw per-query samples (not just medians) with each sample's
+    construct_s/exec_s split, the pinned q03 control, and an env
+    fingerprint, so any later reader can re-run the same tool and
+    compare like-for-like. Opt-in via BENCH_RECORD=1."""
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         load1, load5, _ = os.getloadavg()
@@ -626,7 +580,7 @@ def write_bench_log(
         "sf_dir": sf_dir,
         "control_q03": timings.get("q03_shipping_priority"),
         "queries": {
-            name: {"median": timings[name], "samples": raw.get(name, [])}
+            name: {"median": timings[name], "samples": [], **raw.get(name, {})}
             for name in sorted(timings)
         },
         "env": {

@@ -1143,7 +1143,7 @@ def ann_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     means, probes, and the re-rank are bit-identical to the joined
     formulation (argmin_cid_pandas and _lloyd_round_cents docstrings
     carry the NULL-edge and float(int) arguments). Construction now
-    runs real jobs, so the query is bench EAGER_CONSTRUCTION."""
+    runs real jobs (the Lloyd rounds' collects)."""
     emb = load_table(spark, sf_dir, "embeddings")
     fx4 = emb.select(
         "vec_id", "label", F.expr(_fx4_expr("embedding")).alias("fx4")
@@ -1338,7 +1338,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure int (same _l2_fx semantics incl. NULL on length mismatch)
     # and re-enters the plan as a literal 64-row broadcast frame, so
     # codes/adist/top-k are bit-identical to the joined formulation.
-    # Construction now runs real jobs -> bench EAGER_CONSTRUCTION.
+    # Construction now runs real jobs (the codebook collects).
     seed_rows = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sfx").alias("cfx")
     ).collect()

@@ -1970,100 +1970,41 @@ def test_pagerank_users_matches_python_recurrence(spark, tmp_path):
 
 
 def test_bench_headline_names_resolve():
-    """Every bench.py HEADLINE entry must exist in queries() — a rename
-    would otherwise surface only as a KeyError in the driver's bench
-    run, producing an empty BENCH artifact for the whole round."""
+    """Every bench.py HEADLINE and SCALE_SET query must exist in
+    queries() — a rename would otherwise surface only as a KeyError in
+    the driver's bench run, producing an empty BENCH artifact for the
+    whole round."""
     import bench
 
     import __spark_entry__ as m
 
-    missing = [n for n in bench.HEADLINE if n not in m.queries()]
+    names = bench.HEADLINE + [n for n in bench.SCALE_SET if n not in bench.CONVERTERS]
+    missing = [n for n in names if n not in m.queries()]
     assert not missing, f"bench names not in queries(): {missing}"
 
 
-def test_bench_subset_shares_eager_set():
-    """VERDICT r10 ADVICE: tools/bench_subset.py must time exactly the
-    same construction-eager span as bench.py — the sets are one module
-    constant, not two hand-maintained copies — and every eager name
-    must be a HEADLINE member (a heavy new query outside HEADLINE
-    can't silently bench construction-excluded)."""
-    import importlib.util
-    import os as _os
-
+def test_bench_times_queries_end_to_end(spark, sf_dir):
+    """bench.py's one timing protocol: a named run times the q03 control
+    first, accepts a registered query outside HEADLINE, and every
+    sample is its construct_s + exec_s."""
     import bench
 
-    spec = importlib.util.spec_from_file_location(
-        "bench_subset",
-        _os.path.join(_os.path.dirname(bench.__file__), "tools", "bench_subset.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert mod.EAGER is bench.EAGER_CONSTRUCTION
-    stray = [n for n in bench.EAGER_CONSTRUCTION if n not in bench.HEADLINE]
-    assert not stray, f"eager names not benched in HEADLINE: {stray}"
+    assert bench.entries([]) == bench.HEADLINE + list(bench.CONVERTERS)
+    assert "join_semi_open_orders" not in bench.HEADLINE
+    names = bench.entries(["join_semi_open_orders"])
+    assert names == [bench.CONTROL, "join_semi_open_orders"]
+    with pytest.raises(SystemExit):
+        bench.entries(["no_such_query"])
 
-
-@pytest.mark.slow
-def test_eager_construction_set_is_mechanically_exact(spark, sf_dir):
-    """VERDICT r11 #7: EAGER_CONSTRUCTION membership is VERIFIED, not
-    hand-maintained — construct every HEADLINE query inside its own job
-    group and ask the status tracker which groups scheduled Spark jobs.
-    A query whose construction schedules jobs but is missing from the
-    set would under-report its bench time (construction excluded); a
-    listed query whose construction became lazy would over-report.
-    Marked slow: the eager constructions run their real checkpoint /
-    collect jobs (~1 min wall)."""
-    import bench
-
-    import __spark_entry__ as m
-
-    import re
-
-    queries = m.queries()
-    tracker = spark.sparkContext.statusTracker()
-    # A spark.read.<fmt> without a schema schedules one distributed
-    # schema-inference job (single stage named "<fmt> at ..."); for
-    # load_table's parquet files that is only each file's first read in
-    # the session (sources.tables memoizes the schema); bench.py's lazy protocol
-    # deliberately excludes those per-session read costs by resetting
-    # t0 after construction. "Eager" means any OTHER job: checkpoint
-    # materializations ("localCheckpoint at ..."), AQE stage futures
-    # ("withThreadLocalCaptured"), driver collects ("first"/"collect").
-    read_stage = re.compile(r"^(parquet|json|orc|csv|text|binaryFile) at ")
-
-    def real_jobs(group: str) -> list[str]:
-        out = []
-        for jid in tracker.getJobIdsForGroup(group):
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            names = []
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    names.append(si.name)
-            if not all(read_stage.match(n) for n in names):
-                out.extend(names or [f"job {jid}"])
-        return out
-
-    wrong: list[str] = []
-    try:
-        for name in bench.HEADLINE:
-            group = f"eager-probe-{name}"
-            spark.sparkContext.setJobGroup(group, name)
-            queries[name](spark, sf_dir)
-            jobs = real_jobs(group)
-            if bool(jobs) != (name in bench.EAGER_CONSTRUCTION):
-                wrong.append(
-                    f"{name}: construction "
-                    f"{'schedules ' + str(jobs[:3]) if jobs else 'schedules no jobs'}"
-                    f" but is {'NOT ' if jobs else ''}in EAGER_CONSTRUCTION"
-                )
-    finally:
-        # drop the group property so later tests' jobs aren't tagged
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-        spark.sparkContext.setLocalProperty("spark.job.description", None)
-    assert not wrong, "\n".join(wrong)
+    timings, raw = bench.run_session(spark, sf_dir, names)
+    assert list(timings) == names
+    for name in names:
+        rec = raw[name]
+        assert len(rec["samples"]) in (3, 5), rec
+        assert rec["samples"] == [
+            round(c + e, 3) for c, e in zip(rec["construct_s"], rec["exec_s"], strict=True)
+        ], rec
+        assert timings[name] == sorted(rec["samples"])[len(rec["samples"]) // 2]
 
 
 def test_bitemporal_snapshots_consistent(spark, sf_dir):

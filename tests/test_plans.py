@@ -88,7 +88,8 @@ def test_minhash_lsh_shuffle_budget(spark, sf_dir):
     # linear-cost LSH shape. At most 3 KEYED exchanges (a regression
     # beyond that means someone broke signature reuse); the r12 §2.5
     # scan spread is allowed as at most one extra ROUND-ROBIN exchange.
-    kinds = re.findall(r"\(\d+\) Exchange\nArguments: ([A-Za-z]+)", plan)
+    kinds = re.findall(r"\(\d+\) Exchange\nInput .*\nArguments: ([A-Za-z]+)", plan)
+    assert len(kinds) == len(re.findall(r"\(\d+\) Exchange\n", plan)), plan
     assert len([k for k in kinds if k != "RoundRobinPartitioning"]) <= 3, plan
     assert len([k for k in kinds if k == "RoundRobinPartitioning"]) <= 1, plan
 
